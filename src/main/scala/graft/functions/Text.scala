@@ -191,9 +191,9 @@ object Text {
     md5(trim(regexp_replace(lower(text), "[^\\p{L}\\p{N}_]+", " ")))
 
   /** Word n-gram shingles (arrays of n consecutive tokens joined by a
-    * space). Pure expression: transform over an index sequence. */
-  def shingles(text: Column, n: Int): Column = {
-    val w = wordTokens(text)
+    * space). Pure expression: transform over an index sequence, with the
+    * token array bound once per row ([[let]]). */
+  def shingles(text: Column, n: Int): Column = let(wordTokens(text)) { w =>
     when(size(w) >= n,
       transform(sequence(lit(0), size(w) - n), i =>
         concat_ws(" ", (0 until n).map(j => get(w, i + lit(j))): _*)))
@@ -256,31 +256,27 @@ object Text {
 
   /** Character k-gram hashes for [[winnowFromHashes]]: canonicalize →
     * k-grams → portable hash (md5 hex, a uniform total order both engines
-    * compute identically).
-    *
-    * IMPORTANT: materialize this as its own column (`withColumn`) before
-    * passing it to [[winnowFromHashes]]. Higher-order functions disable
-    * Catalyst's subexpression elimination, so referencing this expression
-    * from several lambdas would re-evaluate the whole O(n) hash array per
-    * reference — O(n²) per row; CollapseProject keeps the two projections
-    * separate because the column is non-cheap and multiply referenced. */
-  def kgramHashes(text: Column, k: Int): Column = {
+    * compute identically). The canonical string is bound once per row
+    * ([[let]]), so the map is O(n·k). */
+  def kgramHashes(text: Column, k: Int): Column =
     // unicode-aware class — see fingerprint
-    val t = trim(regexp_replace(lower(text), "[^\\p{L}\\p{N}_]+", " "))
-    val nGrams = greatest(length(t) - (k - 1), lit(1))
-    transform(sequence(lit(1), nGrams), i => md5(t.substr(i, lit(k))))
-  }
+    let(trim(regexp_replace(lower(text), "[^\\p{L}\\p{N}_]+", " "))) { t =>
+      val nGrams = greatest(length(t) - (k - 1), lit(1))
+      transform(sequence(lit(1), nGrams), i => md5(t.substr(i, lit(k))))
+    }
 
   /** Winnowing document fingerprints (the MOSS rolling-hash scheme) from
-    * a MATERIALIZED k-gram hash array column: minimum per sliding window
-    * of `w` consecutive hashes → sorted distinct set. Guarantees: any
-    * match of length ≥ k+w-1 shares a fingerprint; nothing shorter than
-    * k ever does. O(n·w) codegen'd map per document, no shuffle. */
-  def winnowFromHashes(hs: Column, w: Int): Column = {
-    val m = size(hs) - (w - 1)
+    * a k-gram hash array: minimum per sliding window of `w` consecutive
+    * hashes → sorted distinct set. Guarantees: any match of length ≥
+    * k+w-1 shares a fingerprint; nothing shorter than k ever does. The
+    * hash array is bound once per row ([[let]]), so `hs` may be an
+    * unmaterialized expression such as [[kgramHashes]]; O(n·w) map per
+    * document, no shuffle. */
+  def winnowFromHashes(hs: Column, w: Int): Column = let(hs) { h =>
+    val m = size(h) - (w - 1)
     val mins = when(m >= 1,
-      transform(sequence(lit(1), m), j => array_min(slice(hs, j, lit(w)))))
-      .otherwise(array(array_min(hs)))
+      transform(sequence(lit(1), m), j => array_min(slice(h, j, lit(w)))))
+      .otherwise(array(array_min(h)))
     array_sort(array_distinct(mins))
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.let
 
 /**
  * Corpus-preparation operators a large-scale training-data pipeline needs
@@ -31,9 +32,9 @@ object Corpus {
 
   /** Fixed-width word segments: consecutive `segWords`-token chunks,
     * space-joined (the final chunk may be shorter). Pure column
-    * expression — segmentation never shuffles. */
-  def segments(text: Column, segWords: Int): Column = {
-    val toks = wsTokens(text)
+    * expression over the token array bound once per row ([[let]]) —
+    * segmentation never shuffles. */
+  def segments(text: Column, segWords: Int): Column = let(wsTokens(text)) { toks =>
     when(size(toks) > 0,
       transform(sequence(lit(0), ((size(toks) - 1) / segWords).cast("int")),
         i => array_join(slice(toks, i * segWords + 1, lit(segWords)), " ")))
@@ -41,10 +42,10 @@ object Corpus {
   }
 
   /** Word n-grams (space-joined), [] when the document has fewer than
-    * `n` tokens. `sequence(0, size-n)` is guarded because Spark's
-    * sequence DESCENDS when stop < start instead of returning []. */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val toks = wsTokensLower(text)
+    * `n` tokens; the token array is bound once per row ([[let]]).
+    * `sequence(0, size-n)` is guarded because Spark's sequence DESCENDS
+    * when stop < start instead of returning []. */
+  def wordNgrams(text: Column, n: Int): Column = let(wsTokensLower(text)) { toks =>
     when(size(toks) >= n,
       transform(sequence(lit(0), size(toks) - n),
         i => array_join(slice(toks, i + 1, lit(n)), " ")))
@@ -181,13 +182,9 @@ object Corpus {
    * Entirely map-side and LINEARITHMIC per document: the top-element
    * count is the longest run in the sorted token array (one `aggregate`
    * pass over `array_sort`, O(n log n)), not a per-distinct rescan.
-   * Token/bigram arrays are materialized as their own projections first —
-   * higher-order functions disable subexpression elimination, so lambdas
-   * must never reference an unmaterialized O(n) array expression (each
-   * reference would re-split the text: the O(n²)-per-row trap
-   * [[graft.functions.Text.kgramHashes]] documents; CollapseProject keeps
-   * the projections separate because the arrays are non-cheap and
-   * multiply referenced). Embarrassingly parallel with ZERO exchanges,
+   * Token/bigram arrays are materialized as their own projections first:
+   * each feeds several higher-order functions, and Catalyst shares no
+   * subexpression across those. Embarrassingly parallel with ZERO exchanges,
    * which at corpus scale beats the explode + two-level aggregate
    * formulation that shuffles every token twice.
    */

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.let
 
 /**
  * Distributed PCA / whitening over an embedding column — the rotation
@@ -154,11 +155,13 @@ object Pca {
     val comps = typedlit(model.components.map(_.toSeq).toSeq)
     val scales = typedlit(model.eigenvalues.map(ev =>
       if (whiten) 1.0 / math.sqrt(ev + eps) else 1.0).toSeq)
-    val centered = zip_with(vecCol, mu, (x, m) => x.cast("double") - m)
-    transform(sequence(lit(0), lit(model.k - 1)), j =>
-      aggregate(
-        zip_with(centered, element_at(comps, j + 1), (x, c) => x * c),
-        lit(0.0), (acc, t) => acc + t) * element_at(scales, j + 1))
+    // v − μ is bound once per row, not rebuilt per component
+    let(zip_with(vecCol, mu, (x, m) => x.cast("double") - m)) { centered =>
+      transform(sequence(lit(0), lit(model.k - 1)), j =>
+        aggregate(
+          zip_with(centered, element_at(comps, j + 1), (x, c) => x * c),
+          lit(0.0), (acc, t) => acc + t) * element_at(scales, j + 1))
+    }
   }
 
   /** Project the corpus onto the model's components as `out`. */

@@ -550,12 +550,8 @@ object PipelineQueries {
     // portable md5 order so DuckDB reproduces the exact fingerprint set).
     Q("q149_token_stats_winnow",
       (s, dir) => {
-        // two projection stages: the k-gram hash array materializes once
-        // per row, then the sliding-window mins reference the column —
-        // see Text.kgramHashes' O(n²) warning
         val staged = t(s, dir, "documents")
-          .withColumn("__hs__", Text.kgramHashes(col("text"), 7))
-          .withColumn("__fp__", Text.winnowFromHashes(col("__hs__"), 8))
+          .withColumn("__fp__", Text.winnowFromHashes(Text.kgramHashes(col("text"), 7), 8))
         Frame(staged.select(
           col("doc_id"),
           Text.tokenCountWs(col("text")).cast("long").as("n_ws"),

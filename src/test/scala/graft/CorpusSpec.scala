@@ -119,6 +119,9 @@ class CorpusSpec extends SparkSuite {
     assert(rep(0).getDouble(1) == 0.0 && rep(0).getDouble(2) == 0.0)
     assert(Corpus.decontaminate(d.filter(col("id") === 2), d.filter(col("id") === 1),
       "id", "text", 2).count() == 0)
+    val blanks = docs(1L -> "   ", 2L -> "", 3L -> "\t\r\n", 4L -> null)
+      .select(Corpus.segments(col("text"), 2), Corpus.wordNgrams(col("text"), 1)).collect()
+    blanks.foreach(r => assert(r.getSeq[String](0).isEmpty && r.getSeq[String](1).isEmpty, r))
   }
 
   test("chunkDocuments: exact windows, short tail, stride=chunk disjoint, empty doc") {

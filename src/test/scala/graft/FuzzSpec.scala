@@ -79,11 +79,7 @@ class FuzzSpec extends SparkSuite {
   // SPARK_GRAFT_FUZZ_BATCHES=6 sbt "testOnly graft.FuzzSpec". Every seed
   // is fixed and deterministic, so the prefix is a stable regression set,
   // not a random sample; the promoted regression seeds below always run.
-  private val ciBatches: Int = {
-    val n = sys.env.get("SPARK_GRAFT_FUZZ_BATCHES").map(_.toInt).getOrElse(2)
-    require(n > 0, "SPARK_GRAFT_FUZZ_BATCHES must be positive")
-    n
-  }
+  private val ciBatches: Int = SparkSuite.positiveIntEnv("SPARK_GRAFT_FUZZ_BATCHES", 2)
 
   /** kind: 'i' long, 'n' double, 's' string. dom = known value domain
     * for strings (drives IN-filters); lowCard marks group-key

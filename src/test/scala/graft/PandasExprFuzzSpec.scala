@@ -329,11 +329,7 @@ class PandasExprFuzzSpec extends SparkSuite {
   // external test-run time budget (r15: the driver's `sbt test` was cut off
   // mid-suite with zero failures). Default to a fast-but-meaningful slice
   // and make the full sweep opt-in: SPARK_GRAFT_FUZZ_SEEDS=400 sbt test.
-  private val fuzzSeeds: Int = {
-    val n = sys.env.get("SPARK_GRAFT_FUZZ_SEEDS").map(_.toInt).getOrElse(100)
-    require(n > 0, "SPARK_GRAFT_FUZZ_SEEDS must be positive")
-    n
-  }
+  private val fuzzSeeds: Int = SparkSuite.positiveIntEnv("SPARK_GRAFT_FUZZ_SEEDS", 100)
 
   test("pandas dialect differential fuzz: ANSI mode") {
     runMode(ieee = false, 1 to fuzzSeeds)

@@ -104,4 +104,15 @@ object SparkSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A positive-integer env knob. A malformed or non-positive value falls
+    * back to `default`, with a printed note, instead of throwing during
+    * suite construction, which would abort every test in the run. */
+  def positiveIntEnv(name: String, default: Int): Int =
+    sys.env.get(name).fold(default) { raw =>
+      raw.trim.toIntOption.filter(_ > 0).getOrElse {
+        println(s"$name=$raw is not a positive integer; using the default $default")
+        default
+      }
+    }
 }

@@ -87,10 +87,17 @@ class TextSpec extends SparkSuite {
   }
 
   test("shingles produce n-grams; short texts fall back to one shingle") {
-    val r = one("a b c d").select(Text.shingles(col("text"), 3)).head().getSeq[String](0)
-    assert(r == Seq("a b c", "b c d"))
-    val short = one("a b").select(Text.shingles(col("text"), 3)).head().getSeq[String](0)
-    assert(short == Seq("a b"))
+    def sh(text: String, n: Int) =
+      one(text).select(Text.shingles(col("text"), n)).head().getSeq[String](0)
+    assert(sh("a b c d", 3) == Seq("a b c", "b c d"))
+    assert(sh("a b", 3) == Seq("a b"))
+    // tabs, newlines, CRLF and space runs all separate; no phantom empty
+    // token; non-ASCII upper case lowers; token-free text is one empty shingle
+    assert(sh("\ta b", 3) == Seq("a b"))
+    assert(sh("a\nb\r\nc", 2) == Seq("a b", "b c"))
+    assert(sh("A  b   C", 2) == Seq("a b", "b c"))
+    assert(sh("ÉCOLE Straße", 1) == Seq("école", "straße"))
+    Seq(null, "", " ").foreach(t => assert(sh(t, 2) == Seq(""), s"text=$t"))
   }
 
   test("languageId picks the dominant stopword set, und when none") {
