@@ -1,32 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.queries.Registry
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.BenchKit.{Obj, force, json}
+import graft.queries.{QueryKit, Registry}
 
 /** Benchmark main: runs the headline queries (BASELINE.md's 10 workload
-  * shapes) against SPARK_GRAFT_SF_DIR and prints one JSON line. Queries
-  * are forced with a full materialization of the physical plan's RDD —
-  * NOT `.count()`, which would let Catalyst prune every column and skip
-  * the real work for projection-shaped queries. */
+  * shapes) against SPARK_GRAFT_SF_DIR and prints one JSON line. */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // v2 commit: tasks rename directly into the destination instead of
-      // the job-commit serial rename pass — one directory walk less per
-      // write, and the right default for object stores at scale
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = BenchKit.sfDir
+    val spark = BenchKit.session()
     // Untimed warmup: pay session init + first-scan codegen once, so the
     // per-query numbers measure the operators, not JVM startup.
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .queryExecution.toRdd.foreach(_ => ())
-    val headline = Registry.all.filter(_.headline)
+    force(spark.read.parquet(s"$sfDir/lineitem.parquet"))
     // Timed runs per query (default 5; AB_BENCH_r07.md measured ±25%
     // session drift on this sandbox, so min-of-3 can't separate a 20%
     // regression from noise). `value` stays MIN-based — the first run
@@ -36,38 +21,27 @@ object Bench {
     // (p75−p25) are emitted alongside so a reader can tell a plan
     // regression (min moved beyond the spread) from sandbox drift.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val results = headline.map { q =>
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          q.fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-            Double.PositiveInfinity // a failed run must never win the min
-        }
-      }
-      val ok = times.filterNot(_.isInfinity).sorted
-      if (ok.isEmpty) (q.name, -1.0, -1.0, -1.0) // -1 marks failure
-      else {
-        def pct(p: Double) = ok(math.min(ok.size - 1, (p * ok.size).toInt))
-        (q.name, ok.head, pct(0.5), pct(0.75) - pct(0.25))
-      }
+    val results = Registry.all.filter(_.headline).map { q =>
+      q.name -> BenchKit.stats(
+        BenchKit.timed(runs, s"[bench] ${q.name}")(force(q.fn(spark, sfDir))))
     }
-    def jmap(f: ((String, Double, Double, Double)) => (String, Double)) =
-      results.map { r => val (k, v) = f(r); "\"" + k + f"""\":$v%.3f""" }
-        .mkString("{", ",", "}")
-    val qs = jmap(r => (r._1, r._2))
-    val qMed = jmap(r => (r._1, r._3))
-    val qSpread = jmap(r => (r._1, r._4))
-    // totals over successes only — a failed query (-1 marker) must not
-    // subtract from the headline number; report it separately instead
-    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
-    val totalMed = results.collect { case (_, v, m, _) if v >= 0 => m }.sum
-    val failed = results.count(_._2 < 0)
-    println(f"""{"metric":"total","value":$total%.3f,"value_median":$totalMed%.3f,"unit":"sec","failed":$failed,"queries":$qs,"queries_median":$qMed,"queries_spread":$qSpread,"sf":"$sfDir"}""")
+    println(line(sfDir, results))
     spark.stop()
+  }
+
+  /** The bench's one-line JSON contract. A query whose every run failed
+    * reads -1 in the per-query maps, is left out of the totals (it must
+    * not subtract from the headline number) and is counted in `failed`. */
+  private[graft] def line(sfDir: String,
+      results: Seq[(String, Option[BenchKit.Stats])]): String = {
+    def per(f: BenchKit.Stats => Double) =
+      Obj(results.map { case (n, s) => n -> s.fold(-1.0)(f) }: _*)
+    val ok = results.flatMap(_._2)
+    json(Obj("metric" -> "total", "value" -> ok.map(_.min).sum,
+      "value_median" -> ok.map(_.median).sum, "unit" -> "sec",
+      "failed" -> results.count(_._2.isEmpty), "queries" -> per(_.min),
+      "queries_median" -> per(_.median), "queries_spread" -> per(_.spread),
+      "sf" -> sfDir))
   }
 }
 
@@ -77,12 +51,12 @@ object Bench {
  * offset per replica, document text made replica-unique so join/group/
  * dedup cardinalities scale linearly, the way real corpus growth does)
  * and reports each headline query's time ratio divided by the row ratio.
- * A plan that holds at 100 TB has slope ≈ 1 (linear in rows); slope > 1.5
- * is flagged — it means some stage is super-linear (all-pairs blowup,
- * driver funnel, single-partition sort) and would fall over at 1000×.
+ * A plan that holds at 100 TB has slope ≈ 1 (linear in rows).
+ *
+ * The other scale mains below are op tables over this object's shared
+ * slope loop.
  */
 object ScaleBench {
-  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.types.LongType
 
@@ -107,69 +81,82 @@ object ScaleBench {
     replicas.reduce(_ unionAll _)
   }
 
-  /** One SparkSession shape shared by the scale mains. */
-  private[graft] def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // older events fixtures ship ts as TIMESTAMP(NANOS); the knob lets
-    // those read as raw long so QueryKit's normalizer can convert them
-    // (newer micros fixtures ignore it)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark
-  }
+  private[graft] def factor: Int =
+    sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
+
+  /** Writes `df` to `out` unless a committed copy is already there. */
+  private[graft] def writeOnce(out: String)(df: => DataFrame): Unit =
+    if (!new java.io.File(out, "_SUCCESS").exists())
+      df.write.mode("overwrite").parquet(out)
 
   /** Write (once) and return the disjoint-replica amplified copy of every
-    * table at `factor`×. */
+    * table at `factor`×. The cache is keyed on the source dir as well as
+    * the factor, so a rerun over another fixture never reuses stale rows. */
   private[graft] def ensureAmplified(spark: SparkSession, baseDir: String,
       factor: Int): String = {
-    val bigDir = s"/tmp/graft_scale/x$factor"
+    val bigDir = QueryKit.scratch("/tmp/graft_scale", baseDir, s"x$factor")
     Tables.foreach { t =>
-      val out = new java.io.File(s"$bigDir/$t.parquet")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        amplify(spark.read.parquet(s"$baseDir/$t.parquet"), t, factor)
-          .write.mode("overwrite").parquet(out.getAbsolutePath)
-      }
+      writeOnce(s"$bigDir/$t.parquet")(
+        amplify(spark.read.parquet(s"$baseDir/$t.parquet"), t, factor))
     }
     bigDir
   }
 
-  private[graft] def minTime(runs: Int)(job: => Unit): Double =
-    (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      job
-      (System.nanoTime() - t0) / 1e9
-    }.min
+  /** Optional comma-separated op filter, SPARK_GRAFT_SCALE_OPS: re-measure
+    * one op after a fix without re-running the (expensive) whole family. */
+  private[graft] def selected(op: String): Boolean =
+    sys.env.get("SPARK_GRAFT_SCALE_OPS").forall(_.split(",").contains(op))
+
+  /** One op's min-of-2 seconds at 1× and at factor×, and their ratio
+    * divided by the row ratio. */
+  final case class Slope(base: Double, scaled: Double, slope: Double) {
+    def obj: Obj = Obj("base" -> base, "scaled" -> scaled, "slope" -> slope)
+  }
+
+  /** The shared slope loop: warm both dirs' scans, then time every
+    * selected op min-of-2 on each side. Fixed per-op overhead makes
+    * slope < 1 for fast ops, which is fine — only super-linear growth
+    * matters. */
+  private[graft] def slopes(oneDir: String, bigDir: String,
+      warm: String => Seq[DataFrame], ops: Seq[(String, String => DataFrame)],
+      rowRatio: String => Double): Seq[(String, Slope)] = {
+    Seq(oneDir, bigDir).foreach(d => warm(d).foreach(force))
+    ops.filter { case (n, _) => selected(n) }.map { case (name, op) =>
+      def t(dir: String) = BenchKit.timed(2, s"[scale] $name")(force(op(dir))).min
+      val (tb, ts) = (t(oneDir), t(bigDir))
+      name -> Slope(tb, ts, (ts / tb) / rowRatio(name))
+    }
+  }
+
+  /** Prints a scale main's one JSON line: `metric`, the `header` keys, the
+    * per-op rows, the ops whose flag value exceeds `flagAt`, and the
+    * source dir. */
+  private[graft] def emitSlopes(metric: String, header: Seq[(String, Any)],
+      rows: Seq[(String, Obj, Double)], flagAt: Double, source: String): Unit = {
+    val flagged = rows.collect { case (n, _, v) if v > flagAt => n }
+    println(json(Obj(Seq("metric" -> metric) ++ header ++ Seq(
+      "queries" -> Obj(rows.map { case (n, o, _) => n -> o }: _*),
+      "flagged" -> flagged, "base" -> source): _*)))
+  }
+
+  /** [[slopes]] then [[emitSlopes]], flagging slope > 1.5: some stage is
+    * super-linear (all-pairs blowup, driver funnel, single-partition
+    * sort) and would fall over at 1000×. */
+  private[graft] def reportSlopes(metric: String, header: Seq[(String, Any)],
+      source: String, oneDir: String, bigDir: String,
+      warm: String => Seq[DataFrame], ops: Seq[(String, String => DataFrame)],
+      rowRatio: String => Double): Unit =
+    emitSlopes(metric, header, slopes(oneDir, bigDir, warm, ops, rowRatio)
+      .map { case (n, s) => (n, s.obj, s.slope) }, 1.5, source)
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = session(cpus)
-    val bigDir = ensureAmplified(spark, baseDir, factor)
-    val headline = Registry.all.filter(_.headline)
-    def time(q: graft.queries.Q, dir: String): Double =
-      minTime(2)(q.fn(spark, dir).queryExecution.toRdd.foreach(_ => ()))
-    // warmup both scan paths
-    spark.read.parquet(s"$baseDir/lineitem.parquet").queryExecution.toRdd.foreach(_ => ())
-    spark.read.parquet(s"$bigDir/lineitem.parquet").queryExecution.toRdd.foreach(_ => ())
-    val rows = headline.map { q =>
-      val (tb, ts) = (time(q, baseDir), time(q, bigDir))
-      // subtract nothing: fixed per-query overhead makes slope < 1 for
-      // fast queries, which is fine — only super-linear growth flags
-      val slope = (ts / tb) / factor
-      (q.name, tb, ts, slope)
-    }
-    val flagged = rows.collect { case (n, _, _, s) if s > 1.5 => n }
-    val qs = rows.map { case (n, tb, ts, s) =>
-      f""""$n":{"base":$tb%.3f,"scaled":$ts%.3f,"slope":$s%.3f}"""
-    }.mkString("{", ",", "}")
-    val fl = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"scale_slope","factor":$factor,"queries":$qs,"flagged":$fl,"base":"$baseDir"}""")
+    val (baseDir, f) = (BenchKit.sfDir, factor)
+    val spark = BenchKit.session()
+    val bigDir = ensureAmplified(spark, baseDir, f)
+    reportSlopes("scale_slope", Seq("factor" -> f), baseDir, baseDir, bigDir,
+      d => Seq(spark.read.parquet(s"$d/lineitem.parquet")),
+      Registry.all.filter(_.headline).map(q => q.name -> (q.fn(spark, _: String))),
+      _ => f)
     spark.stop()
   }
 }
@@ -194,7 +181,7 @@ object ScaleBench {
  * save it.
  */
 object ScaleDedupBench {
-  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions._
   import graft.ops.Dedup
   import graft.functions.Similarity
@@ -241,30 +228,29 @@ object ScaleDedupBench {
     replicas.reduce(_ unionAll _)
   }
 
-  private def ensure(spark: SparkSession, baseDir: String, factor: Int,
+  /** Write (once) and return the partial-dup amplified documents and
+    * embeddings at `factor`×, cached per source dir, factor and dup %. */
+  private[graft] def ensure(spark: SparkSession, baseDir: String, factor: Int,
       dupPct: Int): String = {
-    val dir = s"/tmp/graft_scale_dedup/x$factor"
-    val specs = Seq(
-      ("documents", () => amplifyDocs(
+    val dir = QueryKit.scratch("/tmp/graft_scale_dedup", baseDir, s"x${factor}_dup$dupPct")
+    Seq(
+      "documents" -> (() => amplifyDocs(
         spark.read.parquet(s"$baseDir/documents.parquet"), factor, dupPct)),
-      ("embeddings", () => amplifyEmb(
-        spark.read.parquet(s"$baseDir/embeddings.parquet"), factor, dupPct)))
-    specs.foreach { case (t, make) =>
-      val out = new java.io.File(s"$dir/$t.parquet")
-      if (!new java.io.File(out, "_SUCCESS").exists())
-        // pre-split into one file per core: the amplified corpus is only
-        // MBs on disk but carries heavy per-row hash work, and a single
-        // parquet file would make every op below a one-task (one-core)
-        // measurement — the opposite of the many-split reality at scale
-        make().repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(out.getAbsolutePath)
+      "embeddings" -> (() => amplifyEmb(
+        spark.read.parquet(s"$baseDir/embeddings.parquet"), factor, dupPct))
+    ).foreach { case (t, make) =>
+      // pre-split into one file per core: the amplified corpus is only
+      // MBs on disk but carries heavy per-row hash work, and a single
+      // parquet file would make every op below a one-task (one-core)
+      // measurement — the opposite of the many-split reality at scale
+      ScaleBench.writeOnce(s"$dir/$t.parquet")(
+        make().repartition(spark.sparkContext.defaultParallelism))
     }
     dir
   }
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
+    val (baseDir, factor) = (BenchKit.sfDir, ScaleBench.factor)
     val dupPct = sys.env.getOrElse("SPARK_GRAFT_DUP_PCT", "25").toInt
     // jaccard operating point for the jaccard/e2e rows: the committed
     // slope baseline is the permissive 0.3 (keeps every planted 25%-dup
@@ -273,7 +259,7 @@ object ScaleDedupBench {
     // before the pair-distinct exchange (t=0.8 culls ~67% — SCALE_r12
     // prefilter_selectivity)
     val jaccardT = sys.env.getOrElse("SPARK_GRAFT_JACCARD_T", "0.3").toDouble
-    val spark = ScaleBench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = BenchKit.session()
     // 1× carries the same dup structure as f× — slope isolates growth,
     // not the presence of duplicates
     val oneDir = ensure(spark, baseDir, 1, dupPct)
@@ -401,12 +387,6 @@ object ScaleDedupBench {
           emb(dir).select(col("vec_id"), col("embedding")), "embedding")
       })
 
-    // optional comma-separated op filter: re-measure one op after a fix
-    // without re-running the (expensive) full family
-    val only = sys.env.get("SPARK_GRAFT_SCALE_OPS")
-      .map(_.split(",").toSet).getOrElse(ops.map(_._1).toSet + "band_index")
-    val opsRun = ops.filter { case (n, _) => only(n) }
-
     // row ratios are measured, not assumed — and PER TABLE: the dup
     // shards are chosen by different hash filters, so the documents and
     // embeddings ratios differ slightly and each op normalizes by the
@@ -415,23 +395,10 @@ object ScaleDedupBench {
     val embRatio = emb(bigDir).count().toDouble / emb(oneDir).count()
     val embOps = Set("emb_neardup_lsh", "ann_lsh", "sem_dedup", "sem_dedup_2level",
       "pq_adc_topk", "pq_rerank", "pca_covariance")
-    // warmup both scan paths of both tables
-    Seq(oneDir, bigDir).foreach { d =>
-      docs(d).queryExecution.toRdd.foreach(_ => ())
-      emb(d).queryExecution.toRdd.foreach(_ => ())
-    }
-    val rows = opsRun.map { case (name, f) =>
-      val tb = ScaleBench.minTime(2)(f(oneDir).queryExecution.toRdd.foreach(_ => ()))
-      val ts = ScaleBench.minTime(2)(f(bigDir).queryExecution.toRdd.foreach(_ => ()))
-      val rowRatio = if (embOps(name)) embRatio else docRatio
-      (name, tb, ts, (ts / tb) / rowRatio)
-    }
-    val flagged = rows.collect { case (n, _, _, s) if s > 1.5 => n }
-    val qs = rows.map { case (n, tb, ts, s) =>
-      f""""$n":{"base":$tb%.3f,"scaled":$ts%.3f,"slope":$s%.3f}"""
-    }.mkString("{", ",", "}")
-    val fl = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"scale_slope_dedup","factor":$factor,"dup_pct":$dupPct,"jaccard_t":$jaccardT,"row_ratio_docs":$docRatio,"row_ratio_emb":$embRatio,"queries":$qs,"flagged":$fl,"base":"$baseDir"}""")
+    ScaleBench.reportSlopes("scale_slope_dedup", Seq("factor" -> factor,
+        "dup_pct" -> dupPct, "jaccard_t" -> jaccardT, "row_ratio_docs" -> docRatio,
+        "row_ratio_emb" -> embRatio), baseDir, oneDir, bigDir,
+      d => Seq(docs(d), emb(d)), ops, n => if (embOps(n)) embRatio else docRatio)
 
     // Persisted band index asymmetry — the feature's entire point: index
     // BUILD grows with the corpus (one banding pass, expected slope ≈ 1),
@@ -439,21 +406,23 @@ object ScaleDedupBench {
     // index must cost O(batch + matched buckets), NOT O(corpus) — so the
     // link ratio across a factor× corpus should stay near 1, far below
     // the corpus growth. Batch = the 1× documents table in both runs.
-    if (only("band_index")) {
+    if (ScaleBench.selected("band_index")) {
       val batch = docs(oneDir)
-      def measure(dir: String, tag: String): (Double, Double) = {
-        val path = s"/tmp/graft_scale_dedup/band_index_$tag"
-        val build = ScaleBench.minTime(2)(Dedup.writeBandIndex(
-          docs(dir), "doc_id", "text", path, shingleN = 3, numHashes = 16, bands = 4))
-        val link = ScaleBench.minTime(2)(Dedup.linkAgainstIndex(
+      def measure(dir: String): (Double, Double) = {
+        val path = s"$dir/band_index"
+        val build = BenchKit.timed(2, "[scale] band_index build")(Dedup.writeBandIndex(
+          docs(dir), "doc_id", "text", path, shingleN = 3, numHashes = 16, bands = 4)).min
+        val link = BenchKit.timed(2, "[scale] band_index link")(force(Dedup.linkAgainstIndex(
           batch, "doc_id", "text", path, docs(dir), "doc_id", "text",
-          shingleN = 3, numHashes = 16, bands = 4, threshold = 0.2)
-          .queryExecution.toRdd.foreach(_ => ()))
+          shingleN = 3, numHashes = 16, bands = 4, threshold = 0.2))).min
         (build, link)
       }
-      val (b1, l1) = measure(oneDir, "x1")
-      val (bf, lf) = measure(bigDir, s"x$factor")
-      println(f"""{"metric":"band_index_asymmetry","factor":$factor,"corpus_ratio":$docRatio%.3f,"build_base":$b1%.3f,"build_scaled":$bf%.3f,"build_slope":${(bf / b1) / docRatio}%.3f,"link_base":$l1%.3f,"link_scaled":$lf%.3f,"link_ratio":${lf / l1}%.3f,"base":"$baseDir"}""")
+      val (b1, l1) = measure(oneDir)
+      val (bf, lf) = measure(bigDir)
+      println(json(Obj("metric" -> "band_index_asymmetry", "factor" -> factor,
+        "corpus_ratio" -> docRatio, "build_base" -> b1, "build_scaled" -> bf,
+        "build_slope" -> (bf / b1) / docRatio, "link_base" -> l1,
+        "link_scaled" -> lf, "link_ratio" -> lf / l1, "base" -> baseDir)))
     }
     spark.stop()
   }
@@ -469,7 +438,7 @@ object ScaleDedupBench {
  * ever-growing task degrades super-linearly and the ratio flags at 2.
  */
 object SkewBench {
-  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
   import graft.functions.Text
@@ -480,7 +449,14 @@ object SkewBench {
     * at high factors the skew-vs-uniform ratio otherwise confounds the
     * remap expression's CPU (paid on every amplified row) with straggler
     * effects. pmod(k, Long.MaxValue) is the identity for the fixtures'
-    * non-negative keys at the same expression cost as pmod(k, 10). */
+    * non-negative keys at the same expression cost as pmod(k, 10).
+    *
+    * The placebo is not cardinality-neutral for `dedup_groups`: its
+    * remapped half of the corpus gets one unique `dup<doc_id>` text each,
+    * so about 50% of the fingerprints become unique and the group count
+    * changes along with the expression cost. Read that shape's placebo
+    * ratio as expression cost plus a different grouping, not as
+    * expression cost alone. */
   private[graft] val placebo =
     sys.env.get("SPARK_GRAFT_SKEW_PLACEBO").contains("1")
   private val hotMod = if (placebo) Long.MaxValue else 10L
@@ -490,9 +466,8 @@ object SkewBench {
     when(pmod(xxhash64(k), lit(100)) < 50, pmod(k, lit(hotMod))).otherwise(k)
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
-    val spark = ScaleBench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val (baseDir, factor) = (BenchKit.sfDir, ScaleBench.factor)
+    val spark = BenchKit.session()
     // the join shape must exercise the SHUFFLE path — broadcast would
     // sidestep the skew entirely and measure nothing
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -537,21 +512,17 @@ object SkewBench {
           .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id"))
       })
 
-    lineitem(baseDir).queryExecution.toRdd.foreach(_ => ())
-    lineitem(bigDir).queryExecution.toRdd.foreach(_ => ())
-    val rows = shapes.map { case (name, f) =>
-      def t(dir: String, skew: Boolean) =
-        ScaleBench.minTime(2)(f(dir, skew).queryExecution.toRdd.foreach(_ => ()))
-      val su = (t(bigDir, false) / t(baseDir, false)) / factor
-      val ss = (t(bigDir, true) / t(baseDir, true)) / factor
-      (name, su, ss, ss / su)
+    // each shape's uniform and skew sides, back to back
+    val table = shapes.flatMap { case (n, f) =>
+      Seq(n -> (f(_: String, false)), n -> (f(_: String, true)))
     }
-    val flagged = rows.collect { case (n, _, _, r) if r > 2.0 => n }
-    val qs = rows.map { case (n, su, ss, r) =>
-      f""""$n":{"slope_uniform":$su%.3f,"slope_skew":$ss%.3f,"ratio":$r%.3f}"""
-    }.mkString("{", ",", "}")
-    val fl = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"skew_slope","factor":$factor,"placebo":$placebo,"queries":$qs,"flagged":$fl,"base":"$baseDir"}""")
+    val rows = ScaleBench.slopes(baseDir, bigDir, d => Seq(lineitem(d)), table, _ => factor)
+      .grouped(2).map { case Seq((n, u), (_, s)) =>
+        val r = s.slope / u.slope
+        (n, Obj("slope_uniform" -> u.slope, "slope_skew" -> s.slope, "ratio" -> r), r)
+      }.toSeq
+    ScaleBench.emitSlopes("skew_slope", Seq("factor" -> factor, "placebo" -> placebo),
+      rows, 2.0, baseDir)
     spark.stop()
   }
 }
@@ -573,21 +544,17 @@ object ScaleSketchBench {
   import graft.ops.Sketch
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
-    val spark = ScaleBench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val (baseDir, factor) = (BenchKit.sfDir, ScaleBench.factor)
+    val spark = BenchKit.session()
     val bigDir = ScaleBench.ensureAmplified(spark, baseDir, factor)
     // keep-keys events replica: event_id shifts (stays unique), user_id
     // repeats — materialized once so generation cost never pollutes timing
-    val keepDir = s"/tmp/graft_scale/x$factor/events_keepkeys.parquet"
-    if (!new java.io.File(keepDir, "_SUCCESS").exists()) {
-      val ev = spark.read.parquet(s"$baseDir/events.parquet")
-      ev.withColumn("__r", explode(array((0 until factor).map(lit): _*)))
-        .withColumn("event_id", col("event_id") + col("__r").cast("long") * 1000000000L)
-        .drop("__r")
-        .repartition(32)
-        .write.mode("overwrite").parquet(keepDir)
-    }
+    val keepDir = s"$bigDir/events_keepkeys.parquet"
+    ScaleBench.writeOnce(keepDir)(spark.read.parquet(s"$baseDir/events.parquet")
+      .withColumn("__r", explode(array((0 until factor).map(lit): _*)))
+      .withColumn("event_id", col("event_id") + col("__r").cast("long") * 1000000000L)
+      .drop("__r")
+      .repartition(32))
     def events(dir: String) =
       if (dir == baseDir) spark.read.parquet(s"$dir/events.parquet")
       else spark.read.parquet(keepDir)
@@ -628,21 +595,8 @@ object ScaleSketchBench {
           spark.read.parquet(s"$dir/lineitem.parquet"), Seq("l_returnflag"),
           "l_extendedprice", "l_quantity",
           Seq((500000L, 1000000L), (900000L, 1000000L)), -1)))
-    events(baseDir).queryExecution.toRdd.foreach(_ => ())
-    events(bigDir).queryExecution.toRdd.foreach(_ => ())
-    orders(bigDir).queryExecution.toRdd.foreach(_ => ())
-    val rows = shapes.map { case (name, f) =>
-      def t(dir: String) =
-        ScaleBench.minTime(2)(f(dir).queryExecution.toRdd.foreach(_ => ()))
-      val (tb, ts) = (t(baseDir), t(bigDir))
-      (name, tb, ts, (ts / tb) / factor)
-    }
-    val flagged = rows.collect { case (n, _, _, s) if s > 1.5 => n }
-    val out = rows.map { case (n, tb, ts, s) =>
-      f""""$n":{"base":$tb%.3f,"scaled":$ts%.3f,"slope":$s%.3f}"""
-    }.mkString("{", ",", "}")
-    val fl = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"scale_slope_sketch","factor":$factor,"queries":$out,"flagged":$fl,"base":"$baseDir"}""")
+    ScaleBench.reportSlopes("scale_slope_sketch", Seq("factor" -> factor), baseDir,
+      baseDir, bigDir, d => Seq(events(d), orders(d)), shapes, _ => factor)
     spark.stop()
   }
 }
@@ -662,9 +616,8 @@ object ScaleCorpusBench {
   import graft.ops.Corpus
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "8").toInt
-    val spark = ScaleBench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val (baseDir, factor) = (BenchKit.sfDir, ScaleBench.factor)
+    val spark = BenchKit.session()
     val bigDir = ScaleBench.ensureAmplified(spark, baseDir, factor)
     def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
     val shapes: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
@@ -712,24 +665,8 @@ object ScaleCorpusBench {
           docs(dir).withColumn("n_tok", size(Corpus.wsTokens(col("text")))),
           "lang", "doc_id", "n_tok", budget = 1000000L, maxEpochs = 1.5,
           salt = "ux")))
-    docs(baseDir).queryExecution.toRdd.foreach(_ => ())
-    docs(bigDir).queryExecution.toRdd.foreach(_ => ())
-    // optional comma-separated op filter (same knob as the dedup bench):
-    // measure a new op without re-running the whole family
-    val only = sys.env.get("SPARK_GRAFT_SCALE_OPS")
-      .map(_.split(",").toSet).getOrElse(shapes.map(_._1).toSet)
-    val rows = shapes.filter { case (n, _) => only(n) }.map { case (name, f) =>
-      def t(dir: String) =
-        ScaleBench.minTime(2)(f(dir).queryExecution.toRdd.foreach(_ => ()))
-      val (tb, ts) = (t(baseDir), t(bigDir))
-      (name, tb, ts, (ts / tb) / factor)
-    }
-    val flagged = rows.collect { case (n, _, _, s) if s > 1.5 => n }
-    val qs = rows.map { case (n, tb, ts, s) =>
-      f""""$n":{"base":$tb%.3f,"scaled":$ts%.3f,"slope":$s%.3f}"""
-    }.mkString("{", ",", "}")
-    val fl = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"scale_slope_corpus","factor":$factor,"queries":$qs,"flagged":$fl,"base":"$baseDir"}""")
+    ScaleBench.reportSlopes("scale_slope_corpus", Seq("factor" -> factor), baseDir,
+      baseDir, bigDir, d => Seq(docs(d)), shapes, _ => factor)
     spark.stop()
   }
 }

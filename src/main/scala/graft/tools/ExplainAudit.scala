@@ -1,91 +1,63 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
+import graft.BenchKit
 import graft.queries.Registry
 
 /** Dumps the formatted physical plan of EVERY registered query to
-  * PLANS.md — the audit trail for pushdown / pruning / join-strategy /
-  * shuffle-count review. Run: `sbt "runMain graft.tools.ExplainAudit"`.
+  * PLANS.md (in the working directory) — the audit trail for pushdown /
+  * pruning / join-strategy / shuffle-count review. With query names as
+  * args it prints just those plans to stdout instead.
+  * Run: `sbt "runMain graft.tools.ExplainAudit [query names...]"`.
   * Queries whose fn has eager side effects (IO round-trip writes, the
   * streaming replays) execute those side effects once here — the plan
   * recorded is the final returned DataFrame's, same as the gate sees. */
 object ExplainAudit {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = "/root/testdata/sf0.01"
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of every registered query (sf0.01, AQE initial plans)\n\n")
-    sb.append("Generated by `graft.tools.ExplainAudit`. Things to check per plan:\n")
-    sb.append("`PushedFilters` reaches the scan; `ReadSchema` is pruned to used\n")
-    sb.append("columns; aggregates are partial+final pairs around one exchange;\n")
-    sb.append("dimension joins are `BroadcastHashJoin`; no exchange without a\n")
-    sb.append("reason; WholeStageCodegen spans cover the hot path.\n")
-    // every registered query is audited (r9 — the curated set below is
-    // kept as the index of scale-critical plans whose shuffle structure
-    // the shape review specifically tracks)
-    val extra = Set(
-      "q109_centroid_assign", "q134_ann_ivf", "q106_jaccard_pairs",
-      "q148_embedding_neardup", "q149_token_stats_winnow",
-      "q57_global_cumsum", "q117_global_rank_pctchange",
-      "q35_merge_asof", "q144_resample_nearest_interp",
-      // near-dup band joins: exchanges must carry only id/band/bucket
-      // columns (payload arrays re-attach by id after the pair distinct)
-      "q104_minhash_pairs", "q105_simhash_pairs", "q108_ann_lsh",
-      // asof variants must stay single-exchange; components shows one
-      // round's join+agg shape; memory_usage must stay a single aggregate
-      "q163_asof_forward_tol", "q164_asof_nearest",
-      "q162_neardup_components", "q161_memory_usage",
-      // corpus must be touched only by the anti join; global rolling must
-      // show the per-block window, never an empty-partition-spec window
-      "q168_neardup_dedup", "q169_global_rolling",
-      // time rolling: per-block rangeBetween; range join: hash equi-join
-      // on bucket ids + residual filter, never a nested loop
-      "q174_global_time_rolling", "q175_range_join",
-      // corpus prep: segment dedup = two exchanges (segment text, doc id);
-      // repetition stats = zero-exchange map; decontaminate = broadcast
-      // gram join, corpus side map-only; packing = parallel-prefix shape
-      "q179_segment_dedup", "q180_repetition_stats",
-      "q181_decontaminate", "q183_pack_chunks",
-      // r5: z-order readback must push both dim predicates to the scan;
-      // spearman = distinct-count + parallel-prefix + value join, no
-      // unpartitioned rank window; kendall = cells self-join, never a
-      // row-level pair join; pii scrub = zero-exchange map
-      "q184_zorder_roundtrip", "q185_spearman_autocorr",
-      "q192_kendall", "q190_pii_scrub",
-      // global asof must show the parallel-prefix shape (no empty-spec
-      // window); expanding corr one range shuffle; global rolling
-      // quantile the block-overlap shape; quality flags zero-exchange
-      "q197_asof_global", "q196_expanding_corr",
-      "q193_rolling_quantile", "q194_quality_flags",
-      // matmul: one contraction-index exchange + one (i,j) aggregate
-      "q206_matmul",
-      // r6: dense-pct rank = aggregate + null-safe broadcast join, never
-      // a windowed collect_set; md5 near-dup twins share the id-only
-      // band-join shape with their fast paths
-      "q202_rank_pct", "q104b_minhash_pairs_md5", "q105b_simhash_pairs_md5",
-      "q108b_ann_lsh_md5",
-      // r10: KMV sketch must show ONE partial/final pair around its
-      // group-key exchange (the udaf buffer caps at k longs — no
-      // value-cardinality-sized exchange anywhere); streaming linkage's
-      // batch finisher joins the drained claims, never re-bands the
-      // corpus; weighted rolling windows stay per-block, no empty-spec
-      // window
-      "q262_ndv_sketch", "q260_streaming_linkage", "q261_rolling_win_types")
-    val scaleCritical = extra // retained as documentation of review focus
-    val audited = Registry.all
-    audited.foreach { q =>
-      sb.append(s"\n## ${q.name}\n\n```\n")
-      sb.append(q.fn(spark, dir).queryExecution.explainString(FormattedMode))
-      sb.append("```\n")
+  private val sfDir = "/root/testdata/sf0.01"
+
+  /** Run-specific IDs in a formatted plan, each replaced by a fixed token
+    * so two runs of an unchanged plan print the same text and a PLANS.md
+    * diff shows only real plan changes. */
+  private val RunIds = Seq(
+    "#\\d+" -> "#N",                                  // expression IDs
+    "plan_id=\\d+" -> "plan_id=N",
+    "RDD\\[\\d+\\]" -> "RDD[N]",                      // checkpointed RDDs
+    "\\$Lambda(\\$\\d+)?/0x[0-9a-f]+" -> "\\$Lambda", // JVM lambda classes
+    "(?<=[\\w$])@[0-9a-f]+\\b" -> "@H",              // identity hash codes
+    "(lambda \\w+)_\\d+" -> "$1_N")                  // fresh lambda variables
+
+  def plan(df: DataFrame): String =
+    RunIds.foldLeft(df.queryExecution.explainString(FormattedMode)) {
+      case (text, (id, token)) => text.replaceAll(id, token)
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${audited.size} plans)")
+
+  def main(args: Array[String]): Unit = {
+    // fixed 4 cores, so PLANS.md is the same on any machine
+    val spark = BenchKit.session(4)
+    if (args.nonEmpty) {
+      args.foreach { name =>
+        val q = Registry.all.find(_.name == name)
+          .getOrElse(sys.error(s"no registered query $name"))
+        println(s"## $name\n\n${plan(q.fn(spark, sfDir))}")
+      }
+    } else {
+      val sb = new StringBuilder
+      sb.append("# PLANS — physical plans of every registered query (sf0.01, AQE initial plans)\n\n")
+      sb.append("Generated by `graft.tools.ExplainAudit`. Things to check per plan:\n")
+      sb.append("`PushedFilters` reaches the scan; `ReadSchema` is pruned to used\n")
+      sb.append("columns; aggregates are partial+final pairs around one exchange;\n")
+      sb.append("dimension joins are `BroadcastHashJoin`; no exchange without a\n")
+      sb.append("reason; WholeStageCodegen spans cover the hot path. Run-specific\n")
+      sb.append("IDs (expression ids, RDD ids, lambda names, hash codes) are\n")
+      sb.append("normalized, so a diff of this file is a real plan change.\n")
+      Registry.all.foreach { q =>
+        sb.append(s"\n## ${q.name}\n\n```\n${plan(q.fn(spark, sfDir))}```\n")
+      }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${Registry.all.size} plans)")
+    }
     spark.stop()
   }
 }

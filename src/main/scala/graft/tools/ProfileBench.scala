@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.BenchKit
 import graft.queries.Registry
 import scala.collection.mutable
 
@@ -12,7 +12,7 @@ import scala.collection.mutable
   * duration, summed executor run time, input/shuffle bytes — so the
   * optimization target is visible (single-task scan stage? exchange-bound?
   * many tiny scheduling rounds?). Methodology matches Bench: same session
-  * shape, same toRdd.foreach force, warmup scan first, each query run
+  * shape, same forcing step, warmup scan first, each query run
   * `runs` times and the FASTEST run's stage breakdown printed (JIT-warm,
   * matching the bench's min statistic).
   *
@@ -25,17 +25,9 @@ object ProfileBench {
       shWriteMB: Double, records: Long)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = BenchKit.sfDir
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchKit.session()
 
     // stage collector: jobs started since the last clear() + their stages
     val stages = mutable.Map[Int, StageRow]()
@@ -60,31 +52,20 @@ object ProfileBench {
     spark.sparkContext.addSparkListener(listener)
 
     // warmup (matches Bench)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").queryExecution.toRdd.foreach(_ => ())
+    BenchKit.force(spark.read.parquet(s"$sfDir/lineitem.parquet"))
 
     val wanted = if (args.isEmpty) Registry.all.filter(_.headline)
       else Registry.all.filter(q => args.exists(q.name.contains))
     wanted.foreach { q =>
-      // warm runs; keep the stage set of the FASTEST run
-      var best = Double.MaxValue
-      var bestStages: Seq[StageRow] = Nil
-      var bestJobs = 0
-      (1 to runs).foreach { _ =>
+      // every run's (seconds, jobs, stages); keep the FASTEST run's
+      val (best, bestJobs, bestStages) = (1 to runs).map { _ =>
         listener.synchronized { stages.clear(); jobs.clear() }
-        val t0 = System.nanoTime()
-        q.fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = BenchKit.time(s"[profile] ${q.name}")(BenchKit.force(q.fn(spark, sfDir)))
         // listener events are async: give the bus a beat to drain
         // (listenerBus.waitUntilEmpty is private[spark])
         Thread.sleep(200)
-        if (dt < best) {
-          best = dt
-          listener.synchronized {
-            bestStages = stages.values.toSeq.sortBy(_.stageId)
-            bestJobs = jobs.size
-          }
-        }
-      }
+        listener.synchronized((dt, jobs.size, stages.values.toSeq.sortBy(_.stageId)))
+      }.minBy(_._1)
       println(f"\n=== ${q.name} best=${best}%.3fs jobs=$bestJobs stages=${bestStages.size}")
       val totWall = bestStages.map(_.wallMs).sum
       println(f"    stage wall sum=${totWall}ms (gaps/driver=${best * 1000 - totWall}%.0fms)")

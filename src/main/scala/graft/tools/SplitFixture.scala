@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Writes a scan-parallel variant of a fixture dir: every `<table>.parquet`
   * re-written as `splits` files (one row group each), data identical.
@@ -26,13 +26,7 @@ object SplitFixture {
     val src = args(0)
     val dst = args(1)
     val splits = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.BenchKit.session()
     val tables = new java.io.File(src).listFiles()
       .filter(f => f.getName.endsWith(".parquet"))
       .map(_.getName.stripSuffix(".parquet")).sorted

@@ -68,7 +68,7 @@ import graft.api.{Frame, SortKey}
 class FuzzSpec extends SparkSuite {
 
   // Fixed-seed batches run per family. The full set (6 random + 4 join +
-  // 3 window + 4 reshape batches of 30 seeds = 512 pipelines) takes ~10
+  // 3 window + 4 reshape batches of 30 seeds = 510 pipelines) takes ~10
   // minutes of real Spark jobs — most of the whole suite's budget — and
   // the r15 driver run showed the external test budget is finite (its
   // `sbt test` was cut off mid-suite with zero failures). Same treatment

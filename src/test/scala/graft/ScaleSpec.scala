@@ -108,8 +108,8 @@ class ScaleSpec extends SparkSuite {
       s"z-order l_partkey span $zPart should be well under single-sort $sortPart")
   }
 
-  /** Regex shuffle audit of a query's physical plan (PlanPeek's counts,
-    * pinned as assertions). */
+  /** Regex shuffle audit of a query's physical plan: exchange, broadcast,
+    * sort-merge and cartesian counts, pinned as assertions. */
   private def planCounts(df: org.apache.spark.sql.DataFrame): (Int, Int, Int, Int) = {
     val plan = df.queryExecution.executedPlan.toString
     def n(re: String) = re.r.findAllIn(plan).size

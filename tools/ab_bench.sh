@@ -5,7 +5,7 @@
 # sides equally; prints one JSON line per run tagged with the side.
 set -euo pipefail
 A="$1"; B="$2"; N="$3"
-SF="${4:-/root/testdata/sf0.1}"; CPUS="${5:-32}"
+SF="${4:-/root/testdata/sf0.1}"; CPUS="${5:-$(nproc)}"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
