@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Similarity, Text}
@@ -623,24 +623,40 @@ object Dedup {
    * Near-dup clustering: connected components over a candidate-pair edge
    * list — the step after any pair generator above (a near-dups b, b
    * near-dups c ⇒ {a,b,c} is one duplicate cluster, keep one
-   * representative). Hash-min label propagation: every node starts
-   * labelled with its own id; each round, a node's label drops to the
-   * minimum label among itself and its neighbours; fixpoint = each
-   * component labelled by its minimum member id.
+   * representative). Hash-min label propagation with pointer jumping
+   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+   * SoCC'14): each round, a node's label drops to the minimum label among
+   * itself and its neighbours; fixpoint = each component labelled by its
+   * minimum member id.
    *
-   * Scale shape: one round = one hash-join (edges ⋈ labels, both sides
-   * partitioned by the join key) + one groupBy-min + one POINTER JUMP
-   * (labels ⋈ labels on comp = id, i.e. comp := min(comp, comp[comp]))
-   * — all linear in |E|+|V| per round. The jump is the path-doubling
-   * step of hash-min CC (same effect as the large-star contraction in
-   * Kiveris et al., "Connected Components in MapReduce and Beyond",
-   * SoCC'14): the label pointer's reach doubles every round, so rounds
-   * needed = O(log diameter), not O(diameter) — a 10k-node adversarial
-   * PATH graph converges in ~15 rounds (pinned by a DedupSpec case).
-   * Near-dup graphs are dense tiny-diameter clusters (2-4) and finish in
-   * 3-4 rounds either way; the round cap still bounds worst-case work
-   * loudly, and `localCheckpoint` truncates the growing lineage each
-   * round (same discipline as [[Kmeans.train]]).
+   * Seed: every node starts at `least(id, min(neighbour id))`, one
+   * groupBy over the undirected edge list. That is exactly the state one
+   * round of propagation reaches from identity labels, so the identity
+   * pass is never run. Near-dup graphs (mostly pairs, small stars and
+   * triangles) are already at their fixpoint after the seed, and finish
+   * in one round whose only result is "no label dropped".
+   *
+   * One round = one job set: pointer jump (labels ⋈ labels on comp = id,
+   * i.e. comp := min(comp, comp[comp])), neighbour propagation (edges ⋈
+   * labels) and one groupBy-min, forced by one eager `localCheckpoint`
+   * that also truncates the lineage (same discipline as
+   * [[Kmeans.train]]). All linear in |E|+|V|. The jump doubles the label
+   * pointer's reach every round, so rounds needed = O(log diameter), not
+   * O(diameter) — a 10k-node adversarial PATH graph converges inside the
+   * default cap (pinned by a DedupSpec case).
+   *
+   * Convergence: the round's groupBy also carries each id's previous
+   * label as `max(__old__)`, and an [[Observation]] on the aggregate
+   * counts ids whose label dropped (`comp < old`) inside the round's own
+   * job — no second action per round. Labels are monotone
+   * non-increasing and the id set is fixed by the seed, so a zero count
+   * is the fixpoint. The count is an exact compare, so it holds for any
+   * ordered id type (long, string, decimal, ...).
+   *
+   * `maxRounds` counts rounds after the seed; at the cap the call raises
+   * rather than return partial labels. Spark jobs carry the description
+   * `graft:cc:edges` / `graft:cc:round <n>`; the caller's description is
+   * restored afterwards (the job group is left alone).
    *
    * Returns (id, component): one row per node that appears in an edge,
    * component = min node id in its cluster. Singletons (docs in no pair)
@@ -649,127 +665,74 @@ object Dedup {
    */
   def connectedComponents(edges: DataFrame, idACol: String, idBCol: String,
       maxRounds: Int = 20): DataFrame = {
-    // MATERIALIZE the undirected edge list before the loop (r15). `und`
-    // is referenced by every round's neighbour join, and each round is a
-    // separate action — without the checkpoint, every round RE-EXECUTES
-    // the caller's entire pair-generation plan (banding, shuffles, exact
-    // verify: the expensive part of the whole near-dup job) because Spark
-    // does not reuse shuffle output across separate query executions.
-    // Measured (SCALE_r15): e2e near-dup removal at 64×/t=0.8 fell
-    // 417.9 s → 256.5 s (−39%) and the 1× base 14.7 → 6.4 s; the
-    // e2e-to-pairs-alone ratio fell ~2.8× → ~1.7× — the gap was the
-    // redundant pair-generation passes, one per extra CC round.
-    // Same block-manager discipline as the label checkpoints
-    // (memory+disk, freed on context cleanup); the edge list is
-    // O(duplicate pairs), tiny relative to the corpus.
-    //
-    // SCALE TRADE (documented, deliberate): localCheckpoint blocks are
-    // executor-local and NOT replayable — lose an executor mid-loop and
-    // the job fails instead of recomputing, and the whole CC pass retries
-    // from the pair generator. At 100 TB that retry is tolerable (the
-    // loop is minutes, not hours) and the alternative was measured 2.9×
-    // worse (SCALE_r15: every round re-ran pair generation). If executor
-    // churn is real in a deployment, swap in reliable `checkpoint()`
-    // against a checkpoint dir — same plan shape, replayable blocks.
-    val und = edges.select(col(idACol).as("__src__"), col(idBCol).as("__dst__"))
-      .union(edges.select(col(idBCol).as("__src__"), col(idACol).as("__dst__")))
-      .distinct()
-      .localCheckpoint()
-    var labels = und.select(col("__src__").as("__id__")).distinct()
-      .withColumn("__comp__", col("__id__"))
-      .localCheckpoint()
-    // Convergence sentinel: Σ__comp__ as exact DECIMAL(38,0). Labels are
-    // monotone non-increasing per id and the id set is fixed after round
-    // 0, so the label table changed this round ⟺ the exact sum dropped.
-    // This replaces the previous per-round convergence JOIN of the old
-    // and new label tables (+ count over both) with ONE narrow aggregate
-    // over the new table only — one fewer two-sided pass per round
-    // (guide §2.3/§2.4: fewer bytes through fewer stages). DECIMAL(38,0)
-    // keeps the compare exact at any scale (10^9 nodes × 10^18-magnitude
-    // ids is still 11 digits of headroom; a double's 2^53 mantissa would
-    // tie silently and could declare convergence EARLY — correctness, so
-    // exactness is non-negotiable).
-    def compSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("__comp__").cast("decimal(38,0)")).as("s"))
-        .head.getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // empty edge list
-    }
-    // The sum sentinel is only sound when the decimal(38,0) cast is exact:
-    // a string/UUID id casts to NULL (sum 0 every round -> instant false
-    // convergence) and a fractional double truncates (a label drop inside
-    // the truncated digits would be invisible). Integral ids cast exactly;
-    // anything else falls back to the join-based change check below —
-    // correct for any ordered id type, one extra two-sided pass per round.
-    val integralId = und.schema("__src__").dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    def changedVsJoin(prev: DataFrame, next: DataFrame): Boolean = {
-      val old = prev.select(col("__id__"), col("__comp__").as("__oldcomp__"))
-      !next.join(old, Seq("__id__"))
-        .where(!(col("__comp__") <=> col("__oldcomp__"))).isEmpty
-    }
-    var prevSum = if (integralId) compSum(labels) else null
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      // pointer jump (path doubling) FIRST: shortcut each label through
-      // the label table itself — comp := min(comp, comp[comp]). One extra
-      // self-join on the (small) label table per round turns worst-case
-      // convergence from O(diameter) rounds into O(log diameter): the
-      // pointer i→comp(i) doubles its reach every round (2^r − 1 after r
-      // rounds), so even an adversarial 10k-node PATH graph (depth ≫ the
-      // cap) converges in ~15 rounds. Dense near-dup clusters (diameter
-      // 2-4) pay one tiny join for rounds they usually save. The jump
-      // runs BEFORE propagation so the round still ENDS in the
-      // groupBy(__id__) aggregate — the checkpointed labels keep their
-      // hashpartitioning(__id__), which the caller's anti join reuses
-      // (shuffle budget pinned by PlanAuditSpec's q168 contract).
-      val parents = labels
-        .select(col("__id__").as("__pid__"), col("__comp__").as("__pcomp__"))
-      val jumped = labels
-        .join(parents, col("__comp__") === col("__pid__"), "left")
-        .select(col("__id__"),
-          least(col("__comp__"), coalesce(col("__pcomp__"), col("__comp__"))).as("__comp__"))
-      // neighbour labels flow along edges; min with own label
-      val incoming = und
-        .join(jumped.withColumnRenamed("__id__", "__src__"), Seq("__src__"))
-        .select(col("__dst__").as("__id__"), col("__comp__"))
-      val next = jumped.union(incoming)
-        .groupBy(col("__id__"))
-        .agg(min(col("__comp__")).as("__comp__"))
+    val sc = edges.sparkSession.sparkContext
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription("graft:cc:edges")
+      // MATERIALIZE the undirected edge list before the loop. `und` is
+      // read by every round, and each round is a separate action: without
+      // the checkpoint every round re-executes the caller's whole
+      // pair-generation plan (banding, shuffles, exact verify), because
+      // Spark does not reuse shuffle output across query executions.
+      //
+      // SCALE TRADE (deliberate): localCheckpoint blocks are executor-local
+      // and NOT replayable — lose an executor mid-loop and the job fails
+      // instead of recomputing, and the whole CC pass retries from the
+      // pair generator. If executor churn is real in a deployment, swap in
+      // reliable `checkpoint()` against a checkpoint dir — same plan
+      // shape, replayable blocks.
+      val und = edges.select(col(idACol).as("__src__"), col(idBCol).as("__dst__"))
+        .union(edges.select(col(idBCol).as("__src__"), col(idACol).as("__dst__")))
+        .distinct()
         .localCheckpoint()
-      // a single scalar per round: did any label drop? (exact-sum
-      // sentinel — see compSum above; `next` is already checkpointed so
-      // this is one narrow agg over block-manager data, not a recompute)
-      val changed =
-        if (integralId) {
-          val nextSum = compSum(next)
-          val c = nextSum.compareTo(prevSum) != 0
-          prevSum = nextSum
-          c
-        } else changedVsJoin(labels, next)
-      // Release the SUPERSEDED round's checkpoint blocks eagerly. Each
-      // localCheckpoint materializes a full label-table copy in the block
-      // manager; without this, copies from every round accumulate and
-      // only the async ContextCleaner (driver-GC-triggered) can reclaim
-      // them — a race it loses under heap pressure: the 128x e2e scale
-      // run OOM'd in a late CC stage on the default 8 GiB heap (r15), and
-      // r14's 256x run logged 8 page-allocation retries for the same
-      // reason. `next` is already eagerly checkpointed and the sum
-      // sentinel no longer reads the old labels at all, so the old
-      // blocks are provably dead here. Memory per round is now bounded
-      // by TWO label tables regardless of round count.
-      val superseded = labels
-      labels = next
-      superseded.unpersist(blocking = false)
-      converged = !changed
-      round += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds " +
-      "(pathological chain graph — use a larger cap or a star-contraction scheme)")
-    labels.select(col("__id__").as("id"), col("__comp__").as("component"))
+      // Left uncheckpointed: round 1 plans the seed aggregate once and
+      // reuses its exchange for all three of its reads.
+      var labels = und.groupBy(col("__src__").as("__id__"))
+        .agg(min(col("__dst__")).as("__m__"))
+        .select(col("__id__"), least(col("__id__"), col("__m__")).as("__comp__"))
+      val noOld = lit(null).cast(und.schema("__src__").dataType)
+      var round = 0
+      var converged = false
+      while (round < maxRounds && !converged) {
+        round += 1
+        sc.setJobDescription(s"graft:cc:round $round")
+        // pointer jump FIRST, so the round ENDS in the groupBy(__id__)
+        // aggregate: one row per id, the previous label at hand for the
+        // drop count, and the table the caller's anti join reads (q168's
+        // shuffle budget is pinned by PlanAuditSpec).
+        val parents = labels
+          .select(col("__id__").as("__pid__"), col("__comp__").as("__pcomp__"))
+        val jumped = labels
+          .join(parents, col("__comp__") === col("__pid__"), "left")
+          .select(col("__id__"),
+            least(col("__comp__"), coalesce(col("__pcomp__"), col("__comp__"))).as("__comp__"),
+            col("__comp__").as("__old__"))
+        // neighbour labels flow along edges; min with own label
+        val incoming = und
+          .join(jumped.withColumnRenamed("__id__", "__src__"), Seq("__src__"))
+          .select(col("__dst__").as("__id__"), col("__comp__"), noOld.as("__old__"))
+        val drops = new Observation()
+        val next = jumped.union(incoming)
+          .groupBy(col("__id__"))
+          .agg(min(col("__comp__")).as("__comp__"), max(col("__old__")).as("__old__"))
+          .observe(drops, count_if(col("__comp__") < col("__old__")).as("dropped"))
+          .select(col("__id__"), col("__comp__"))
+          .localCheckpoint()
+        // Release the SUPERSEDED round's checkpoint blocks eagerly: each
+        // localCheckpoint holds a full label-table copy in the block
+        // manager, and only the async ContextCleaner (driver-GC-triggered)
+        // would reclaim older copies — a race it loses under heap pressure
+        // at large scale. `next` is already materialized, so memory per
+        // round stays bounded by TWO label tables regardless of rounds.
+        val superseded = labels
+        labels = next
+        superseded.unpersist(blocking = false)
+        converged = drops.get("dropped") == 0L
+      }
+      require(converged, s"connectedComponents did not converge in $maxRounds rounds " +
+        "(pathological chain graph — use a larger cap or a star-contraction scheme)")
+      labels.select(col("__id__").as("id"), col("__comp__").as("component"))
+    } finally sc.setJobDescription(callerDesc)
   }
 
   /**

@@ -152,24 +152,42 @@ object QueryKit {
   def scratch(base: String, fixtureDir: String, name: String): String =
     s"$base/${fixtureDir.replaceAll("[^A-Za-z0-9._-]", "_")}/$name"
 
-  /** Per-JVM memo of inferred parquet schemas, keyed on path + mtime (so
-    * an overwritten scratch path re-infers). `spark.read.parquet` without
-    * an explicit schema schedules a footer-inference JOB on every call —
-    * ProfileBench (r15) measured it at 26–41 ms per table read, once or
-    * twice per bench query run. A real deployment reads the schema from a
-    * catalog/manifest once, not from file footers per query; this memo is
-    * that catalog. It caches METADATA only — every query still scans and
-    * computes from the parquet data itself.
+  /** Per-JVM memo of inferred parquet schemas, keyed on path + a listing
+    * fingerprint (so an overwritten path re-infers). `spark.read.parquet`
+    * without an explicit schema schedules a footer-inference JOB on every
+    * call — ProfileBench (r15) measured it at 26–41 ms per table read, once
+    * or twice per bench query run. A real deployment reads the schema from
+    * a catalog/manifest once, not from file footers per query; this memo
+    * is that catalog. It caches METADATA only — every query still scans
+    * and computes from the parquet data itself.
     *
-    * LOCAL-FS ONLY (documented trade): the mtime key comes from
-    * `java.io.File.lastModified`, which is millisecond-granular and
-    * returns 0 for non-local URIs (hdfs://, s3://) — on an object store
-    * every generation of a path would share key "path@0" and an overwrite
-    * could serve a stale schema. The driver contract only ever hands this
-    * local paths; a deployment pointing it at remote storage must swap
-    * the key for the store's own version/etag (or an explicit catalog). */
+    * The fingerprint comes from the path's Hadoop `FileSystem`, so it
+    * holds on any store Spark can read (a directory's own mtime does not:
+    * `java.io.File` sees 0 for hdfs:// or s3:// URIs, and a rewrite in
+    * place need not move it). */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
+  /** File count, total length and max modification time of the visible
+    * data files under `path` (names starting with `_` or `.` — Spark's
+    * hidden files, e.g. `_SUCCESS`, `.crc`, `_temporary/` — are skipped,
+    * at any depth). A missing path gets its own key; the read that follows
+    * raises Spark's own not-found error. Plain `listStatus`, not
+    * `listFiles`: a located status copies owner and permissions, which
+    * the local file system reads by forking a process per file. */
+  private def listingKey(s: SparkSession, path: String): String = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .flatMap(f => if (f.isDirectory) files(f.getPath) else Seq(f))
+    try {
+      val found = files(root)
+      s"${found.size}/${found.map(_.getLen).sum}/" +
+        found.map(_.getModificationTime).maxOption.getOrElse(0L)
+    } catch { case _: java.io.FileNotFoundException => "missing" }
+  }
 
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     // TIMESTAMP(NANOS) parquet is unreadable by Spark's vectorized reader
@@ -177,7 +195,7 @@ object QueryKit {
     // micros/date layouts.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val key = s"$path@${new java.io.File(path).lastModified}"
+    val key = s"$path@${listingKey(s, path)}"
     val schema = schemaCache.computeIfAbsent(key, _ => s.read.parquet(path).schema)
     normalizeTemporal(s.read.schema(schema).parquet(path))
   }

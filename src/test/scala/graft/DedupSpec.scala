@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.functions.Text
@@ -141,6 +142,47 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(Dedup.connectedComponents(none, "a", "b").collect().isEmpty)
+  }
+
+  test("connectedComponents finishes near-dup shapes in one round and names its jobs") {
+    import spark.implicits._
+    // disjoint pairs, a triangle and a star centred on its minimum id: the
+    // seed least(id, min(neighbour)) is already the fixpoint, so round 1
+    // drops no label and the loop stops there
+    val edges = Seq((1L, 2L), (4L, 3L), (10L, 11L), (11L, 12L), (12L, 10L),
+      (20L, 21L), (22L, 20L), (20L, 23L), (24L, 20L)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    val got = try {
+      sc.setJobGroup("cc-caller", "caller", interruptOnCancel = false)
+      val labels = Dedup.connectedComponents(edges, "a", "b", maxRounds = 1)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      // listener events arrive asynchronously and in order: once this
+      // marker job is seen, every job before it has been
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 20000000000L
+      while (!jobs.asScala.exists(_._2 == "marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L,
+      20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
+    val seen = jobs.asScala.toList.takeWhile(_._2 != "marker")
+    assert(seen.forall(_._1 == "cc-caller"), seen) // the job group is the caller's
+    assert(seen.map(_._2).toSet == Set("graft:cc:edges", "graft:cc:round 1"), seen)
   }
 
   test("connectedComponents raises rather than return partial labels at the round cap") {

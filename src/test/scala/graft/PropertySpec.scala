@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -149,14 +150,24 @@ class PropertySpec extends SparkSuite {
         }
         edges.foreach { case (a, b) => parent(find(a)) = find(b) }
         val nodes = parent.keys.toList // snapshot: find() path-compresses
-        val want: Map[Long, Long] = nodes.groupBy(find).values.flatMap { members =>
+        val clusters = nodes.groupBy(find).values.toList
+        def labels(df: DataFrame): Map[Any, Any] = graft.ops.Dedup.connectedComponents(
+          df.repartition(3), "a", "b", maxRounds = 40)
+          .collect().map(r => r.get(0) -> r.get(1)).toMap
+        val df = edges.toDF("a", "b")
+        val want: Map[Any, Any] = clusters.flatMap { members =>
           val m = members.min
           members.map(_ -> m)
         }.toMap
-        val got = graft.ops.Dedup.connectedComponents(
-          edges.toDF("a", "b").repartition(3), "a", "b", maxRounds = 40)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == want, s"edges=$edges")
+        assert(labels(df) == want, s"edges=$edges")
+        // the same graph over string ids: lexicographic order ("10" < "9")
+        // picks other minima, and the drop count must hold for any ordered type
+        val wantStr: Map[Any, Any] = clusters.flatMap { members =>
+          val s = members.map(_.toString)
+          s.map(_ -> s.min)
+        }.toMap
+        val asStr = df.select(col("a").cast("string").as("a"), col("b").cast("string").as("b"))
+        assert(labels(asStr) == wantStr, s"string edges=$edges")
       }
     }
   }

@@ -66,4 +66,22 @@ class QueryKitSpec extends SparkSuite {
     val none = Seq((1, "x")).toDF("a", "b")
     assert(QueryKit.normalizeTs(none).columns.toSeq == Seq("a", "b"))
   }
+
+  test("the schema memo re-infers a parquet directory rewritten in place") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_qk_schema").toFile
+    val table = new java.io.File(dir, "t.parquet")
+    try {
+      Seq(1L, 2L).toDF("a").write.parquet(table.getPath)
+      assert(QueryKit.t(spark, dir.getPath, "t").columns.toSeq == Seq("a"))
+      val mtime = table.lastModified
+      Seq(("x", 7)).toDF("b", "c").write.mode("overwrite").parquet(table.getPath)
+      // a store that keeps the directory's own timestamp (or has none, as
+      // object stores report 0) must still see the new files
+      assert(table.setLastModified(mtime))
+      val back = QueryKit.t(spark, dir.getPath, "t")
+      assert(back.columns.toSeq == Seq("b", "c"))
+      assert(back.collect().map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("x", 7)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }
