@@ -49,7 +49,7 @@ object Cumulative {
     require(!cols.map(_._2).exists(out => cols.map(_._1).contains(out)),
       s"globalRunning: output names ${cols.map(_._2)} must not collide with inputs")
     val n = numPartitions.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      shufflePartitions(df.sparkSession))
     val sortCols = order.map(_.toColumn)
     val sorted = df
       .repartitionByRange(n, sortCols: _*)
@@ -137,7 +137,7 @@ object Cumulative {
     require(!cols.map(_._2).exists(out => cols.map(_._1).contains(out)),
       s"groupedRunning: output names ${cols.map(_._2)} must not collide with inputs")
     val n = numPartitions.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      shufflePartitions(df.sparkSession))
     val keyCols = keys.map(col)
     val sortCols = keyCols ++ order.map(_.toColumn)
     val sorted = df

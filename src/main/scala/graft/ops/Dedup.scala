@@ -66,76 +66,30 @@ object Dedup {
   }
 
   /**
-   * MinHash-LSH near-duplicate candidate pairs.
-   *
-   * shingle → minhash signature (numHashes) → split into `bands` bands →
-   * hash each band → explode to (band, bandHash, id) → self-join on the
-   * band bucket. The join is an equi-join on (band, bandHash): Spark hash-
-   * partitions it, so candidate generation is linear in bucket sizes.
-   * Pairs are then verified with the exact shingle-set Jaccard and filtered
-   * by `threshold`.
-   *
-   * Exchange discipline: the band self-join and the candidate-pair
-   * `distinct` carry ONLY (band, bucketHash, id) / (id_a, id_b) — never
-   * the shingle arrays (easily KBs/doc, and the naive formulation shuffles
-   * them 2×bands× plus once per matched pair). The verify payload
-   * re-attaches via two id-equi-joins just before the exact-Jaccard
-   * verify — as xxhash64-FOLDED shingle sets (8 B/shingle, not the raw
-   * n-gram strings; hashed-set Jaccard ≡ string-set Jaccard up to 64-bit
-   * in-pair collisions, see [[foldedShingleSet]]) — so each doc's set
-   * crosses an exchange at most twice regardless of band count or
-   * bucket skew, at ~5× fewer bytes than the raw arrays. Shingles are
-   * recomputed on the re-attach branch (a codegen'd map over the scan) —
-   * deliberate: CPU is cheap relative to exchange bytes at corpus scale,
-   * and each pair is verified exactly once (post-dedup) instead of once
-   * per matching band.
+   * MinHash-LSH near-duplicate pairs under an xxhash64 signature: a
+   * `numHashes` minhash signature per document, split into `bands`
+   * bands of `numHashes / bands` rows, each band hashed to one key
+   * ([[bandRows]]); candidates come from the band-bucket self-join
+   * ([[selfCandidates]]) and are verified with the exact shingle-set
+   * Jaccard ([[verifyJaccard]]) over xxhash64-folded sets. No other
+   * engine reproduces this signature; [[minhashLshPairsMd5]] is the
+   * oracle-checked twin.
    */
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-
-    val sh = df.select(
-      col(idCol),
-      array_distinct(Text.shingles(col(textCol), shingleN)).as("__sh__"))
-    val sig = sh.withColumn("__sig__", Text.minhashSignature(col("__sh__"), numHashes))
-
-    val banded = sig.select(
-      col(idCol),
-      size(col("__sh__")).as("__sz__"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-        xxhash64(concat_ws(",",
-          slice(col("__sig__"), b * rowsPerBand + 1, lit(rowsPerBand)).cast("array<string>")), b))))
-      .withColumnRenamed("pos", "__band__")
-      .withColumnRenamed("col", "__bucket__")
-
-    val a = banded.select(col(idCol).as("id_a"), col("__sz__").as("sz_a"),
-      col("__band__"), col("__bucket__"))
-    val b = banded.select(col(idCol).as("id_b"), col("__sz__").as("sz_b"),
-      col("__band__"), col("__bucket__"))
-    val survivors = a.join(b, Seq("__band__", "__bucket__"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(sizeRatioBound(col("sz_a"), col("sz_b")) >= threshold)
-      .select("id_a", "id_b")
-      .distinct()
-
-    // Folded verify payload (xxhash64 per shingle on the fast path —
-    // same exactness/spill-bytes argument as [[foldedShingleSet]]:
-    // hashed-set Jaccard ≡ shingle-set Jaccard up to 64-bit collisions
-    // within one pair, and the arrays crossing the verify exchange are
-    // 8 B/shingle instead of the raw n-gram strings).
-    val hashed = df.select(col(idCol),
+    val r = rowsPerBand(numHashes, bands)
+    val banded = bandRows(df, textCol, shingleN, col(idCol))(
+      Text.minhashSignature(_, numHashes),
+      sig => transform(sequence(lit(0), lit(bands - 1)), b =>
+        xxhash64(concat_ws(",", slice(sig, b * r + 1, lit(r)).cast("array<string>")), b)))
+    // xxhash64 fold: the same 8 B/shingle and exactness argument as
+    // [[foldedShingleSet]], in this path's hash family
+    def sets(s: String) = df.select(col(idCol).as(s"id_$s"),
       transform(array_distinct(Text.shingles(col(textCol), shingleN)),
-        s => xxhash64(s)).as("__hs__"))
-    survivors
-      .join(hashed.select(col(idCol).as("id_a"), col("__hs__").as("hs_a")), Seq("id_a"))
-      .join(hashed.select(col(idCol).as("id_b"), col("__hs__").as("hs_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        x => xxhash64(x)).as(s"hs_$s"))
+    verifyJaccard(selfCandidates(banded, idCol, threshold), sets("a"), sets("b"), threshold)
   }
 
   /** SimHash near-dup: pairs whose 64-bit simhashes differ in ≤ `maxBits`
@@ -187,12 +141,7 @@ object Dedup {
     * quadratic on real corpora and silently missed near-dups straddling a
     * length-band edge. Pairs found by several bands dedupe before the
     * threshold filter; the reported jaccard is always the exact shingle-set
-    * value.
-    *
-    * Exchanges carry id/hash columns only (band join + pair distinct); the
-    * 60-bit-folded shingle sets ([[foldedShingleSet]], 8 B/shingle)
-    * re-attach by id just before the exact verify — see
-    * [[minhashLshPairs]] for the rationale. */
+    * value. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double, nBands: Int = 4): DataFrame =
     md5BandedPairs(df, idCol, textCol, shingleN, threshold, nBands, rowsPerBand = 1)
@@ -203,18 +152,18 @@ object Dedup {
     * concatenation of `rowsPerBand` true MinHashes, row r drawing its
     * random order from md5((b·rowsPerBand+r) + ":" + shingle) — so
     * P(key collision) = J^rowsPerBand per band and the S-curve matches the
-    * classic (bands, rows) trade-off. Same plan shape as the fast path
-    * (banded bucket self-join, id-only exchanges, exact-Jaccard verify);
-    * md5 costs ~3× xxhash64 per shingle, which is why the fast path stays
-    * the default and this variant anchors it to a DuckDB oracle (q104b)
-    * plus a parity spec. */
+    * classic (bands, rows) trade-off. Same steps as the xxhash64 path; it
+    * anchors the family to a DuckDB oracle (q104b) and a parity spec.
+    * It is not the slower path: one ScaleDedupBench run over sf0.01 on 4
+    * cores (16 hashes, 4 bands, t = 0.2) timed it at 0.70 s (1×) and
+    * 0.79 s (2×) against 0.98 s and 1.03 s for [[minhashLshPairs]] — one
+    * md5 per shingle in the native band kernel costs less than the
+    * signature's numHashes × (array_distinct + xxhash64) per document. */
   def minhashLshPairsMd5(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+      threshold: Double = 0.5): DataFrame =
     md5BandedPairs(df, idCol, textCol, shingleN, threshold, bands,
-      rowsPerBand = numHashes / bands)
-  }
+      rowsPerBand(numHashes, bands))
 
   /** One md5 digest (32 hex chars) per shingle — the ONLY md5 work that
     * scales with shingle volume. Every MinHash order derives from this
@@ -238,18 +187,15 @@ object Dedup {
     * per-index md5 within 0.1% on the 32× corpus); past 16 lanes the
     * window runs off the digest, hence the cap. Band b's raw key
     * concatenates its `rowsPerBand` lane-minima, folded to 8 bytes before
-    * any exchange — see [[md5BandedPairs]] for the collision-safety
-    * argument. The whole computation is ONE native kernel
+    * any exchange — see [[md5Bands]] for the collision-safety argument.
+    * The whole computation is ONE native kernel
     * ([[graft.plans.LaneMinBandKeys]]): a single pass over the digest
     * array holding lane minima as views — the `transform`/`array_min`
     * tree walked the array once per hash with two allocations per
     * element, and THAT (not the md5 count) measured as the banding
-    * floor. Shared verbatim by the batch pair generator, the persisted
-    * band index, and the streaming near-dup suppressor
-    * ([[graft.streaming.EventStream.nearDupBandClaims]]); DuckDB
-    * reproduces every step (`substr(md5(s), b*rpb+r+1, 16)` lanes,
-    * `md5`-fold, 8-byte `unhex(substr(…))`), so batch, stream, index,
-    * and oracle all band identically. */
+    * floor. DuckDB reproduces every step (`substr(md5(s), b*rpb+r+1, 16)`
+    * lanes, `md5`-fold, 8-byte `unhex(substr(…))`), so batch, stream,
+    * index, and oracle all band identically. */
   def md5BandKeysFromDigests(digArr: Column, nBands: Int, rowsPerBand: Int): Column =
     call_function("graft_band_keys", digArr, lit(nBands), lit(rowsPerBand))
 
@@ -292,109 +238,167 @@ object Dedup {
   private def sizeRatioBound(szA: Column, szB: Column): Column =
     least(szA, szB).cast("double") / greatest(szA, szB).cast("double")
 
-  private def md5BandedPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, threshold: Double, nBands: Int, rowsPerBand: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
-    val prepped = df.select(
-      col(idCol),
-      array_distinct(Text.shingles(col(textCol), shingleN)).as("__sh__"))
-    // The raw band key is rowsPerBand md5 hex strings joined with '|' —
-    // up to 131 chars shuffled twice in the self-join. Fold it to 8 bytes
-    // (unhex of the first 16 md5 hex chars — DuckDB reproduces the same
-    // fold) before the exchange: a 64-bit collision can only MERGE two
-    // buckets, adding spurious candidates the exact-Jaccard verify below
-    // already filters — it can never drop a true candidate — so the fold
-    // trades zero correctness for ~8× narrower band-join exchanges.
-    val banded = prepped
-      .withColumn("__dg__", shingleDigests(col("__sh__")))
-      .select(col(idCol), size(col("__sh__")).as("__sz__"),
-        posexplode(md5BandKeysFromDigests(col("__dg__"), nBands, rowsPerBand)))
+  /** `numHashes / bands`, the rows of each band. */
+  private[graft] def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    numHashes / bands
+  }
+
+  // ---- The steps every MinHash pair generator is built from -----------
+  //
+  // band:        [[bandRows]] / [[md5Bands]], one row per (doc, band)
+  // candidates:  [[selfCandidates]] (one table), [[bandCandidates]] (after
+  //              any band join), [[indexCandidates]] (a persisted index)
+  // verify:      [[foldedSets]] + [[verifyJaccard]]
+  //
+  // Exchange discipline, for all of them: the band join and the
+  // candidate-pair `distinct` carry ONLY (band, key, id[, size]) and
+  // (id, id) — never the shingle arrays (KBs/doc; the naive formulation
+  // shuffles them 2×bands× plus once per matched pair). The folded sets
+  // re-attach by id just before the exact verify, so each doc's set
+  // crosses an exchange at most twice regardless of band count or bucket
+  // skew. Shingles are recomputed on the re-attach branch (a codegen'd
+  // map over the scan) on purpose: CPU is cheap next to exchange bytes at
+  // corpus scale, and each pair is verified once, not once per band.
+  //
+  // The simhash, md5-simhash and embedding-LSH self-joins below keep their
+  // own candidate joins: their keys are not shingle bands and they have no
+  // set size to cull on, so sharing [[selfCandidates]] would branch on the
+  // caller.
+
+  /** Band step: one row per (document, band) with the `keep` columns,
+    * the document's distinct-shingle count `__sz__` (for
+    * [[sizeRatioBound]]), `__band__` and its key `__key__`. `summary`
+    * maps the distinct shingle array to the per-document column the keys
+    * read (md5 digests, or a minhash signature), projected on its own so
+    * it is computed once; `keys` maps that column to the array of band
+    * keys. */
+  private def bandRows(df: DataFrame, textCol: String, shingleN: Int, keep: Column*)(
+      summary: Column => Column, keys: Column => Column): DataFrame =
+    df.select(keep :+ array_distinct(Text.shingles(col(textCol), shingleN)).as("__sh__"): _*)
+      .withColumn("__dg__", summary(col("__sh__")))
+      .select(col("*"), size(col("__sh__")).as("__sz__"), posexplode(keys(col("__dg__"))))
+      .drop("__sh__", "__dg__")
       .withColumnRenamed("pos", "__band__")
       .withColumnRenamed("col", "__key__")
-    val a = banded.select(col(idCol).as("id_a"), col("__sz__").as("sz_a"),
+
+  /** [[bandRows]] under the engine-portable md5 band keys — the one band
+    * step of the batch pairs, the persisted index and the stream. The raw
+    * key is `rowsPerBand` md5 hex strings joined with '|' (up to 131
+    * chars, shuffled twice in a band join); it is folded to 8 bytes
+    * (unhex of the first 16 md5 hex chars — DuckDB reproduces the fold)
+    * before any exchange. A 64-bit collision can only MERGE two buckets,
+    * adding spurious candidates the exact verify filters; it can never
+    * drop a true candidate, so the fold trades zero correctness for ~8×
+    * narrower band-join exchanges. */
+  private[graft] def md5Bands(df: DataFrame, textCol: String, shingleN: Int,
+      nBands: Int, rowsPerBand: Int, keep: Column*): DataFrame = {
+    graft.plans.GraftExtensions.register(df.sparkSession)
+    bandRows(df, textCol, shingleN, keep: _*)(
+      shingleDigests, md5BandKeysFromDigests(_, nBands, rowsPerBand))
+  }
+
+  /** One side of a band join: a [[bandRows]] output with its id and size
+    * renamed to `id_<s>` / `sz_<s>`. */
+  private def bandSide(banded: DataFrame, idCol: String, s: String): DataFrame =
+    banded.select(col(idCol).as(s"id_$s"), col("__sz__").as(s"sz_$s"),
       col("__band__"), col("__key__"))
-    val b = banded.select(col(idCol).as("id_b"), col("__sz__").as("sz_b"),
-      col("__band__"), col("__key__"))
-    val candidates = a.join(b, Seq("__band__", "__key__"))
-      .filter(col("id_a") < col("id_b"))
-      // stage-1 verify: the exact size-ratio bound ([[sizeRatioBound]])
-      // culls provably-below-threshold pairs before they cost a distinct
-      // exchange and a folded-set attach
-      .filter(sizeRatioBound(col("sz_a"), col("sz_b")) >= threshold)
-      .select("id_a", "id_b")
+
+  /** Candidate step after a band join of sides `a` and `b`: the exact
+    * size-ratio cull ([[sizeRatioBound]]) before the distinct exchange
+    * and the folded-set attach, then one row per distinct (id_a, id_b). */
+  private def bandCandidates(joined: DataFrame, a: String, b: String,
+      threshold: Double): DataFrame =
+    joined.filter(sizeRatioBound(col(s"sz_$a"), col(s"sz_$b")) >= threshold)
+      .select(s"id_$a", s"id_$b")
       .distinct()
-    // Re-attach branch carries the FOLDED shingle sets (8 B/shingle),
-    // not the raw arrays — see [[foldedShingleSet]] for the exactness
-    // and spill-bytes argument.
-    val hashed = df.select(col(idCol),
-      foldedShingleSet(col(textCol), shingleN).as("__hs__"))
-    candidates
-      .join(hashed.select(col(idCol).as("id_a"), col("__hs__").as("hs_a")), Seq("id_a"))
-      .join(hashed.select(col(idCol).as("id_b"), col("__hs__").as("hs_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))).cast("double")).as("jaccard"))
+
+  /** Candidate step of a self-join: band-bucket equi-join (hash-partitioned
+    * on (band, key), so linear in bucket sizes), each unordered pair once
+    * as `id_a < id_b`. The order filter is the caller's difference from the
+    * two-table join (ids of two tables share no order), so it is applied
+    * here, on the joined rows, not inside [[bandCandidates]]. */
+  private def selfCandidates(banded: DataFrame, idCol: String,
+      threshold: Double): DataFrame =
+    bandCandidates(bandSide(banded, idCol, "a")
+      .join(bandSide(banded, idCol, "b"), Seq("__band__", "__key__"))
+      .filter(col("id_a") < col("id_b")), "a", "b", threshold)
+
+  /** Index-candidate step: `docs` banded map-side ([[md5Bands]]) and
+    * equi-joined to a persisted [[writeBandIndex]] output on (band, key);
+    * one (id_l, id_r) row per colliding band, NOT deduplicated (a stream
+    * cannot `distinct` without unbounded state). No size cull: the index
+    * carries only (band, key, id), and adding a size column is an
+    * index-format version bump not taken for a path whose verify is
+    * already candidate-driven. */
+  private[graft] def indexCandidates(docs: DataFrame, idCol: String, textCol: String,
+      index: DataFrame, shingleN: Int, numHashes: Int, bands: Int): DataFrame =
+    md5Bands(docs, textCol, shingleN, bands, rowsPerBand(numHashes, bands),
+      col(idCol).as("id_l"))
+      // partitionBy wrote __band__ as a partition column; __key__ stays binary
+      .join(index.select(col("id_r"), col("__band__").cast("int"), col("__key__")),
+        Seq("__band__", "__key__"))
+      .select("id_l", "id_r")
+
+  /** Verify payload of one side: (`id_<s>`, `hs_<s>`) with the
+    * [[foldedShingleSet]] of each document. */
+  private[graft] def foldedSets(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, s: String): DataFrame =
+    df.select(col(idCol).as(s"id_$s"), foldedShingleSet(col(textCol), shingleN).as(s"hs_$s"))
+
+  /** Verify step: re-attach each side's folded set to the candidate
+    * pairs by two id-equi-joins, then the exact Jaccard
+    * |A∩B| / |A∪B| and the `threshold` filter. `a` and `b` are two-column
+    * (id, folded set) frames ([[foldedSets]]); their id columns name the
+    * candidate columns they join on. Returns (idA, idB, jaccard). */
+  private[graft] def verifyJaccard(candidates: DataFrame, a: DataFrame, b: DataFrame,
+      threshold: Double): DataFrame = {
+    val Array(idA, hsA) = a.columns
+    val Array(idB, hsB) = b.columns
+    candidates.join(a, Seq(idA)).join(b, Seq(idB))
+      .select(col(idA), col(idB),
+        (size(array_intersect(col(hsA), col(hsB))).cast("double") /
+          size(array_union(col(hsA), col(hsB))).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
+
+  private def md5BandedPairs(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, threshold: Double, nBands: Int, rowsPerBand: Int): DataFrame =
+    verifyJaccard(
+      selfCandidates(md5Bands(df, textCol, shingleN, nBands, rowsPerBand, col(idCol)),
+        idCol, threshold),
+      foldedSets(df, idCol, textCol, shingleN, "a"),
+      foldedSets(df, idCol, textCol, shingleN, "b"), threshold)
 
   /**
    * Cross-corpus fuzzy join (record linkage / entity resolution): MinHash-
    * banded candidate pairs BETWEEN two tables, verified with the exact
    * shingle-set Jaccard. The two-table sibling of [[minhashLshPairsMd5]]
-   * — same engine-portable md5 band keys ([[md5BandKeys]], so both sides
+   * — same engine-portable md5 band keys ([[md5Bands]], so both sides
    * band identically no matter which table a document lives in), same
-   * band-bucket equi-join discipline, but left ⋈ right instead of a
-   * self-join and no id ordering filter (ids come from different key
-   * spaces).
+   * band-bucket equi-join, but left ⋈ right instead of a self-join and no
+   * id ordering filter (ids come from different key spaces).
    *
    * This is the "which of these 10M new crawl docs already exist in the
    * 10B-doc corpus" / "link these two entity tables on fuzzy names" shape:
    * candidate volume is band-governed (linear in bucket sizes, never
-   * |L|×|R|), exchanges carry only (band, 8-byte key, id) until the
-   * verify, and the 60-bit-folded shingle sets ([[foldedShingleSet]])
-   * re-attach by id once per side — the same exchange-bytes argument as
-   * [[minhashLshPairs]]. When one side is dimension-sized its banded
-   * form broadcasts under AQE automatically.
+   * |L|×|R|). When one side is dimension-sized its banded form
+   * broadcasts under AQE automatically.
    */
   def crossCorpusPairsMd5(
       left: DataFrame, leftId: String, leftText: String,
       right: DataFrame, rightId: String, rightText: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.GraftExtensions.register(left.sparkSession)
-    val rowsPerBand = numHashes / bands
-    def prep(df: DataFrame, id: String, text: String, outId: String, outSh: String) =
-      df.select(col(id).as(outId),
-        array_distinct(Text.shingles(col(text), shingleN)).as(outSh))
-    def banded(prepped: DataFrame, id: String, sh: String, sz: String) =
-      prepped.withColumn("__dg__", shingleDigests(col(sh)))
-        .select(col(id), size(col(sh)).as(sz),
-          posexplode(md5BandKeysFromDigests(col("__dg__"), bands, rowsPerBand)))
-        .withColumnRenamed("pos", "__band__")
-        .withColumnRenamed("col", "__key__")
-        .select(col(id), col(sz), col("__band__"), col("__key__"))
-    val lp = prep(left, leftId, leftText, "id_l", "__shl__")
-    val rp = prep(right, rightId, rightText, "id_r", "__shr__")
-    val candidates = banded(lp, "id_l", "__shl__", "sz_l")
-      .join(banded(rp, "id_r", "__shr__", "sz_r"), Seq("__band__", "__key__"))
-      // stage-1 verify ([[sizeRatioBound]]): exact, recall-free cull
-      // before the distinct exchange and the folded-set attach
-      .filter(sizeRatioBound(col("sz_l"), col("sz_r")) >= threshold)
-      .select("id_l", "id_r")
-      .distinct()
-    // Folded verify payload — [[foldedShingleSet]] for the argument.
-    val lh = left.select(col(leftId).as("id_l"),
-      foldedShingleSet(col(leftText), shingleN).as("__hl__"))
-    val rh = right.select(col(rightId).as("id_r"),
-      foldedShingleSet(col(rightText), shingleN).as("__hr__"))
-    candidates
-      .join(lh, Seq("id_l"))
-      .join(rh, Seq("id_r"))
-      .select(col("id_l"), col("id_r"),
-        (size(array_intersect(col("__hl__"), col("__hr__"))).cast("double") /
-          size(array_union(col("__hl__"), col("__hr__"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val r = rowsPerBand(numHashes, bands)
+    def side(df: DataFrame, id: String, text: String, s: String) =
+      bandSide(md5Bands(df, text, shingleN, bands, r, col(id)), id, s)
+    verifyJaccard(
+      bandCandidates(side(left, leftId, leftText, "l")
+        .join(side(right, rightId, rightText, "r"), Seq("__band__", "__key__")),
+        "l", "r", threshold),
+      foldedSets(left, leftId, leftText, shingleN, "l"),
+      foldedSets(right, rightId, rightText, shingleN, "r"), threshold)
   }
 
   /**
@@ -411,8 +415,7 @@ object Dedup {
    * bands); [[linkAgainstIndex]] bands only the BATCH side, joins it to
    * the index on (band, key), and verifies candidates with the exact
    * shingle-set Jaccard — corpus text is touched only for the matched
-   * candidate ids (one id-equi-join against the corpus scan, which at
-   * scale prunes to the candidate set via DPP/broadcast).
+   * candidate ids.
    *
    * Identity pinned in DedupSpec: linkAgainstIndex(batch, index(corpus))
    * ≡ crossCorpusPairsMd5(batch, corpus) — the index is a pure
@@ -420,54 +423,28 @@ object Dedup {
    */
   def writeBandIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4): Unit = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
-    corpus.select(col(idCol),
-      array_distinct(Text.shingles(col(textCol), shingleN)).as("__sh__"))
-      .withColumn("__dg__", shingleDigests(col("__sh__")))
-      .select(col(idCol).as("id_r"),
-        posexplode(md5BandKeysFromDigests(col("__dg__"), bands, numHashes / bands)))
-      .withColumnRenamed("pos", "__band__")
-      .withColumnRenamed("col", "__key__")
+      bands: Int = 4): Unit =
+    md5Bands(corpus, textCol, shingleN, bands, rowsPerBand(numHashes, bands),
+      col(idCol).as("id_r"))
+      .drop("__sz__")
       .write.mode("overwrite").partitionBy("__band__").parquet(path)
-  }
 
   /** Link a new batch against a [[writeBandIndex]] output. `corpus` must
     * be the table the index was built from (its text re-attaches by id
     * for the exact-Jaccard verify of matched candidates only). Same
     * (shingleN, numHashes, bands) as the index build — the caller owns
-    * that contract, exactly as with any persisted index.
-    *
-    * Note: the stage-1 size-ratio cull ([[sizeRatioBound]]) does NOT run
-    * here — the persisted index carries only (band, key, id), and adding
-    * a size column is an index-format version bump we don't take for a
-    * path whose verify is already candidate-driven (O(matched), not
-    * O(corpus)); the exact verify below filters the same pairs one join
-    * later. */
+    * that contract, exactly as with any persisted index. The size-ratio
+    * cull does not run here ([[indexCandidates]]); the exact verify
+    * filters the same pairs one join later. */
   def linkAgainstIndex(batch: DataFrame, batchId: String, batchText: String,
       indexPath: String, corpus: DataFrame, corpusId: String,
       corpusText: String, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.GraftExtensions.register(batch.sparkSession)
-    val spark = batch.sparkSession
-    val lp = batch.select(col(batchId).as("id_l"),
-      array_distinct(Text.shingles(col(batchText), shingleN)).as("__shl__"))
-    val bandedL = lp.withColumn("__dg__", shingleDigests(col("__shl__")))
-      .select(col("id_l"),
-        posexplode(md5BandKeysFromDigests(col("__dg__"), bands, numHashes / bands)))
-      .withColumnRenamed("pos", "__band__")
-      .withColumnRenamed("col", "__key__")
-    val index = spark.read.parquet(indexPath)
-      // partitionBy wrote __band__ as a partition column (int), __key__
-      // stays binary; select in join-key order
-      .select(col("id_r"), col("__band__").cast("int"), col("__key__"))
     // localCheckpoint: candidates feed TWO branches (the id semi-join
     // below and the final verify join) — without it the narrow index
     // scan + band join would re-run per branch
-    val candidates = bandedL.join(index, Seq("__band__", "__key__"))
-      .select("id_l", "id_r")
+    val candidates = indexCandidates(batch, batchId, batchText,
+      batch.sparkSession.read.parquet(indexPath), shingleN, numHashes, bands)
       .distinct()
       .localCheckpoint()
     // Verify is candidate-driven: semi-join the corpus on the matched ids
@@ -482,21 +459,10 @@ object Dedup {
     // the scan is IO-bound and filter-pushed either way, never
     // shingle-CPU-bound.
     val candIds = candidates.select(col("id_r")).distinct()
-    // Folded verify payloads on both sides ([[foldedShingleSet]]) — the
-    // corpus side additionally shingles only the candidate-matched docs.
-    val rp = corpus
-      .join(candIds, corpus(corpusId) === candIds("id_r"), "left_semi")
-      .select(col(corpusId).as("id_r"),
-        foldedShingleSet(col(corpusText), shingleN).as("__hr__"))
-    val lh = batch.select(col(batchId).as("id_l"),
-      foldedShingleSet(col(batchText), shingleN).as("__hl__"))
-    candidates
-      .join(lh, Seq("id_l"))
-      .join(rp, Seq("id_r"))
-      .select(col("id_l"), col("id_r"),
-        (size(array_intersect(col("__hl__"), col("__hr__"))).cast("double") /
-          size(array_union(col("__hl__"), col("__hr__"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(candidates,
+      foldedSets(batch, batchId, batchText, shingleN, "l"),
+      foldedSets(corpus.join(candIds, corpus(corpusId) === candIds("id_r"), "left_semi"),
+        corpusId, corpusText, shingleN, "r"), threshold)
   }
 
   /** Edit-distance-verified near-dup pairs: MinHash-banded candidate
@@ -596,7 +562,7 @@ object Dedup {
     *
     * Exchanges carry id/bucket columns only (table join + pair distinct);
     * the embedding vectors re-attach by id just before the exact-cosine
-    * verify — see [[minhashLshPairs]] for the rationale. */
+    * verify — the exchange discipline of the MinHash steps above. */
   def embeddingPairsLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int = 6, nTables: Int = 8): DataFrame = {
     val vecs = df.select(col(idCol), col(vecCol))

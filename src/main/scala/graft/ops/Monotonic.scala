@@ -33,7 +33,7 @@ object Monotonic {
     * within-partition sort leaves tied rows in arbitrary relative
     * order, so the inc/dec verdict on valueCol could vary run-to-run. */
   def check(df: DataFrame, orderCol: String, valueCol: String): (Boolean, Boolean) = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val n = shufflePartitions(df.sparkSession)
     // alias both sides — orderCol may BE valueCol (series case)
     val projected = df.select(
       col(orderCol).cast("double").as("__ord__"),

@@ -48,7 +48,7 @@ object RollingBlocks {
     require(window >= 1, s"window must be >= 1: $window")
     val minP = minPeriods.getOrElse(window)
     val ordered = RowOrder.withRowOrder(df, order)
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toLong
+    val parts = shufflePartitions(df.sparkSession).toLong
     // size blocks off the materialized count (a cheap metadata read on the
     // checkpointed frame) so parallelism survives even tiny shuffle confs.
     // ~4 blocks per partition (not 1): with exactly `parts` block ids
@@ -153,7 +153,7 @@ object RollingBlocks {
     val us = unix_micros(col(tsCol).cast("timestamp"))
     val winUs = windowSec * 1000000L
 
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toLong
+    val parts = shufflePartitions(df.sparkSession).toLong
     // ~4 time blocks per partition, same balls-in-bins smoothing as
     // rollingAgg's row blocks
     val blockUs = blockDurationSec.map(_ * 1000000L).getOrElse {

@@ -28,7 +28,7 @@ object RowOrder {
 
   def withRowOrder(df: DataFrame, order: Seq[SortKey], numPartitions: Option[Int] = None): DataFrame = {
     val sortCols = order.map(_.toColumn)
-    val n = numPartitions.getOrElse(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val n = numPartitions.getOrElse(shufflePartitions(df.sparkSession))
     val sorted = df.repartitionByRange(n, sortCols: _*).sortWithinPartitions(sortCols: _*)
 
     // The cache freezes the sampled range partitioning so job 1's offsets

@@ -166,8 +166,7 @@ object Scale {
     require(zCols.nonEmpty, "writeZOrdered: need at least one column")
     require(bitsPerDim >= 1 && zCols.size * bitsPerDim <= 63,
       s"writeZOrdered: ${zCols.size} dims x $bitsPerDim bits must fit a positive long")
-    val n = numFiles.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val n = numFiles.getOrElse(shufflePartitions(df.sparkSession))
     val boundaries = zBoundaries(df, zCols, bitsPerDim)
     val bucketNames = zCols.indices.map(d => s"__zb${d}__")
     // the synthetic bucket/z names must not shadow a real input column:

@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /**
  * SparkSessionExtensions entry point: registers graft's native Catalyst
@@ -13,115 +14,59 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *     at session build time (the production path);
  *   - [[GraftExtensions.register]] on a live session (tests, notebooks).
  *
- * After either, `graft_simhash(array<string>) -> bigint` is callable
- * from SQL and via `call_function("graft_simhash", col)`.
+ * Both read the one function table in the companion, so a function has
+ * the same expression, arity check and error message on either path. After
+ * either, `graft_simhash(array<string>) -> bigint` is callable from SQL
+ * and via `call_function("graft_simhash", col)`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.simhashDescriptor)
-    ext.injectFunction(GraftExtensions.cosineDescriptor)
-    ext.injectFunction(GraftExtensions.bandKeysDescriptor)
-    ext.injectFunction(GraftExtensions.lshXxDescriptor)
-    ext.injectFunction(GraftExtensions.lshMd5Descriptor)
-    ext.injectFunction(GraftExtensions.pqEncodeDescriptor)
-    ext.injectFunction(GraftExtensions.pqAdcDescriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => SelfCosineRule)
   }
 }
 
 object GraftExtensions {
-  private val simhashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "graft_simhash(tokens) takes one argument")
-      SimHash64(children.head)
+  /** One native function from its SQL signature: the name and the arity
+    * check (with its message) derive from `signature`, so `build` always
+    * sees exactly as many children as the signature names. */
+  private def fn(signature: String, impl: Class[_])(build: FunctionBuilder)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = {
+    val name = signature.takeWhile(_ != '(')
+    val arity = signature.count(_ == ',') + 1
+    val args = Seq("one argument", "two arguments", "three arguments")(arity - 1)
+    (FunctionIdentifier(name), new ExpressionInfo(impl.getName, name), children => {
+      require(children.length == arity, s"$signature takes $args")
+      build(children)
     })
-
-  /** graft_band_keys(digests, nBands, rowsPerBand) — the two counts must
-    * be integer literals (they shape the generated kernel). */
-  private def buildBandKeys(children: Seq[Expression]): Expression = {
-    require(children.length == 3,
-      "graft_band_keys(digests, nBands, rowsPerBand) takes three arguments")
-    def litInt(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_band_keys: $what must be an integer literal, got $other")
-    }
-    LaneMinBandKeys(children.head,
-      litInt(children(1), "nBands"), litInt(children(2), "rowsPerBand"))
   }
 
-  private val bandKeysDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_band_keys"),
-    new ExpressionInfo(classOf[LaneMinBandKeys].getName, "graft_band_keys"),
-    (children: Seq[Expression]) => buildBandKeys(children))
-
-  /** graft_lsh_xx / graft_lsh_md5 (vec, nPlanes, planeOffset) — the two
-    * counts must be integer literals (they shape and memoize the kernel's
-    * plane table). */
-  private def buildLshBucket(md5: Boolean)(children: Seq[Expression]): Expression = {
-    val name = if (md5) "graft_lsh_md5" else "graft_lsh_xx"
-    require(children.length == 3,
-      s"$name(vec, nPlanes, planeOffset) takes three arguments")
-    def litInt(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$name: $what must be an integer literal, got $other")
-    }
-    LshBucketKernel(children.head,
-      litInt(children(1), "nPlanes"), litInt(children(2), "planeOffset"), md5)
+  /** The count arguments of the band-key and LSH kernels must be integer
+    * literals: they shape the generated kernel (and memoize its tables). */
+  private def litInt(name: String, e: Expression, what: String): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$name: $what must be an integer literal, got $other")
   }
 
-  private val lshXxDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_lsh_xx"),
-    new ExpressionInfo(classOf[LshBucketKernel].getName, "graft_lsh_xx"),
-    (children: Seq[Expression]) => buildLshBucket(md5 = false)(children))
+  private def lshBucket(name: String, md5: Boolean): FunctionBuilder = c =>
+    LshBucketKernel(c(0), litInt(name, c(1), "nPlanes"), litInt(name, c(2), "planeOffset"), md5)
 
-  private val lshMd5Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_lsh_md5"),
-    new ExpressionInfo(classOf[LshBucketKernel].getName, "graft_lsh_md5"),
-    (children: Seq[Expression]) => buildLshBucket(md5 = true)(children))
-
-  private val pqEncodeDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_pq_encode"),
-    new ExpressionInfo(classOf[PqEncodeKernel].getName, "graft_pq_encode"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "graft_pq_encode(vec, cbs) takes two arguments")
-      PqEncodeKernel(children(0), children(1))
-    })
-
-  private val pqAdcDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_pq_adc"),
-    new ExpressionInfo(classOf[PqAdcKernel].getName, "graft_pq_adc"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "graft_pq_adc(codes, lut) takes two arguments")
-      PqAdcKernel(children(0), children(1))
-    })
-
-  private val cosineDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cosine"),
-    new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "graft_cosine(a, b) takes two arguments")
-      CosineSim(children(0), children(1))
-    })
+  private[plans] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_simhash(tokens)", classOf[SimHash64])(c => SimHash64(c(0))),
+    fn("graft_cosine(a, b)", classOf[CosineSim])(c => CosineSim(c(0), c(1))),
+    fn("graft_band_keys(digests, nBands, rowsPerBand)", classOf[LaneMinBandKeys])(c =>
+      LaneMinBandKeys(c(0), litInt("graft_band_keys", c(1), "nBands"),
+        litInt("graft_band_keys", c(2), "rowsPerBand"))),
+    fn("graft_lsh_xx(vec, nPlanes, planeOffset)", classOf[LshBucketKernel])(
+      lshBucket("graft_lsh_xx", md5 = false)),
+    fn("graft_lsh_md5(vec, nPlanes, planeOffset)", classOf[LshBucketKernel])(
+      lshBucket("graft_lsh_md5", md5 = true)),
+    fn("graft_pq_encode(vec, cbs)", classOf[PqEncodeKernel])(c => PqEncodeKernel(c(0), c(1))),
+    fn("graft_pq_adc(codes, lut)", classOf[PqAdcKernel])(c => PqAdcKernel(c(0), c(1))))
 
   /** Register on an already-built session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", children => SimHash64(children.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", children => CosineSim(children(0), children(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_band_keys", buildBandKeys, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_xx", buildLshBucket(md5 = false), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_md5", buildLshBucket(md5 = true), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode", children => PqEncodeKernel(children(0), children(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc", children => PqAdcKernel(children(0), children(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = functions.foreach { case (id, info, build) =>
+    spark.sessionState.functionRegistry.registerFunction(id, info, build)
   }
 }

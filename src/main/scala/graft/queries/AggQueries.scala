@@ -47,9 +47,9 @@ object AggQueries {
                round(sum(l_quantity), 2) AS sum_qty,
                round(CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS DECIMAL(18,0))) AS DOUBLE)
                      / 100.0, 2) AS sum_base_price,
-               round(CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS DECIMAL(18,0))
+               CAST(round(CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS DECIMAL(18,0))
                                * (100 - CAST(floor(l_discount * 100 + 0.5) AS DECIMAL(18,0))))
-                          AS DOUBLE) / 10000.0, 2) AS sum_disc_price,
+                          AS DECIMAL(38,0)) * 0.0001, 2) AS DOUBLE) AS sum_disc_price,
                round(avg(l_quantity), 4) AS avg_qty,
                round(avg(l_extendedprice), 4) AS avg_price,
                round(avg(l_discount), 6) AS avg_disc,

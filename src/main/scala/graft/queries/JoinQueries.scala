@@ -36,9 +36,9 @@ object JoinQueries {
         .sortValues(Seq(SortKey.asc("p_brand"))).df,
       Some("""
         SELECT p_brand,
-               round(CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS DECIMAL(18,0))
+               CAST(round(CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS DECIMAL(18,0))
                                * (100 - CAST(floor(l_discount * 100 + 0.5) AS DECIMAL(18,0))))
-                          AS DOUBLE) / 10000.0, 2) AS revenue,
+                          AS DECIMAL(38,0)) * 0.0001, 2) AS DOUBLE) AS revenue,
                count(*) AS n
         FROM lineitem JOIN part ON l_partkey = p_partkey
         GROUP BY p_brand ORDER BY p_brand"""),

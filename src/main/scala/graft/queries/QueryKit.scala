@@ -59,14 +59,25 @@ object QueryKit {
     * GROUP in decimal — exact, permutation-invariant, and good to ~2^43
     * rows per group (the low-word sum is the binding constraint). The
     * per-row path stays in primitive codegen; the only decimal op is the
-    * per-group recombine. Oracle twin: any exact integer sum of
-    * `floor(p*100+0.5) * (100 - floor(d*100+0.5))` divided by 10000 —
-    * DuckDB's DECIMAL/HUGEINT sum is value-identical by exactness. */
+    * per-group recombine.
+    *
+    * The exact sum has four decimals, so it is rounded to `out` decimals
+    * IN DECIMAL (half away from zero) and converted to double once.
+    * Rounding the double quotient instead rounds whichever binary value
+    * lies nearest a half-cent tie, and the engines disagree there: on
+    * headline seed 55 the exact group sum 269659396.9650 is the double
+    * 269659396.96499997…, which DuckDB's round(double) takes to .96 and
+    * Spark's decimal-string round to .97; past ~15 significant digits
+    * Spark's string form loses the tie as well. Oracle twin:
+    * `CAST(round(CAST(sum(floor(p*100+0.5) * (100 - floor(d*100+0.5)))
+    * AS DECIMAL(38,0)) * 0.0001, 2) AS DOUBLE)` — DuckDB's DECIMAL sum
+    * is exact and its decimal round is half away from zero too. */
   def moneyDiscSum(price: Column, disc: Column, out: Int = 2): Column = {
     val v = floor(price * 100 + 0.5) * (lit(100L) - floor(disc * 100 + 0.5))
     val hi = sum(shiftright(v, 20)).cast("decimal(38,0)")
     val lo = sum(v.bitwiseAND(lit((1L << 20) - 1))).cast("decimal(38,0)")
-    round((hi * lit(1L << 20) + lo).cast("double") / 10000.0, out)
+    round((hi * lit(1L << 20) + lo) * lit(new java.math.BigDecimal("0.0001")), out)
+      .cast("double")
   }
 
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark's

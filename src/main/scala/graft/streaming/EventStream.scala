@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.ops.Dedup
 
 /**
  * Structured Streaming surplus layer (SURVEY §2.14 — the reference has no
@@ -313,10 +314,11 @@ object EventStream {
    * at arrival if it *probably* duplicates something already ingested,
    * without ever joining the stream against the corpus. Stage 1 (this
    * op): each document explodes into its `bands` engine-portable md5 band
-   * keys ([[graft.ops.Dedup.md5BandKeys]] — the SAME expression the batch
-   * pair generator and the DuckDB oracle band with), and keyed state per
-   * (band, key) bucket records the first arrival: the first document to
-   * carry a bucket emits a [[BandClaim]]; later carriers emit nothing.
+   * keys (the batch band step [[graft.ops.Dedup.md5Bands]] — the SAME
+   * keys the batch pair generator and the DuckDB oracle band with), and
+   * keyed state per (band, key) bucket records the first arrival: the
+   * first document to carry a bucket emits a [[BandClaim]]; later
+   * carriers emit nothing.
    * Stage 2 ([[keptFromClaims]]): a document is kept iff it claimed EVERY
    * band — i.e. dropped iff ANY of its band keys was seen on an earlier
    * arrival, the pair-based keep-first rule (collision with an earlier
@@ -341,23 +343,18 @@ object EventStream {
   def nearDupBandClaims(docs: DataFrame, tsCol: String, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       delay: String = "2 hours", horizonSeconds: Long = 7200L): Dataset[BandClaim] = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     import docs.sparkSession.implicits._
-    val rowsPerBand = numHashes / bands
     // cast before the watermark (see sessionizeOoo); the band explode is
     // a narrow projection, so the watermark attribute rides through it
-    val typed = docs
+    val watermarked = docs
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, delay)
-      .withColumn("__sh__",
-        array_distinct(graft.functions.Text.shingles(col(textCol), shingleN)))
-      .withColumn("__dg__", graft.ops.Dedup.shingleDigests(col("__sh__")))
-      .select(col(idCol).cast("long").as("__id__"), col(tsCol).as("__ts__"),
-        posexplode(graft.ops.Dedup.md5BandKeysFromDigests(col("__dg__"), bands, rowsPerBand)))
+    val typed = Dedup.md5Bands(watermarked, textCol, shingleN, bands,
+        Dedup.rowsPerBand(numHashes, bands),
+        col(idCol).cast("long").as("__id__"), col(tsCol).as("__ts__"))
       .select(
-        concat_ws(":", col("pos").cast("string"), hex(col("col"))).as("_1"),
-        col("__id__").as("_2"), col("pos").cast("int").as("_3"), col("__ts__").as("_4"))
+        concat_ws(":", col("__band__").cast("string"), hex(col("__key__"))).as("_1"),
+        col("__id__").as("_2"), col("__band__").cast("int").as("_3"), col("__ts__").as("_4"))
       .as[(String, Long, Int, java.sql.Timestamp)]
     typed.groupByKey(_._1)
       .flatMapGroupsWithState[Boolean, BandClaim](
@@ -386,15 +383,15 @@ object EventStream {
 
   /**
    * Stream-static incremental linkage (stage 1) — the ingestion-side twin
-   * of [[graft.ops.Dedup.linkAgainstIndex]]: each arriving document bands
-   * map-side into its engine-portable md5 band keys
-   * ([[graft.ops.Dedup.md5BandKeys]] — identical to the batch generator
-   * and the persisted index) and equi-joins the PERSISTED band index
-   * ([[graft.ops.Dedup.writeBandIndex]] output, loaded as a static
-   * DataFrame). A stream-static inner join is STATELESS — no watermark,
-   * no state store; per-micro-batch cost is O(batch + matched buckets),
-   * never O(corpus) — so this is the "is this arriving doc already in
-   * the 10B-doc corpus" probe that runs at ingestion rate.
+   * of [[graft.ops.Dedup.linkAgainstIndex]], and the same step
+   * ([[graft.ops.Dedup.indexCandidates]]): each arriving document bands
+   * map-side into its engine-portable md5 band keys and equi-joins the
+   * PERSISTED band index ([[graft.ops.Dedup.writeBandIndex]] output,
+   * loaded as a static DataFrame). A stream-static inner join is
+   * STATELESS — no watermark, no state store; per-micro-batch cost is
+   * O(batch + matched buckets), never O(corpus) — so this is the "is
+   * this arriving doc already in the 10B-doc corpus" probe that runs at
+   * ingestion rate.
    *
    * Emits (id_l, id_r) candidate hits, possibly repeated when several
    * bands collide for one pair (streaming `distinct` would need
@@ -404,45 +401,21 @@ object EventStream {
    */
   def linkClaimsAgainstIndex(docs: DataFrame, idCol: String, textCol: String,
       index: DataFrame, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
-    val banded = docs
-      .withColumn("__sh__",
-        array_distinct(graft.functions.Text.shingles(col(textCol), shingleN)))
-      .withColumn("__dg__", graft.ops.Dedup.shingleDigests(col("__sh__")))
-      .select(col(idCol).as("id_l"),
-        posexplode(graft.ops.Dedup.md5BandKeysFromDigests(col("__dg__"), bands, numHashes / bands)))
-      .withColumnRenamed("pos", "__band__")
-      .withColumnRenamed("col", "__key__")
-    banded.join(
-      index.select(col("id_r"), col("__band__").cast("int"), col("__key__")),
-      Seq("__band__", "__key__"))
-      .select(col("id_l"), col("id_r"))
-  }
+      bands: Int = 4): DataFrame =
+    Dedup.indexCandidates(docs, idCol, textCol, index, shingleN, numHashes, bands)
 
   /** Stage-2 finisher over accumulated [[linkClaimsAgainstIndex]] hits (a
-    * batch job over the sink): dedupe candidate pairs, re-attach both
-    * sides' FOLDED shingle sets by id (60-bit md5 folds — 8 B/shingle
-    * across the verify exchange; exactness argument at
-    * [[graft.ops.Dedup.foldedShingleSet]]), keep pairs at or above the
-    * exact-Jaccard threshold — byte-identical semantics to the batch
+    * batch job over the sink): dedupe candidate pairs, then the batch
+    * verify step ([[graft.ops.Dedup.verifyJaccard]] over folded shingle
+    * sets) — byte-identical semantics to the batch
     * [[graft.ops.Dedup.linkAgainstIndex]]. */
   def linksFromClaims(claims: DataFrame,
       batch: DataFrame, batchId: String, batchText: String,
       corpus: DataFrame, corpusId: String, corpusText: String,
-      shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
-    def hs(df: DataFrame, id: String, text: String, outId: String, outHs: String) =
-      df.select(col(id).as(outId),
-        graft.ops.Dedup.foldedShingleSet(col(text), shingleN).as(outHs))
-    claims.distinct()
-      .join(hs(batch, batchId, batchText, "id_l", "__hl__"), Seq("id_l"))
-      .join(hs(corpus, corpusId, corpusText, "id_r", "__hr__"), Seq("id_r"))
-      .select(col("id_l"), col("id_r"),
-        (size(array_intersect(col("__hl__"), col("__hr__"))).cast("double") /
-          size(array_union(col("__hl__"), col("__hr__"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      shingleN: Int = 3, threshold: Double = 0.5): DataFrame =
+    Dedup.verifyJaccard(claims.distinct(),
+      Dedup.foldedSets(batch, batchId, batchText, shingleN, "l"),
+      Dedup.foldedSets(corpus, corpusId, corpusText, shingleN, "r"), threshold)
 
   /** Stage-2 finisher over accumulated [[BandClaim]]s (a batch aggregate —
     * run it per sink table or inside foreachBatch): a document survives

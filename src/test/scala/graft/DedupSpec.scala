@@ -417,4 +417,76 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaIndex == direct && viaIndex.nonEmpty, s"index=$viaIndex direct=$direct")
   }
+
+  test("every MinHash pair generator reports the exact Jaccard of a plain-Scala reference") {
+    // Independent reference: Text.shingles' semantics written out in plain
+    // Scala (lowercase, whitespace tokens, space-joined n-grams, a doc
+    // shorter than n is one shingle, distinct) and the exact set Jaccard.
+    // The parity specs compare one generator with another; this one pins
+    // every generator to a value computed without Spark.
+    val n = 2
+    val t = 0.3
+    def shingleSet(text: String): Set[String] = {
+      val w = text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSeq
+      if (w.size >= n) w.sliding(n).map(_.mkString(" ")).toSet else Set(w.mkString(" "))
+    }
+    val rows = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog near the river bank",
+      2L -> "The  quick brown fox jumps over the lazy dog near the river   bank",
+      3L -> "the quick brown fox jumps over the lazy cat near the river bank",
+      4L -> "the quick brown fox leaps over the lazy dog near the river bank",
+      5L -> "a completely unrelated sentence about cooking pasta with garlic and oil",
+      6L -> "a completely unrelated sentence about cooking pasta with garlic and oil",
+      7L -> "stock markets rallied today as investors cheered the earnings reports",
+      8L -> "stock markets rallied today as investors cheered the strong earnings reports",
+      9L -> "hello",
+      10L -> "HELLO",
+      11L -> "rain rain rain go away come again another day",
+      12L -> "rain rain go away come again another day",
+      13L -> "winter is coming",
+      14L -> "the quick brown fox jumps over the lazy dog near the river bank")
+    val sets = rows.map { case (id, text) => id -> shingleSet(text) }.toMap
+    def ref(a: Long, b: Long): Double =
+      (sets(a) intersect sets(b)).size.toDouble / (sets(a) union sets(b)).size
+    def check(name: String, df: org.apache.spark.sql.DataFrame,
+        candidates: Seq[(Long, Long)]): Unit = {
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      got.foreach { case ((a, b), j) =>
+        assert(math.abs(j - ref(a, b)) <= 1e-12, s"$name ($a,$b): $j vs ${ref(a, b)}")
+        assert(j >= t, s"$name ($a,$b): $j below threshold")
+      }
+      // identical sets collide in every band, so they are always reported
+      val identical = candidates.filter { case (a, b) => ref(a, b) == 1.0 }
+      assert(identical.nonEmpty, s"$name: fixture needs identical pairs")
+      identical.foreach(p => assert(got.contains(p), s"$name missed identical pair $p"))
+    }
+    val d = docs(rows: _*)
+    val ids = rows.map(_._1)
+    val selfPairs = for (a <- ids; b <- ids if a < b) yield (a, b)
+    check("minhashLshPairs", Dedup.minhashLshPairs(d, "id", "text",
+      shingleN = n, numHashes = 16, bands = 4, threshold = t), selfPairs)
+    check("jaccardPairs", Dedup.jaccardPairs(d, "id", "text",
+      shingleN = n, threshold = t), selfPairs)
+    check("minhashLshPairsMd5", Dedup.minhashLshPairsMd5(d, "id", "text",
+      shingleN = n, numHashes = 16, bands = 4, threshold = t), selfPairs)
+
+    val batch = d.filter(col("id") % 2 === 0)
+    val corpus = d.filter(col("id") % 2 === 1)
+    val crossPairs = for (l <- ids if l % 2 == 0; r <- ids if r % 2 == 1) yield (l, r)
+    check("crossCorpusPairsMd5", Dedup.crossCorpusPairsMd5(batch, "id", "text",
+      corpus, "id", "text", shingleN = n, numHashes = 16, bands = 4, threshold = t),
+      crossPairs)
+    val path = java.nio.file.Files.createTempDirectory("graft_bandidx_ref")
+      .resolve("idx").toString
+    Dedup.writeBandIndex(corpus, "id", "text", path,
+      shingleN = n, numHashes = 16, bands = 4)
+    check("linkAgainstIndex", Dedup.linkAgainstIndex(batch, "id", "text", path,
+      corpus, "id", "text", shingleN = n, numHashes = 16, bands = 4, threshold = t),
+      crossPairs)
+    val claims = graft.streaming.EventStream.linkClaimsAgainstIndex(batch, "id", "text",
+      spark.read.parquet(path), shingleN = n, numHashes = 16, bands = 4)
+    check("linksFromClaims", graft.streaming.EventStream.linksFromClaims(claims,
+      batch, "id", "text", corpus, "id", "text", shingleN = n, threshold = t),
+      crossPairs)
+  }
 }

@@ -36,11 +36,28 @@ class GraftExtensionsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
     s
   }
 
+  // A session built WITHOUT the extensions, the functions added by
+  // `register`. Forced in beforeAll, before `extSpark` becomes the
+  // default session, so SparkSuite's getOrCreate cannot hand back the
+  // extension-built one; a newSession starts from the builtin registry.
+  private lazy val registeredSpark: SparkSession = {
+    val s = SparkSuite.session.newSession()
+    assert(!s.catalog.functionExists("graft_simhash"), "session already carries graft functions")
+    graft.plans.GraftExtensions.register(s)
+    s
+  }
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    registeredSpark
+  }
+
   override def afterAll(): Unit = {
-    // un-register this session so a later SparkSuite.session getOrCreate
-    // builds its own (extension-free) session rather than reusing ours
+    // un-register this session and hand the default back to the shared
+    // (extension-free) test session, which beforeAll has built: a later
+    // suite's getOrCreate or SparkSession.active must not reach ours
     SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    SparkSession.setDefaultSession(SparkSuite.session)
     super.afterAll()
   }
 
@@ -79,5 +96,26 @@ class GraftExtensionsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
       "SELECT graft_cosine(CAST(NULL AS ARRAY<FLOAT>), CAST(NULL AS ARRAY<FLOAT>)) AS c")
       .head()
     assert(r.isNullAt(0))
+  }
+
+  test("register() enforces the same arity checks and messages as the extensions") {
+    def message(s: SparkSession, call: String): String = {
+      val e = intercept[Exception](s.sql(s"SELECT $call AS x").collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i.getMessage }
+        .getOrElse(fail(s"$call raised no IllegalArgumentException: $e"))
+    }
+    Seq(
+      "graft_simhash(array('a'), array('b'))",
+      "graft_cosine(array(1.0F))",
+      "graft_band_keys(array('a'), 4)",
+      "graft_lsh_xx(array(1.0F), 4)",
+      "graft_lsh_md5(array(1.0F), 4, 0, 1)",
+      "graft_pq_encode(array(1.0F))",
+      "graft_pq_adc(array(1), array(1.0F), 3)").foreach { call =>
+      val ext = message(extSpark, call)
+      assert(ext.contains("takes"), s"$call: $ext")
+      assert(message(registeredSpark, call) == ext, call)
+    }
   }
 }

@@ -84,4 +84,29 @@ class QueryKitSpec extends SparkSuite {
       assert(back.collect().map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("x", 7)))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
+
+  test("moneyDiscSum rounds the exact unit sum half away from zero at half-cent ties") {
+    import spark.implicits._
+    // Every group's exact sum of cents × (100 − discount bp) ends in 50:
+    // a half-cent tie after dividing by 10^4. "seed55" is the small
+    // shape headline seed 55 hit in q01 (DuckDB's round of the double
+    // went down, the exact rounding goes up); "large" puts the tie
+    // 8796093022208.0050 past 15 significant digits, where the nearest
+    // double is 8796093022208.0039 and rounding it lands on .00, not .01.
+    val rows = Seq(
+      ("seed55", 10.01, 0.5),
+      ("negative", -10.01, 0.5),
+      ("large", 17592186044416.01, 0.5))
+    val got = rows.toDF("g", "price", "disc").groupBy("g")
+      .agg(QueryKit.moneyDiscSum(col("price"), col("disc")).as("s"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    rows.groupBy(_._1).foreach { case (g, rs) =>
+      val units = rs.map { case (_, p, d) =>
+        BigInt(math.floor(p * 100 + 0.5).toLong) * (100 - math.floor(d * 100 + 0.5).toLong)
+      }.sum
+      assert(units.abs % 100 == 50, s"$g: fixture sum $units is not a half-cent tie")
+      val exact = (BigDecimal(units) / 10000).setScale(2, BigDecimal.RoundingMode.HALF_UP)
+      assert(got(g) == exact.toDouble, s"$g: ${got(g)} vs exact $exact")
+    }
+  }
 }
