@@ -33,11 +33,22 @@ class ExcelSpec extends SparkSuite {
 
   test("to_excel enforces the single-workbook row cap") {
     import spark.implicits._
+    import graft.sources.{Html, SasXport, Spss, Stata}
     val df = (1 to 100).toDF("n")
-    val f = java.io.File.createTempFile("graft_xl_cap", ".xlsx")
-    f.deleteOnExit()
-    intercept[IllegalArgumentException] {
-      Excel.write(df, f.getAbsolutePath, maxRows = 50)
+    // every single-file writer shares the cap: over it fails, at it writes
+    val writers: Seq[(String, (String, Int) => Unit)] = Seq(
+      ".xlsx" -> ((p, m) => Excel.write(df, p, maxRows = m)),
+      ".html" -> ((p, m) => Html.write(df, p, maxRows = m)),
+      ".dta" -> ((p, m) => Stata.write(df, p, maxRows = m)),
+      ".sav" -> ((p, m) => Spss.write(df, p, maxRows = m)),
+      ".xpt" -> ((p, m) => SasXport.write(df, p, maxRows = m)))
+    writers.foreach { case (ext, write) =>
+      val f = java.io.File.createTempFile("graft_cap", ext)
+      f.deleteOnExit()
+      val e = intercept[IllegalArgumentException](write(f.getAbsolutePath, 50))
+      assert(e.getMessage.contains("cap 50"), ext)
+      write(f.getAbsolutePath, 100)
+      assert(f.length() > 0, ext)
     }
   }
 
@@ -171,11 +182,16 @@ class ExcelSpec extends SparkSuite {
       new java.io.File(dir, "a.xlsx").getAbsolutePath)
     Excel.write(Seq(("c", 3L, 9.5)).toDF("s", "id", "extra"),
       new java.io.File(dir, "b.xlsx").getAbsolutePath)
+    // a number/text clash: c's `s` infers double, and the merged string
+    // column renders a whole double as "3" (pandas' object column), not "3.0"
+    Excel.write(Seq((4L, 3.0), (5L, 2.5)).toDF("id", "s"),
+      new java.io.File(dir, "c.xlsx").getAbsolutePath)
     val df = Excel.read(spark, dir.getAbsolutePath)
     assert(df.columns.toSeq == Seq("id", "s", "extra"))
     val got = df.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)))).toSeq
-    assert(got == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(9.5))))
+    assert(got == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(9.5)),
+      (4L, "3", None), (5L, "2.5", None)))
   }
 
   test("duplicate row indices fail loudly instead of last-one-wins dropping data") {
