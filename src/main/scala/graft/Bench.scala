@@ -107,47 +107,29 @@ object ScaleBench {
   private[graft] def selected(op: String): Boolean =
     sys.env.get("SPARK_GRAFT_SCALE_OPS").forall(_.split(",").contains(op))
 
-  /** One op's min-of-2 seconds at 1× and at factor×, and their ratio
-    * divided by the row ratio. */
-  final case class Slope(base: Double, scaled: Double, slope: Double) {
-    def obj: Obj = Obj("base" -> base, "scaled" -> scaled, "slope" -> slope)
-  }
-
-  /** The shared slope loop: warm both dirs' scans, then time every
-    * selected op min-of-2 on each side. Fixed per-op overhead makes
-    * slope < 1 for fast ops, which is fine — only super-linear growth
-    * matters. */
-  private[graft] def slopes(oneDir: String, bigDir: String,
-      warm: String => Seq[DataFrame], ops: Seq[(String, String => DataFrame)],
-      rowRatio: String => Double): Seq[(String, Slope)] = {
-    Seq(oneDir, bigDir).foreach(d => warm(d).foreach(force))
-    ops.filter { case (n, _) => selected(n) }.map { case (name, op) =>
-      def t(dir: String) = BenchKit.timed(2, s"[scale] $name")(force(op(dir))).min
-      val (tb, ts) = (t(oneDir), t(bigDir))
-      name -> Slope(tb, ts, (ts / tb) / rowRatio(name))
-    }
-  }
-
-  /** Prints a scale main's one JSON line: `metric`, the `header` keys, the
-    * per-op rows, the ops whose flag value exceeds `flagAt`, and the
-    * source dir. */
-  private[graft] def emitSlopes(metric: String, header: Seq[(String, Any)],
-      rows: Seq[(String, Obj, Double)], flagAt: Double, source: String): Unit = {
-    val flagged = rows.collect { case (n, _, v) if v > flagAt => n }
-    println(json(Obj(Seq("metric" -> metric) ++ header ++ Seq(
-      "queries" -> Obj(rows.map { case (n, o, _) => n -> o }: _*),
-      "flagged" -> flagged, "base" -> source): _*)))
-  }
-
-  /** [[slopes]] then [[emitSlopes]], flagging slope > 1.5: some stage is
-    * super-linear (all-pairs blowup, driver funnel, single-partition
-    * sort) and would fall over at 1000×. */
+  /** The shared slope loop: warm both dirs' scans, time every selected
+    * op min-of-2 at 1× and at factor×, and print the scale main's one
+    * JSON line — `metric`, the `header` keys, each op's seconds and slope
+    * (time ratio over row ratio), the ops flagged at slope > 1.5, and the
+    * source dir. Fixed per-op overhead makes slope < 1 for fast ops, which
+    * is fine; a flag means some stage is super-linear (all-pairs blowup,
+    * driver funnel, single-partition sort) and would fall over at 1000×. */
   private[graft] def reportSlopes(metric: String, header: Seq[(String, Any)],
       source: String, oneDir: String, bigDir: String,
       warm: String => Seq[DataFrame], ops: Seq[(String, String => DataFrame)],
-      rowRatio: String => Double): Unit =
-    emitSlopes(metric, header, slopes(oneDir, bigDir, warm, ops, rowRatio)
-      .map { case (n, s) => (n, s.obj, s.slope) }, 1.5, source)
+      rowRatio: String => Double): Unit = {
+    Seq(oneDir, bigDir).foreach(d => warm(d).foreach(force))
+    val rows = ops.filter { case (n, _) => selected(n) }.map { case (name, op) =>
+      def t(dir: String) = BenchKit.timed(2, s"[scale] $name")(force(op(dir))).min
+      val (tb, ts) = (t(oneDir), t(bigDir))
+      val slope = (ts / tb) / rowRatio(name)
+      (name, slope, Obj("base" -> tb, "scaled" -> ts, "slope" -> slope))
+    }
+    println(json(Obj(Seq("metric" -> metric) ++ header ++ Seq(
+      "queries" -> Obj(rows.map { case (n, _, o) => n -> o }: _*),
+      "flagged" -> rows.collect { case (n, slope, _) if slope > 1.5 => n },
+      "base" -> source): _*)))
+  }
 
   def main(args: Array[String]): Unit = {
     val (baseDir, f) = (BenchKit.sfDir, factor)
@@ -424,105 +406,6 @@ object ScaleDedupBench {
         "build_slope" -> (bf / b1) / docRatio, "link_base" -> l1,
         "link_scaled" -> lf, "link_ratio" -> lf / l1, "base" -> baseDir)))
     }
-    spark.stop()
-  }
-}
-
-/**
- * Skewed-key slope test: the salted-join and AQE-skew claims, measured.
- * Each workload shape runs twice per dataset — uniform keys vs a zipfian
- * remap (50% of rows funneled onto 10 hot keys) — at 1× and factor×.
- * The verdict metric is skew_slope / uniform_slope: a plan whose skew
- * handling holds keeps the ratio near 1 (hot partitions split under AQE
- * or stay linear per task); a plan that funnels hot keys through one
- * ever-growing task degrades super-linearly and the ratio flags at 2.
- */
-object SkewBench {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
-  import graft.functions.Text
-
-  /** SPARK_GRAFT_SKEW_PLACEBO=1 keeps the skew side's per-row expression
-    * cost (when + xxhash64 + pmod / the dedup concat) but remaps to a
-    * NON-funneling key, isolating expression overhead from true skew:
-    * at high factors the skew-vs-uniform ratio otherwise confounds the
-    * remap expression's CPU (paid on every amplified row) with straggler
-    * effects. pmod(k, Long.MaxValue) is the identity for the fixtures'
-    * non-negative keys at the same expression cost as pmod(k, 10).
-    *
-    * The placebo is not cardinality-neutral for `dedup_groups`: its
-    * remapped half of the corpus gets one unique `dup<doc_id>` text each,
-    * so about 50% of the fingerprints become unique and the group count
-    * changes along with the expression cost. Read that shape's placebo
-    * ratio as expression cost plus a different grouping, not as
-    * expression cost alone. */
-  private[graft] val placebo =
-    sys.env.get("SPARK_GRAFT_SKEW_PLACEBO").contains("1")
-  private val hotMod = if (placebo) Long.MaxValue else 10L
-
-  /** 50% of rows (chosen by content hash) remap to keys 0..9. */
-  private def skewKey(k: Column): Column =
-    when(pmod(xxhash64(k), lit(100)) < 50, pmod(k, lit(hotMod))).otherwise(k)
-
-  def main(args: Array[String]): Unit = {
-    val (baseDir, factor) = (BenchKit.sfDir, ScaleBench.factor)
-    val spark = BenchKit.session()
-    // the join shape must exercise the SHUFFLE path — broadcast would
-    // sidestep the skew entirely and measure nothing
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val bigDir = ScaleBench.ensureAmplified(spark, baseDir, factor)
-
-    def orders(dir: String) = spark.read.parquet(s"$dir/orders.parquet")
-    def lineitem(dir: String) = spark.read.parquet(s"$dir/lineitem.parquet")
-    def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
-
-    val shapes: Seq[(String, (String, Boolean) => DataFrame)] = Seq(
-      // q31's shape: fact-side shuffle join; hot keys all land on order
-      // keys 0..9 (dense TPC-H-ish keys, present in replica 0)
-      "join_shuffle" -> { (dir, skew) =>
-        val l = lineitem(dir).select(col("l_orderkey"), col("l_extendedprice"))
-          .withColumn("k", if (skew) skewKey(col("l_orderkey")) else col("l_orderkey"))
-        val o = orders(dir).select(col("o_orderkey").as("k"), col("o_totalprice"))
-        l.join(o, Seq("k")).select(col("k"), col("l_extendedprice"), col("o_totalprice"))
-      },
-      // q50's shape through the engine's skew-safe path (q216 pins its
-      // semantics to q50's oracle): the hot group splits across range
-      // partitions via Cumulative.groupedRunning instead of serializing
-      // through one window task, so the ratio should hold near 1
-      "window_cumsum" -> { (dir, skew) =>
-        val o = orders(dir)
-        val k = if (skew) skewKey(col("o_custkey")) else col("o_custkey")
-        graft.api.Frame(o.withColumn("k", k))
-          .groupby("k")
-          .cumsumSkewSafe("o_totalprice", "cs",
-            Seq(graft.api.SortKey.asc("o_orderdate"), graft.api.SortKey.asc("o_orderkey")))
-          .df.select(col("o_orderkey"), col("cs"))
-      },
-      // q100's shape: dedup groupBy where half the corpus collapses onto
-      // 10 fingerprints — map-side partial aggregation is the defense
-      "dedup_groups" -> { (dir, skew) =>
-        val d = docs(dir)
-        val text = if (skew)
-          when(pmod(xxhash64(col("doc_id")), lit(100)) < 50,
-            concat(lit("dup"), pmod(col("doc_id"), lit(hotMod)).cast("string")))
-            .otherwise(col("text"))
-        else col("text")
-        d.groupBy(Text.fingerprint(text).as("fingerprint"))
-          .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id"))
-      })
-
-    // each shape's uniform and skew sides, back to back
-    val table = shapes.flatMap { case (n, f) =>
-      Seq(n -> (f(_: String, false)), n -> (f(_: String, true)))
-    }
-    val rows = ScaleBench.slopes(baseDir, bigDir, d => Seq(lineitem(d)), table, _ => factor)
-      .grouped(2).map { case Seq((n, u), (_, s)) =>
-        val r = s.slope / u.slope
-        (n, Obj("slope_uniform" -> u.slope, "slope_skew" -> s.slope, "ratio" -> r), r)
-      }.toSeq
-    ScaleBench.emitSlopes("skew_slope", Seq("factor" -> factor, "placebo" -> placebo),
-      rows, 2.0, baseDir)
     spark.stop()
   }
 }

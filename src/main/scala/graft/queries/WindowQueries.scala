@@ -42,8 +42,8 @@ object WindowQueries {
     // q50's semantics under the skew-safe physics: the SAME oracle SQL as
     // q50, computed via Cumulative.groupedRunning (hot group split across
     // range partitions + boundary-offset stitch) instead of one window
-    // task per group — proving the 100 TB hot-key path is semantically
-    // identical to the plain window before SkewBench leans on it.
+    // task per group — proving the hot-key path is semantically
+    // identical to the plain window it stands in for under skew.
     // Summed through decimal(30,6) on BOTH sides: groupedRunning's
     // chunk-then-prefix association order differs from the oracle's
     // strictly sequential window sum, so a double sum could land on the

@@ -18,10 +18,10 @@ import org.apache.spark.sql.types._
  * modin/pandas/dataframe/dataframe.py:4623 interchange surface). The
  * reference ingests an in-memory `pyarrow.Table`; the JVM-side analog is
  * the Arrow IPC file, read with the arrow-vector runtime Spark already
- * ships. One task per file; each task streams the file's record batches
- * and emits rows — so a directory of IPC files parallelizes like any
- * other multi-file scan. Supported types: int32/int64, float32/float64,
- * utf8, bool — the interchange-protocol core.
+ * ships. A directory of IPC files reads like every file source
+ * ([[FileSet]]); each task streams its file's record batches. Supported
+ * types: int32/int64, float32/float64, utf8, bool, date32 and
+ * timestamp[us] — the interchange-protocol core.
  */
 object ArrowIpc {
 
@@ -55,89 +55,78 @@ object ArrowIpc {
     } finally { reader.close(); ch.close(); alloc.close() }
   }
 
-  /** Read one Arrow IPC file or a directory of them. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val files = {
-      val f = new File(path)
-      if (f.isDirectory)
-        // only .arrow files: a stray _SUCCESS/.crc would fail the whole
-        // scan on missing magic bytes
-        f.listFiles().filter(f => f.isFile && f.getName.endsWith(".arrow"))
-          .map(_.getAbsolutePath).sorted.toSeq
-      else Seq(path)
+  /** Read one Arrow IPC file or a directory of them ([[FileSet]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    FileSet.read(spark, path, Seq(".arrow"), readSchema, rows)
+
+  /** One file's rows, streamed one record batch at a time: only the
+    * current batch's rows are materialized, so task memory is bounded by
+    * the batch size, not the file size. */
+  private def rows(p: String): Iterator[Row] = {
+    val alloc = new RootAllocator()
+    val ch = new FileInputStream(p).getChannel
+    val reader = new ArrowFileReader(ch, alloc)
+    var closed = false
+    def closeAll(): Unit = if (!closed) {
+      closed = true; reader.close(); ch.close(); alloc.close()
     }
-    require(files.nonEmpty, s"no arrow files under $path")
-    val schema = readSchema(files.head)
-    val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-      val alloc = new RootAllocator()
-      val ch = new FileInputStream(p).getChannel
-      val reader = new ArrowFileReader(ch, alloc)
-      var closed = false
-      def closeAll(): Unit = if (!closed) {
-        closed = true; reader.close(); ch.close(); alloc.close()
-      }
-      // partial consumption (limit/take, task failure) must still release
-      // the channel and the allocator's direct memory — exhaustion alone
-      // is not guaranteed to be reached
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-      // stream one record batch at a time — only the current batch's rows
-      // are materialized, so task memory is bounded by the batch size,
-      // not the file size
-      new Iterator[Row] {
-        private val root = reader.getVectorSchemaRoot
-        private var batch = ArrayBuffer.empty[Row]
-        private var pos = 0
-        private var open = true
-        private def loadBatch(): Unit = {
-          batch.clear(); pos = 0
-          // loop past zero-row record batches (legal in IPC files) —
-          // treating the first empty batch as EOF would silently drop
-          // every batch after it
-          var more = true
-          while (batch.isEmpty && more) {
-            more = reader.loadNextBatch()
-            if (more) {
-              val vectors = root.getFieldVectors
-              var i = 0
-              while (i < root.getRowCount) {
-                val vals = new Array[Any](vectors.size())
-                var j = 0
-                while (j < vectors.size()) {
-                  val v = vectors.get(j)
-                  vals(j) =
-                    if (v.isNull(i)) null
-                    else v.getObject(i) match {
-                      case t: org.apache.arrow.vector.util.Text => t.toString
-                      // arrow-java API drift: DateDay getObject has returned
-                      // both raw day counts and LocalDate across versions
-                      case d: java.lang.Integer if v.isInstanceOf[DateDayVector] =>
-                        java.time.LocalDate.ofEpochDay(d.longValue())
-                      case m: java.lang.Long if v.isInstanceOf[TimeStampMicroTZVector] =>
-                        java.time.Instant.ofEpochSecond(
-                          Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L)
-                      case x => x // LocalDate / LocalDateTime pass through
-                    }
-                  j += 1
-                }
-                batch += Row.fromSeq(vals.toIndexedSeq)
-                i += 1
+    // partial consumption (limit/take, task failure) must still release
+    // the channel and the allocator's direct memory — exhaustion alone
+    // is not guaranteed to be reached
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
+    new Iterator[Row] {
+      private val root = reader.getVectorSchemaRoot
+      private var batch = ArrayBuffer.empty[Row]
+      private var pos = 0
+      private var open = true
+      private def loadBatch(): Unit = {
+        batch.clear(); pos = 0
+        // loop past zero-row record batches (legal in IPC files) —
+        // treating the first empty batch as EOF would silently drop
+        // every batch after it
+        var more = true
+        while (batch.isEmpty && more) {
+          more = reader.loadNextBatch()
+          if (more) {
+            val vectors = root.getFieldVectors
+            var i = 0
+            while (i < root.getRowCount) {
+              val vals = new Array[Any](vectors.size())
+              var j = 0
+              while (j < vectors.size()) {
+                val v = vectors.get(j)
+                vals(j) =
+                  if (v.isNull(i)) null
+                  else v.getObject(i) match {
+                    case t: org.apache.arrow.vector.util.Text => t.toString
+                    // arrow-java API drift: DateDay getObject has returned
+                    // both raw day counts and LocalDate across versions
+                    case d: java.lang.Integer if v.isInstanceOf[DateDayVector] =>
+                      java.time.LocalDate.ofEpochDay(d.longValue())
+                    case m: java.lang.Long if v.isInstanceOf[TimeStampMicroTZVector] =>
+                      java.time.Instant.ofEpochSecond(
+                        Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L)
+                    case x => x // LocalDate / LocalDateTime pass through
+                  }
+                j += 1
               }
+              batch += Row.fromSeq(vals.toIndexedSeq)
+              i += 1
             }
           }
-          if (batch.isEmpty && open) { open = false; closeAll() }
         }
-        override def hasNext: Boolean = {
-          if (pos >= batch.length && open) loadBatch()
-          pos < batch.length
-        }
-        override def next(): Row = {
-          if (!hasNext) throw new NoSuchElementException
-          val r = batch(pos); pos += 1; r
-        }
+        if (batch.isEmpty && open) { open = false; closeAll() }
+      }
+      override def hasNext: Boolean = {
+        if (pos >= batch.length && open) loadBatch()
+        pos < batch.length
+      }
+      override def next(): Row = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = batch(pos); pos += 1; r
       }
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** read_feather: Feather v2 IS the Arrow IPC file format (one frame,

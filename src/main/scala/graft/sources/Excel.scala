@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, File, FileInputStream, FileOutputStream}
+import java.io.{ByteArrayInputStream, FileInputStream, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import scala.collection.mutable
 import javax.xml.parsers.DocumentBuilderFactory
@@ -17,8 +17,7 @@ import org.apache.spark.sql.types._
  * so this parses with JDK-only APIs (java.util.zip + DOM) — no external
  * dependency. Excel's own format caps a sheet at ~1M rows, so per-FILE
  * parsing is inherently bounded; the scale axis is MANY files, and a
- * directory input parallelizes one task per file exactly like
- * [[ArrowIpc]]. Cells are typed per SpreadsheetML (`t="s"` shared
+ * directory input reads one task per file ([[FileSet]]). Cells are typed per SpreadsheetML (`t="s"` shared
  * string, `t="b"` bool, `t="inlineStr"`, default numeric); columns are
  * inferred bottom-up (long ⊂ double ⊂ string, bool kept only if pure)
  * to match pandas' read_excel dtype inference.
@@ -151,30 +150,6 @@ object Excel {
     } else StringType
   }
 
-  /** Widen two per-file inferred schemas, pandas-concat style: aligned
-    * BY NAME (two files with the same columns in different header order
-    * still line up — position-zipping them would land data in the wrong
-    * columns), equal types keep, {long, double} → double, any other mix
-    * → string; names unique to one file append and read null for the
-    * others. With header=false the names are positional `_c{i}` so this
-    * degrades to the positional merge. */
-  private def mergeSchemas(a: StructType, b: StructType): StructType = {
-    def widen(x: DataType, y: DataType): DataType = (x, y) match {
-      case (s, t) if s == t => s
-      case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
-      case _ => StringType
-    }
-    val bByName = b.fields.map(f => f.name -> f).toMap
-    val merged = a.fields.map { fa =>
-      bByName.get(fa.name) match {
-        case Some(fb) => StructField(fa.name, widen(fa.dataType, fb.dataType), nullable = true)
-        case None => fa.copy(nullable = true)
-      }
-    }
-    val aNames = a.fieldNames.toSet
-    StructType(merged ++ b.fields.filterNot(f => aNames(f.name)).map(_.copy(nullable = true)))
-  }
-
   private def toTyped(grid: Seq[Array[Any]], header: Boolean): (StructType, Seq[Row]) = {
     require(grid.nonEmpty, "empty sheet")
     val width = grid.head.length
@@ -185,76 +160,29 @@ object Excel {
     val types = (0 until width).map(i => inferType(data.map(_(i))))
     val schema = StructType(names.zip(types).map { case (n, t) => StructField(n, t, nullable = true) })
     val rows = data.map { arr =>
-      Row.fromSeq(arr.toIndexedSeq.zip(types).map {
-        case (null, _) => null
-        case (d: Double, LongType) => d.toLong
-        case (v, StringType) => v match {
-          case d: Double => if (d.isWhole) d.toLong.toString else d.toString
-          case x => x.toString
-        }
-        case (v, _) => v
+      Row.fromSeq(arr.toIndexedSeq.zip(types).map { case (v, t) =>
+        if (v == null) null else convert(v, t)
       })
     }
     (schema, rows)
   }
 
-  /**
-   * Read one .xlsx file or a directory of them. Single file: parsed on
-   * the driver (bounded by Excel's 1M-row sheet cap), schema inferred.
-   * Directory: schema from the first file, then one task per file — the
-   * many-small-workbooks ingestion shape.
-   */
-  def read(spark: SparkSession, path: String, sheet: Option[String] = None,
-      header: Boolean = true): DataFrame = {
-    val f = new File(path)
-    if (f.isDirectory) {
-      val files = f.listFiles().filter(x => x.isFile && x.getName.endsWith(".xlsx"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      require(files.nonEmpty, s"no .xlsx files under $path")
-      // Each file re-infers its OWN types/width, which need not match the
-      // first file's (a 1.5 under a whole-number first file, an extra
-      // column). Coercing everything to the FIRST schema would null
-      // incompatible cells — silent data loss where pandas concat widens
-      // the dtype instead. So: a distributed schema pass first, merge on
-      // the driver with the long ⊂ double ⊂ string lattice, then coerce
-      // each task row to the WIDENED schema (total — nothing can null).
-      val fileSchemas = spark.sparkContext.parallelize(files, files.size)
-        .map(p => toTyped(parseGrid(zipEntries(p), sheet), header)._1).collect()
-      // name-alignment is ambiguous under duplicate headers — fail loudly
-      // like the duplicate-row-index guard rather than guess
-      files.zip(fileSchemas).foreach { case (p, s) =>
-        val dup = s.fieldNames.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-        require(dup.isEmpty,
-          s"duplicate column name(s) ${dup.mkString(", ")} in $p — cannot align multi-file read by name")
-      }
-      val schema = fileSchemas.reduce(mergeSchemas)
-      val dts = schema.map(_.dataType).toIndexedSeq
-      val names = schema.fieldNames.toIndexedSeq
-      val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-        val (fs, rows) = toTyped(parseGrid(zipEntries(p), sheet), header)
-        // align THIS file's columns to the merged schema by name; a name
-        // this file lacks reads null (pandas concat outer-align)
-        val pos = fs.fieldNames.zipWithIndex.toMap
-        rows.map { r =>
-          Row.fromSeq(names.indices.map { i =>
-            val v = pos.get(names(i)).map(r.get).orNull
-            (v, dts(i)) match {
-              case (null, _) => null
-              case (x: Long, DoubleType) => x.toDouble
-              case (x: Double, StringType) =>
-                if (x.isWhole) x.toLong.toString else x.toString
-              case (x, StringType) if !x.isInstanceOf[String] => x.toString
-              case (x, _) => x // merged type = this file's type by lattice
-            }
-          })
-        }
-      }
-      spark.createDataFrame(rdd, schema)
-    } else {
-      val (schema, rows) = toTyped(parseGrid(zipEntries(path), sheet), header)
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq), schema)
-    }
+  /** A cell onto its column's type: a whole double reads as "3", not
+    * "3.0", in a string column, whether inferred here or merged across
+    * files; otherwise [[FileSet.widened]]. */
+  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
+    case (d: Double, StringType) if d.isWhole => d.toLong.toString
+    case _ => FileSet.widened(v, dt)
   }
+
+  /** Read one .xlsx file or a directory of them ([[FileSet]]). With
+    * `header = false` the names are positional `_c{i}`, so files merge
+    * by position. */
+  def read(spark: SparkSession, path: String, sheet: Option[String] = None,
+      header: Boolean = true): DataFrame =
+    FileSet.read(spark, path, Seq(".xlsx"),
+      p => toTyped(parseGrid(zipEntries(p), sheet), header)._1,
+      p => toTyped(parseGrid(zipEntries(p), sheet), header)._2.iterator, convert)
 
   // ---- writer ----
 
@@ -285,11 +213,7 @@ object Excel {
    */
   def write(df: DataFrame, path: String, sheetName: String = "Sheet1",
       header: Boolean = true, maxRows: Int = 1048575): Unit = {
-    val n = df.count()
-    require(n <= maxRows,
-      s"to_excel writes a single workbook ($n rows > cap $maxRows); " +
-        "write parquet/csv for frames this size")
-    val rows = df.collect()
+    val rows = FileSet.collectCapped(df, maxRows, "to_excel writes a single workbook")
     val schema = df.schema
     val sb = new StringBuilder
     sb.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")

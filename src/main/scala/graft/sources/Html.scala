@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
  * `<table>` from a document and returns a list; the engine's analog
  * picks one table per document by `tableIndex` (default 0 — the
  * ubiquitous `read_html(...)[0]` idiom) and parallelizes the MANY-files
- * axis exactly like [[Excel]]/[[ArrowIpc]]: one task per document,
+ * axis like every file source ([[FileSet]]): one task per document,
  * per-file schemas merged by column name.
  *
  * The parser is a lenient JDK-regex scanner over tag soup (no external
@@ -66,26 +66,6 @@ object Html {
     else StringType
   }
 
-  private def widen(x: DataType, y: DataType): DataType = (x, y) match {
-    case (s, t) if s == t => s
-    case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
-    case _ => StringType
-  }
-
-  /** Same by-name merge rule as Excel.mergeSchemas (pandas concat
-    * outer-align): shared names widen, unique names append nullable. */
-  private def mergeSchemas(a: StructType, b: StructType): StructType = {
-    val bByName = b.fields.map(f => f.name -> f).toMap
-    val merged = a.fields.map { fa =>
-      bByName.get(fa.name) match {
-        case Some(fb) => StructField(fa.name, widen(fa.dataType, fb.dataType), nullable = true)
-        case None => fa.copy(nullable = true)
-      }
-    }
-    val aNames = a.fieldNames.toSet
-    StructType(merged ++ b.fields.filterNot(f => aNames(f.name)).map(_.copy(nullable = true)))
-  }
-
   /** Grid of nullable cell text (header split off) for one document. */
   private def grid(path: String, tableIndex: Int, header: Boolean)
       : (Seq[String], Seq[Array[String]]) = {
@@ -108,55 +88,26 @@ object Html {
     (names, data)
   }
 
-  private def typed(names: Seq[String], data: Seq[Array[String]]): StructType =
-    StructType(names.zipWithIndex.map { case (n, i) =>
-      StructField(n, inferType(data.map(_(i))), nullable = true)
+  private def typed(grid: (Seq[String], Seq[Array[String]])): StructType =
+    StructType(grid._1.zipWithIndex.map { case (n, i) =>
+      StructField(n, inferType(grid._2.map(_(i))), nullable = true)
     })
 
-  private def convert(v: String, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s, LongType) => s.toLong
-    case (s, DoubleType) => s.toDouble
-    case (s, _) => s
+  /** Cells stay raw text until the merged type is known, so a string
+    * column keeps "1.50" as written. */
+  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
+    case (s: String, LongType) => s.toLong
+    case (s: String, DoubleType) => s.toDouble
+    case _ => v
   }
 
-  /**
-   * Read one .html file or a directory of them. Single file: parsed in
-   * one task. Directory: per-file schema inference in parallel, by-name
-   * merge (duplicate header names fail loudly, like Excel), then one
-   * task per document — the many-small-documents ingestion shape.
-   */
+  /** Read one .html/.htm file or a directory of them ([[FileSet]]). */
   def read(spark: SparkSession, path: String, tableIndex: Int = 0,
-      header: Boolean = true): DataFrame = {
-    val f = new File(path)
-    val files =
-      if (f.isDirectory)
-        f.listFiles().filter(x => x.getName.endsWith(".html") || x.getName.endsWith(".htm"))
-          .map(_.getAbsolutePath).sorted.toSeq
-      else Seq(path)
-    require(files.nonEmpty, s"no .html files under $path")
-    val perFile = spark.sparkContext.parallelize(files, files.size)
-      .map { p => val (n, d) = grid(p, tableIndex, header); (p, typed(n, d)) }
-      .collect()
-    perFile.foreach { case (p, s) =>
-      val dup = s.fieldNames.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-      require(dup.isEmpty,
-        s"duplicate column name(s) ${dup.mkString(", ")} in $p — cannot align multi-file read by name")
-    }
-    val schema = perFile.map(_._2).reduce(mergeSchemas)
-    val dts = schema.map(_.dataType).toIndexedSeq
-    val allNames = schema.fieldNames.toIndexedSeq
-    val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-      val (names, data) = grid(p, tableIndex, header)
-      val pos = names.zipWithIndex.toMap
-      data.map { r =>
-        Row.fromSeq(allNames.indices.map { i =>
-          convert(pos.get(allNames(i)).map(r).orNull, dts(i))
-        })
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+      header: Boolean = true): DataFrame =
+    FileSet.read(spark, path, Seq(".html", ".htm"),
+      p => typed(grid(p, tableIndex, header)),
+      p => grid(p, tableIndex, header)._2.iterator.map(r => Row.fromSeq(r.toIndexedSeq)),
+      convert)
 
   private def escape(s: String): String = s
     .replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
@@ -169,11 +120,7 @@ object Html {
    * with the other to_csv-family null deviations).
    */
   def write(df: DataFrame, path: String, maxRows: Int = 1048575): Unit = {
-    val n = df.count()
-    require(n <= maxRows,
-      s"to_html writes a single document ($n rows > cap $maxRows); " +
-        "write parquet/csv for frames this size")
-    val rows = df.collect()
+    val rows = FileSet.collectCapped(df, maxRows, "to_html writes a single document")
     val cols = df.columns
     val sb = new StringBuilder
     sb.append("<table border=\"1\" class=\"dataframe\">\n<thead>\n<tr>")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{File, FileOutputStream}
+import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -26,8 +26,8 @@ import org.apache.spark.sql.types._
  * external implementation available.
  *
  * Directory input parallelizes one task per file with the by-name
- * schema merge shared with [[Stata]]/[[Excel]] — the many-files axis is
- * where a cluster read scales; a single .xpt is a bounded artifact by
+ * schema merge every file source shares ([[FileSet]]) — the many-files
+ * axis is where a cluster read scales; a single .xpt is a bounded artifact by
  * format (8-char variable names, 200-byte strings, doubles only).
  *
  * Type fidelity follows SAS itself: the format has exactly two types,
@@ -175,55 +175,9 @@ object SasXport {
     (StructType(fields), rows)
   }
 
-  private def mergeSchemas(a: StructType, b: StructType): StructType = {
-    val bByName = b.fields.map(f => f.name -> f).toMap
-    val merged = a.fields.map { fa =>
-      bByName.get(fa.name) match {
-        case Some(fb) if fb.dataType == fa.dataType => fa.copy(nullable = true)
-        case Some(_) => StructField(fa.name, StringType, nullable = true)
-        case None => fa.copy(nullable = true)
-      }
-    }
-    val aNames = a.fieldNames.toSet
-    StructType(merged ++ b.fields.filterNot(f => aNames(f.name)).map(_.copy(nullable = true)))
-  }
-
-  /** Read one .xpt file or a directory of them (one task per file,
-    * by-name schema merge; a numeric/char type clash goes string —
-    * XPORT has only the two types, so there is no numeric widening). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val f = new File(path)
-    val files =
-      if (f.isDirectory)
-        f.listFiles().filter(_.getName.endsWith(".xpt")).map(_.getAbsolutePath).sorted.toSeq
-      else Seq(path)
-    require(files.nonEmpty, s"no .xpt files under $path")
-    val perFile = spark.sparkContext.parallelize(files, files.size)
-      .map(p => (p, parse(p)._1)).collect()
-    perFile.foreach { case (p, s) =>
-      val dup = s.fieldNames.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-      require(dup.isEmpty,
-        s"duplicate column name(s) ${dup.mkString(", ")} in $p — cannot align multi-file read by name")
-    }
-    val schema = perFile.map(_._2).reduce(mergeSchemas)
-    val dts = schema.map(_.dataType).toIndexedSeq
-    val allNames = schema.fieldNames.toIndexedSeq
-    val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-      val (fileSchema, rows) = parse(p)
-      val pos = fileSchema.fieldNames.zipWithIndex.toMap
-      rows.map { r =>
-        Row.fromSeq(allNames.indices.map { i =>
-          val v = pos.get(allNames(i)).map(r.get).orNull
-          (v, dts(i)) match {
-            case (null, _) => null
-            case (x: Double, StringType) => x.toString
-            case (x, _) => x
-          }
-        })
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Read one .xpt file or a directory of them ([[FileSet]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    FileSet.read(spark, path, Seq(".xpt"), parse(_)._1, parse(_)._2.iterator)
 
   /**
    * to_sas (XPORT v5): one file, driver-side behind the usual guarded
@@ -236,11 +190,7 @@ object SasXport {
    * writing, exactly what SAS users do.
    */
   def write(df: DataFrame, path: String, maxRows: Int = 1048575): Unit = {
-    val n = df.count()
-    require(n <= maxRows,
-      s"to_sas writes a single file ($n rows > cap $maxRows); " +
-        "write parquet/csv for frames this size")
-    val rows = df.collect()
+    val rows = FileSet.collectCapped(df, maxRows, "to_sas writes a single file")
     val schema = df.schema
     require(schema.length <= 9999, "XPORT NAMESTR count field is 4 digits")
     schema.fields.foreach { f =>

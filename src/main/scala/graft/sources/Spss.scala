@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{File, FileOutputStream}
+import java.io.FileOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -169,55 +169,9 @@ object Spss {
     (StructType(fields), rows)
   }
 
-  private def mergeSchemas(a: StructType, b: StructType): StructType = {
-    val bByName = b.fields.map(f => f.name -> f).toMap
-    val merged = a.fields.map { fa =>
-      bByName.get(fa.name) match {
-        case Some(fb) if fb.dataType == fa.dataType => fa.copy(nullable = true)
-        case Some(_) => StructField(fa.name, StringType, nullable = true)
-        case None => fa.copy(nullable = true)
-      }
-    }
-    val aNames = a.fieldNames.toSet
-    StructType(merged ++ b.fields.filterNot(f => aNames(f.name)).map(_.copy(nullable = true)))
-  }
-
-  /** Read one .sav file or a directory of them (one task per file,
-    * by-name schema merge; numeric/string clashes go string — the
-    * format has only the two types). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val f = new File(path)
-    val files =
-      if (f.isDirectory)
-        f.listFiles().filter(_.getName.endsWith(".sav")).map(_.getAbsolutePath).sorted.toSeq
-      else Seq(path)
-    require(files.nonEmpty, s"no .sav files under $path")
-    val perFile = spark.sparkContext.parallelize(files, files.size)
-      .map(p => (p, parse(p)._1)).collect()
-    perFile.foreach { case (p, s) =>
-      val dup = s.fieldNames.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-      require(dup.isEmpty,
-        s"duplicate column name(s) ${dup.mkString(", ")} in $p — cannot align multi-file read by name")
-    }
-    val schema = perFile.map(_._2).reduce(mergeSchemas)
-    val dts = schema.map(_.dataType).toIndexedSeq
-    val allNames = schema.fieldNames.toIndexedSeq
-    val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-      val (fileSchema, rows) = parse(p)
-      val pos = fileSchema.fieldNames.zipWithIndex.toMap
-      rows.map { r =>
-        Row.fromSeq(allNames.indices.map { i =>
-          val v = pos.get(allNames(i)).map(r.get).orNull
-          (v, dts(i)) match {
-            case (null, _) => null
-            case (x: Double, StringType) => x.toString
-            case (x, _) => x
-          }
-        })
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Read one .sav file or a directory of them ([[FileSet]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    FileSet.read(spark, path, Seq(".sav"), parse(_)._1, parse(_)._2.iterator)
 
   /**
    * to_spss: one bytecode-compressed .sav, driver-side behind the usual
@@ -228,11 +182,7 @@ object Spss {
    * must fit the classic 8-byte dictionary slot — alias before writing.
    */
   def write(df: DataFrame, path: String, maxRows: Int = 1048575): Unit = {
-    val n = df.count()
-    require(n <= maxRows,
-      s"to_spss writes a single file ($n rows > cap $maxRows); " +
-        "write parquet/csv for frames this size")
-    val rows = df.collect()
+    val rows = FileSet.collectCapped(df, maxRows, "to_spss writes a single file")
     val schema = df.schema
     schema.fields.foreach { f =>
       val b = f.name.getBytes(StandardCharsets.US_ASCII)

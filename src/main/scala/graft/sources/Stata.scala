@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{File, FileOutputStream}
+import java.io.FileOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -15,10 +15,10 @@ import org.apache.spark.sql.types._
  * binary layout pandas `to_stata` emits by default as version=114) with
  * JDK-only byte parsing: header → typlist → varlist → skip the
  * sort/format/label tables → expansion fields → row-major data.
- * Directory input parallelizes one task per file with the same by-name
- * schema merge as [[Excel]]/[[Html]] — the many-files axis is where a
- * cluster read scales; one .dta is a bounded single-machine artifact by
- * format (Stata caps at 32767 vars, pandas writes one file).
+ * Directory input parallelizes one task per file with the by-name schema
+ * merge every file source shares ([[FileSet]]) — the many-files axis is
+ * where a cluster read scales; one .dta is a bounded single-machine
+ * artifact by format (Stata caps at 32767 vars, pandas writes one file).
  *
  * Type fidelity follows pandas: st_byte/int/long → ByteType/ShortType/
  * IntegerType, st_float/double → FloatType/DoubleType, strN →
@@ -95,75 +95,9 @@ object Stata {
     (StructType(fields), rows)
   }
 
-  private def widen(x: DataType, y: DataType): DataType = (x, y) match {
-    case (s, t) if s == t => s
-    case (a: NumericType, b: NumericType) =>
-      val rank = Seq[DataType](ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
-      rank(math.max(rank.indexOf(a), rank.indexOf(b)))
-    case _ => StringType
-  }
-
-  private def mergeSchemas(a: StructType, b: StructType): StructType = {
-    val bByName = b.fields.map(f => f.name -> f).toMap
-    val merged = a.fields.map { fa =>
-      bByName.get(fa.name) match {
-        case Some(fb) => StructField(fa.name, widen(fa.dataType, fb.dataType), nullable = true)
-        case None => fa.copy(nullable = true)
-      }
-    }
-    val aNames = a.fieldNames.toSet
-    StructType(merged ++ b.fields.filterNot(f => aNames(f.name)).map(_.copy(nullable = true)))
-  }
-
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (x: Byte, ShortType) => x.toShort
-    case (x: Byte, IntegerType) => x.toInt
-    case (x: Byte, LongType) => x.toLong
-    case (x: Byte, FloatType) => x.toFloat
-    case (x: Byte, DoubleType) => x.toDouble
-    case (x: Short, IntegerType) => x.toInt
-    case (x: Short, LongType) => x.toLong
-    case (x: Short, FloatType) => x.toFloat
-    case (x: Short, DoubleType) => x.toDouble
-    case (x: Int, LongType) => x.toLong
-    case (x: Int, FloatType) => x.toFloat
-    case (x: Int, DoubleType) => x.toDouble
-    case (x: Float, DoubleType) => x.toDouble
-    case (x, StringType) => x.toString
-    case (x, _) => x
-  }
-
-  /** Read one .dta file or a directory of them (one task per file,
-    * by-name schema merge — numeric widths widen, mixes go string). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val f = new File(path)
-    val files =
-      if (f.isDirectory)
-        f.listFiles().filter(_.getName.endsWith(".dta")).map(_.getAbsolutePath).sorted.toSeq
-      else Seq(path)
-    require(files.nonEmpty, s"no .dta files under $path")
-    val perFile = spark.sparkContext.parallelize(files, files.size)
-      .map(p => (p, parse(p)._1)).collect()
-    perFile.foreach { case (p, s) =>
-      val dup = s.fieldNames.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-      require(dup.isEmpty,
-        s"duplicate column name(s) ${dup.mkString(", ")} in $p — cannot align multi-file read by name")
-    }
-    val schema = perFile.map(_._2).reduce(mergeSchemas)
-    val dts = schema.map(_.dataType).toIndexedSeq
-    val allNames = schema.fieldNames.toIndexedSeq
-    val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-      val (fileSchema, rows) = parse(p)
-      val pos = fileSchema.fieldNames.zipWithIndex.toMap
-      rows.map { r =>
-        Row.fromSeq(allNames.indices.map { i =>
-          convert(pos.get(allNames(i)).map(r.get).orNull, dts(i))
-        })
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Read one .dta file or a directory of them ([[FileSet]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    FileSet.read(spark, path, Seq(".dta"), parse(_)._1, parse(_)._2.iterator)
 
   /**
    * to_stata: one format-114 file, driver-side behind the usual guarded
@@ -175,12 +109,7 @@ object Stata {
    * code; null strings write "".
    */
   def write(df: DataFrame, path: String, maxRows: Int = 1048575): Unit = {
-    val n = df.count()
-    require(n <= maxRows,
-      s"to_stata writes a single file ($n rows > cap $maxRows); " +
-        "write parquet/csv for frames this size")
-    require(n <= Int.MaxValue, "dta nobs is int32")
-    val rows = df.collect()
+    val rows = FileSet.collectCapped(df, maxRows, "to_stata writes a single file")
     val schema = df.schema
     require(schema.length <= 32767, "dta caps at 32767 variables")
     schema.fields.foreach(f => require(f.name.getBytes(StandardCharsets.UTF_8).length <= 32,

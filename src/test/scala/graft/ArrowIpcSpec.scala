@@ -113,6 +113,28 @@ class ArrowIpcSpec extends SparkSuite {
     assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
   }
 
+  test("a directory read aligns files by column name and widens int to long") {
+    import spark.implicits._
+    // b.arrow lists its columns in the other order and stores `a` as int:
+    // each file's rows must land under their own names, not a.arrow's order
+    val dir = java.nio.file.Files.createTempDirectory("graft_arrow_names").toFile
+    dir.deleteOnExit()
+    def put(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_arrow_part").toFile
+      tmp.deleteOnExit()
+      ArrowIpc.write(df.coalesce(1), tmp.getAbsolutePath)
+      java.nio.file.Files.copy(new File(tmp, "part-00000.arrow").toPath,
+        new File(dir, name).toPath)
+    }
+    put(Seq((1L, "x"), (2L, "y")).toDF("a", "b"), "a.arrow")
+    put(Seq(("z", 3)).toDF("b", "a"), "b.arrow")
+    val back = ArrowIpc.read(spark, dir.getAbsolutePath)
+    assert(back.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("a", "bigint"), ("b", "string")))
+    assert(back.orderBy("a").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "x"), (2L, "y"), (3L, "z")))
+  }
+
   test("write rejects unsupported column types on the driver") {
     import spark.implicits._
     val df = Seq((1L, Seq(1, 2))).toDF("id", "arr")

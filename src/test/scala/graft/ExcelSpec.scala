@@ -194,6 +194,17 @@ class ExcelSpec extends SparkSuite {
       (4L, "3", None), (5L, "2.5", None)))
   }
 
+  test("a single workbook with duplicate header names fails loudly") {
+    import spark.implicits._
+    // name alignment cannot tell two `a` columns apart, for one file as
+    // for many: the read fails instead of returning two columns named `a`
+    val f = java.io.File.createTempFile("graft_xl_duphdr", ".xlsx")
+    f.deleteOnExit()
+    Excel.write(Seq((1L, 2L)).toDF("a", "a"), f.getAbsolutePath)
+    val e = intercept[IllegalArgumentException](Excel.read(spark, f.getAbsolutePath))
+    assert(e.getMessage.contains("duplicate column name"))
+  }
+
   test("duplicate row indices fail loudly instead of last-one-wins dropping data") {
     val contentTypes =
       """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"><Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/><Default Extension="xml" ContentType="application/xml"/></Types>"""
