@@ -57,12 +57,12 @@ object ArrowIpc {
 
   /** Read one Arrow IPC file or a directory of them ([[FileSet]]). */
   def read(spark: SparkSession, path: String): DataFrame =
-    FileSet.read(spark, path, Seq(".arrow"), readSchema, rows)
+    FileSet.read(spark, path, Seq(".arrow"), readSchema, rowsOf)
 
   /** One file's rows, streamed one record batch at a time: only the
     * current batch's rows are materialized, so task memory is bounded by
     * the batch size, not the file size. */
-  private def rows(p: String): Iterator[Row] = {
+  private def rowsOf(p: String): Iterator[Row] = {
     val alloc = new RootAllocator()
     val ch = new FileInputStream(p).getChannel
     val reader = new ArrowFileReader(ch, alloc)

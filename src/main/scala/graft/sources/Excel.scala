@@ -17,10 +17,11 @@ import org.apache.spark.sql.types._
  * so this parses with JDK-only APIs (java.util.zip + DOM) — no external
  * dependency. Excel's own format caps a sheet at ~1M rows, so per-FILE
  * parsing is inherently bounded; the scale axis is MANY files, and a
- * directory input reads one task per file ([[FileSet]]). Cells are typed per SpreadsheetML (`t="s"` shared
- * string, `t="b"` bool, `t="inlineStr"`, default numeric); columns are
- * inferred bottom-up (long ⊂ double ⊂ string, bool kept only if pure)
- * to match pandas' read_excel dtype inference.
+ * directory input reads one task per file ([[FileSet]]). Cells are typed
+ * per SpreadsheetML (`t="s"` shared string, `t="b"` bool, `t="inlineStr"`,
+ * default numeric); columns are inferred bottom-up (long ⊂ double ⊂
+ * string, bool kept only if pure) to match pandas' read_excel dtype
+ * inference.
  */
 object Excel {
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
  *
  *  - Listing: a directory reads its files whose names end in one of the
  *    format's extensions, sorted by name, so a stray `_SUCCESS` or `.crc`
- *    does not fail the scan; any other path is one file. No file fails
- *    with `no .<ext> files under <path>`.
+ *    does not fail the scan; any other path is one file. An empty listing
+ *    fails with `no .<ext> files under <path>`.
  *  - Schema: one task per file runs the format's `schemaOf`. A file with
  *    a duplicate column name fails the read, since alignment by name
  *    cannot tell the two apart. The schemas merge by name, pandas-concat

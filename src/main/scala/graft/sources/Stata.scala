@@ -129,7 +129,8 @@ object Stata {
         case DoubleType => 255
         case StringType =>
           val w = math.max(1, rows.map(r =>
-            if (r.isNullAt(i)) 0 else r.getString(i).getBytes(StandardCharsets.UTF_8).length).max)
+            if (r.isNullAt(i)) 0
+            else r.getString(i).getBytes(StandardCharsets.UTF_8).length).foldLeft(0)(math.max))
           require(w <= 244, s"dta strN caps at 244 bytes (column ${f.name} has $w)")
           w
         case other => sys.error(s"to_stata: unsupported dtype $other for column ${f.name}")

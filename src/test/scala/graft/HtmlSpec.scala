@@ -61,11 +61,14 @@ class HtmlSpec extends SparkSuite {
     Html.write(Seq((1L, "a")).toDF("id", "s"), new java.io.File(d, "a.html").getAbsolutePath)
     // opposite header order + a long→double widening on id
     Html.write(Seq(("b", 2.5)).toDF("s", "id"), new java.io.File(d, "b.html").getAbsolutePath)
+    // c's `s` infers double; merged into the string column it keeps its
+    // cell text "1.50", not a re-rendered "1.5"
+    Html.write(Seq((3L, "1.50")).toDF("id", "s"), new java.io.File(d, "c.html").getAbsolutePath)
     val df = Html.read(spark, d.getAbsolutePath)
     assert(df.columns.toSeq == Seq("id", "s"))
     assert(df.schema("id").dataType.typeName == "double")
     assert(df.orderBy("id").collect().map(r => (r.getDouble(0), r.getString(1))).toSeq ==
-      Seq((1.0, "a"), (2.5, "b")))
+      Seq((1.0, "a"), (2.5, "b"), (3.0, "1.50")))
   }
 
   test("ragged rows pad with null; duplicate header names fail loudly") {

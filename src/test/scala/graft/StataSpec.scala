@@ -50,6 +50,10 @@ class StataSpec extends SparkSuite {
     assert(rows(0).getDouble(1) == 1.5 && rows(1).isNullAt(1) && rows(2).getDouble(1) == -0.25)
     assert(rows.map(_.getString(2)).toSeq == Seq("a", "bb", ""))
     assert(rows.map(_.getByte(3)).toSeq == Seq[Byte](1, 0, 1))
+    // an empty frame writes a valid file of zero rows, string column too
+    val empty = new java.io.File(d, "e.dta").getAbsolutePath
+    Stata.write(df.limit(0), empty)
+    assert(Stata.read(spark, empty).count() == 0)
   }
 
   test("long column that fits int32 narrows to st_int and reads back integer") {
