@@ -68,39 +68,18 @@ object Similarity {
       .select(col(queryId), col(corpusId), col("cosine"), col("__rk__").cast("long").as("rank"))
   }
 
-  /**
-   * Deterministic pseudo-random hyperplane component for plane `p`,
-   * dimension `d`: xxhash64 folded into [-1, 1]. Seeds are structural, so
-   * every executor materializes identical planes with no broadcast state.
-   */
-  private def planeComponent(p: Int, d: Column): Column =
-    (pmod(xxhash64(lit(p), d), lit(2000001L)).cast("double") - lit(1000000.0)) / lit(1000000.0)
-
   /** Sign-of-projection bits for `nPlanes` random hyperplanes (seeded by
     * `table` so each hash table draws independent planes), packed into a
     * long bucket id — the random-hyperplane LSH for cosine similarity.
     * Computed by the native [[graft.plans.LshBucketKernel]] (one fused
     * multiply-add loop per plane over a memoized component table) —
-    * bit-identical to [[lshBucketRef]], the lambda-tree formulation it
-    * replaced, which interpreted a `sequence`+`zip_with`+`aggregate`
-    * fold per plane per row (CodegenFallback). */
+    * bit-identical to the lambda-tree formulation it replaced, which
+    * interpreted a `sequence`+`zip_with`+`aggregate` fold per plane per
+    * row (CodegenFallback) and is kept in LshBucketParitySpec as the
+    * executable spec. */
   def lshBucket(vec: Column, nPlanes: Int, table: Int = 0): Column = {
     GraftExtensions.register(org.apache.spark.sql.SparkSession.active)
     call_function("graft_lsh_xx", vec, lit(nPlanes), lit(table * nPlanes))
-  }
-
-  /** The original Column formulation of [[lshBucket]] — kept as the
-    * executable spec the native kernel is differentially tested against
-    * (LshBucketParitySpec). Not used on any query path. */
-  private[graft] def lshBucketRef(vec: Column, nPlanes: Int, table: Int = 0): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0L), size(vec).cast("long") - 1L),
-          (x, d) => x.cast("double") * planeComponent(table * nPlanes + p, d)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
   /** ENGINE-PORTABLE random-hyperplane bucket — the independently
@@ -115,23 +94,6 @@ object Similarity {
   def lshBucketMd5(vec: Column, nPlanes: Int, table: Int = 0): Column = {
     GraftExtensions.register(org.apache.spark.sql.SparkSession.active)
     call_function("graft_lsh_md5", vec, lit(nPlanes), lit(table * nPlanes))
-  }
-
-  /** The original Column formulation of [[lshBucketMd5]] — kept as the
-    * executable spec the native kernel is differentially tested against
-    * (LshBucketParitySpec). Not used on any query path. */
-  private[graft] def lshBucketMd5Ref(vec: Column, nPlanes: Int, table: Int = 0): Column = {
-    def sign(p: Int, d: Column): Column =
-      when(conv(md5(concat(lit(s"$p:"), d.cast("string"))).substr(lit(1), lit(1)),
-        16, 10).cast("int") < 8, lit(1.0)).otherwise(lit(-1.0))
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0L), size(vec).cast("long") - 1L),
-          (x, d) => x.cast("double") * sign(table * nPlanes + p, d)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
   /**

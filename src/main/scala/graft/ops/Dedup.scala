@@ -70,10 +70,10 @@ object Dedup {
    * `numHashes` minhash signature per document, split into `bands`
    * bands of `numHashes / bands` rows, each band hashed to one key
    * ([[bandRows]]); candidates come from the band-bucket self-join
-   * ([[selfCandidates]]) and are verified with the exact shingle-set
-   * Jaccard ([[verifyJaccard]]) over xxhash64-folded sets. No other
-   * engine reproduces this signature; [[minhashLshPairsMd5]] is the
-   * oracle-checked twin.
+   * ([[selfPairs]], size-culled) and are verified with the exact
+   * shingle-set Jaccard ([[verifyJaccard]]) over xxhash64-folded sets.
+   * No other engine reproduces this signature; [[minhashLshPairsMd5]] is
+   * the oracle-checked twin.
    */
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String,
@@ -89,41 +89,37 @@ object Dedup {
     def sets(s: String) = df.select(col(idCol).as(s"id_$s"),
       transform(array_distinct(Text.shingles(col(textCol), shingleN)),
         x => xxhash64(x)).as(s"hs_$s"))
-    verifyJaccard(selfCandidates(banded, idCol, threshold), sets("a"), sets("b"), threshold)
+    verifyJaccard(selfPairs(banded, idCol)(sizeCull("a", "b", threshold), col("id_a"), col("id_b")),
+      sets("a"), sets("b"), threshold)
   }
 
   /** SimHash near-dup: pairs whose 64-bit simhashes differ in ≤ `maxBits`
-    * bits. Candidates are generated by banding the simhash into
-    * `maxBits + 1` chunks — by pigeonhole, any pair within Hamming
-    * distance `maxBits` agrees on at least one full chunk, so the
-    * guarantee holds for every `maxBits` in [0, 63], not just the
-    * 4×16-bit special case. */
+    * bits. Candidates come from the pigeonhole [[chunks]] of the simhash;
+    * the simhash rides the chunk join (8 B/side), so the Hamming bound is
+    * the candidate step's filter and no verify join is needed. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, maxBits: Int = 3): DataFrame = {
-    require(maxBits >= 0 && maxBits < 64, s"maxBits must be in [0, 64): $maxBits")
-    val nChunks = maxBits + 1
-    // Chunk i covers bits [bounds(i), bounds(i+1)) — widths differ by at
-    // most one bit when nChunks does not divide 64.
-    val bounds = (0 to nChunks).map(i => i * 64 / nChunks)
+    val keys = array(chunks(maxBits).map { case (lo, width) =>
+      shiftrightunsigned(col("__sim__"), lo).bitwiseAND(lit(-1L >>> (64 - width)))
+    }: _*)
     // native codegen'd simhash (graft.plans.SimHash64) — identical bits
     // to Text.simhash, without the 64-wide lambda tree per token
     graft.plans.GraftExtensions.register(df.sparkSession)
     val hashed = df.select(col(idCol),
       call_function("graft_simhash", Text.wordTokens(col(textCol))).as("__sim__"))
-    val chunked = hashed.select(col(idCol), col("__sim__"),
-      posexplode(array((0 until nChunks).map { i =>
-        val width = bounds(i + 1) - bounds(i)
-        val mask = if (width == 64) -1L else (1L << width) - 1L
-        shiftrightunsigned(col("__sim__"), bounds(i)).bitwiseAND(lit(mask))
-      }: _*)))
-      .withColumnRenamed("pos", "__chunk__").withColumnRenamed("col", "__key__")
-    val a = chunked.select(col(idCol).as("id_a"), col("__sim__").as("sim_a"), col("__chunk__"), col("__key__"))
-    val b = chunked.select(col(idCol).as("id_b"), col("__sim__").as("sim_b"), col("__chunk__"), col("__key__"))
-    a.join(b, Seq("__chunk__", "__key__"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Text.hammingDistance(col("sim_a"), col("sim_b")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxBits)
+    val hamming = Text.hammingDistance(col("sim_a"), col("sim_b"))
+    selfPairs(keyRows(hashed, keys, col(idCol), col("__sim__")), idCol)(
+      hamming <= maxBits, col("id_a"), col("id_b"), hamming.as("hamming"))
+  }
+
+  /** The pigeonhole chunks of a 64-bit simhash for the Hamming bound
+    * `maxBits`, as (first bit, width): `maxBits + 1` chunks covering bits
+    * [0, 64), widths differing by at most one bit. Any pair within Hamming
+    * distance `maxBits` agrees on at least one full chunk, so banding on
+    * the chunks finds every such pair, for every `maxBits` in [0, 63]. */
+  private def chunks(maxBits: Int): Seq[(Int, Int)] = {
+    require(maxBits >= 0 && maxBits < 64, s"maxBits must be in [0, 64): $maxBits")
+    val bounds = (0 to maxBits + 1).map(_ * 64 / (maxBits + 1))
+    bounds.zip(bounds.tail).map { case (lo, hi) => (lo, hi - lo) }
   }
 
   /** Exact n-gram Jaccard similarity over MinHash-banded candidate pairs —
@@ -229,14 +225,16 @@ object Dedup {
     * division the exact verify performs (correctly-rounded division is
     * monotone, so bound < threshold in doubles ⇒ jaccard < threshold in
     * doubles) — the survivor set provably contains every output pair.
-    * The sizes ride the band join at 8 B/side, filtering BEFORE the
-    * pair-distinct exchange and the folded-set attach — this is the
-    * first stage of the two-stage verify that pulled the 64× probe's
-    * per-task sort memory back toward the default-heap operating point
-    * (see SCALE_r12.json). Empty-set docs (size 0) yield NaN here and
-    * NaN in the verify — dropped by both, consistently. */
-  private def sizeRatioBound(szA: Column, szB: Column): Column =
-    least(szA, szB).cast("double") / greatest(szA, szB).cast("double")
+    * The sizes ride the band join at 8 B/side (`sz_<a>`, `sz_<b>`),
+    * filtering BEFORE the pair-distinct exchange and the folded-set
+    * attach — this is the first stage of the two-stage verify that pulled
+    * the 64× probe's per-task sort memory back toward the default-heap
+    * operating point (see SCALE_r12.json). Empty-set docs (size 0) yield
+    * NaN here and NaN in the verify, which Spark orders above every
+    * threshold — kept by both, consistently. */
+  private def sizeCull(a: String, b: String, threshold: Double): Column =
+    least(col(s"sz_$a"), col(s"sz_$b")).cast("double") /
+      greatest(col(s"sz_$a"), col(s"sz_$b")).cast("double") >= threshold
 
   /** `numHashes / bands`, the rows of each band. */
   private[graft] def rowsPerBand(numHashes: Int, bands: Int): Int = {
@@ -244,43 +242,54 @@ object Dedup {
     numHashes / bands
   }
 
-  // ---- The steps every MinHash pair generator is built from -----------
+  // ---- The steps every pair generator is built from -------------------
   //
-  // band:        [[bandRows]] / [[md5Bands]], one row per (doc, band)
-  // candidates:  [[selfCandidates]] (one table), [[bandCandidates]] (after
-  //              any band join), [[indexCandidates]] (a persisted index)
-  // verify:      [[foldedSets]] + [[verifyJaccard]]
+  // key:         [[keyRows]], one row per (doc, band) with its bucket key;
+  //              [[bandRows]] / [[md5Bands]] are its MinHash form
+  // candidates:  [[bucketPairs]] (two keyed sides), [[selfPairs]] (one
+  //              table), [[indexCandidates]] (a persisted index)
+  // verify:      [[verifyPairs]]; [[foldedSets]] + [[verifyJaccard]] for
+  //              the MinHash family
   //
-  // Exchange discipline, for all of them: the band join and the
-  // candidate-pair `distinct` carry ONLY (band, key, id[, size]) and
-  // (id, id) — never the shingle arrays (KBs/doc; the naive formulation
-  // shuffles them 2×bands× plus once per matched pair). The folded sets
-  // re-attach by id just before the exact verify, so each doc's set
-  // crosses an exchange at most twice regardless of band count or bucket
-  // skew. Shingles are recomputed on the re-attach branch (a codegen'd
-  // map over the scan) on purpose: CPU is cheap next to exchange bytes at
-  // corpus scale, and each pair is verified once, not once per band.
+  // Every generator is these three steps with its own keys, its own
+  // candidate filter and its own score:
+  //   MinHash (xxhash64, md5, cross-corpus)  band keys, [[sizeCull]], Jaccard
+  //   simhash                                chunks, Hamming bound, —
+  //   md5 simhash                            chunks, —, Hamming
+  //   embedding LSH                          hyperplane buckets, —, cosine
+  //   edit distance                          md5 band keys, length gap, Levenshtein
   //
-  // The simhash, md5-simhash and embedding-LSH self-joins below keep their
-  // own candidate joins: their keys are not shingle bands and they have no
-  // set size to cull on, so sharing [[selfCandidates]] would branch on the
-  // caller.
+  // Exchange discipline, for all of them: the bucket join and the
+  // candidate-pair `distinct` carry ONLY (band, key, id[, 8-byte
+  // summary]) and (id, id) — never the shingle arrays, bit arrays,
+  // vectors or texts (KBs/doc; the naive formulation shuffles them
+  // 2×bands× plus once per matched pair). The payloads re-attach by id
+  // just before the exact verify, so each doc's payload crosses an
+  // exchange at most twice regardless of band count or bucket skew.
+  // Payloads are recomputed on the re-attach branch (a codegen'd map over
+  // the scan) on purpose: CPU is cheap next to exchange bytes at corpus
+  // scale, and each pair is verified once, not once per band.
 
-  /** Band step: one row per (document, band) with the `keep` columns,
-    * the document's distinct-shingle count `__sz__` (for
-    * [[sizeRatioBound]]), `__band__` and its key `__key__`. `summary`
-    * maps the distinct shingle array to the per-document column the keys
-    * read (md5 digests, or a minhash signature), projected on its own so
-    * it is computed once; `keys` maps that column to the array of band
-    * keys. */
-  private def bandRows(df: DataFrame, textCol: String, shingleN: Int, keep: Column*)(
-      summary: Column => Column, keys: Column => Column): DataFrame =
-    df.select(keep :+ array_distinct(Text.shingles(col(textCol), shingleN)).as("__sh__"): _*)
-      .withColumn("__dg__", summary(col("__sh__")))
-      .select(col("*"), size(col("__sh__")).as("__sz__"), posexplode(keys(col("__dg__"))))
-      .drop("__sh__", "__dg__")
+  /** Key step: one row per (document, band) with the `keep` columns, the
+    * band `__band__` and its bucket key `__key__`, from `keys`, an array
+    * with one key per band. */
+  private def keyRows(df: DataFrame, keys: Column, keep: Column*): DataFrame =
+    df.select(keep :+ posexplode(keys): _*)
       .withColumnRenamed("pos", "__band__")
       .withColumnRenamed("col", "__key__")
+
+  /** [[keyRows]] over a document's distinct shingles: the `keep` columns,
+    * the distinct-shingle count `__sz__` (for [[sizeCull]]), `__band__`
+    * and `__key__`. `summary` maps the distinct shingle array to the
+    * per-document column the keys read (md5 digests, or a minhash
+    * signature), projected on its own so it is computed once; `keys` maps
+    * that column to the array of band keys. */
+  private def bandRows(df: DataFrame, textCol: String, shingleN: Int, keep: Column*)(
+      summary: Column => Column, keys: Column => Column): DataFrame =
+    keyRows(df.select(keep :+ array_distinct(Text.shingles(col(textCol), shingleN)).as("__sh__"): _*)
+        .withColumn("__dg__", summary(col("__sh__"))),
+      keys(col("__dg__")), col("*"), size(col("__sh__")).as("__sz__"))
+      .drop("__sh__", "__dg__")
 
   /** [[bandRows]] under the engine-portable md5 band keys — the one band
     * step of the batch pairs, the persisted index and the stream. The raw
@@ -298,31 +307,27 @@ object Dedup {
       shingleDigests, md5BandKeysFromDigests(_, nBands, rowsPerBand))
   }
 
-  /** One side of a band join: a [[bandRows]] output with its id and size
-    * renamed to `id_<s>` / `sz_<s>`. */
-  private def bandSide(banded: DataFrame, idCol: String, s: String): DataFrame =
-    banded.select(col(idCol).as(s"id_$s"), col("__sz__").as(s"sz_$s"),
-      col("__band__"), col("__key__"))
+  /** One side of a bucket join: keyed rows with `idCol` renamed to
+    * `id_<s>` and every other kept `__x__` column to `x_<s>`. */
+  private def side(keyed: DataFrame, idCol: String, s: String): DataFrame =
+    keyed.select(keyed.columns.toSeq.map {
+      case c @ ("__band__" | "__key__") => col(c)
+      case c if c == idCol => col(c).as(s"id_$s")
+      case c => col(c).as(s"${c.stripPrefix("__").stripSuffix("__")}_$s")
+    }: _*)
 
-  /** Candidate step after a band join of sides `a` and `b`: the exact
-    * size-ratio cull ([[sizeRatioBound]]) before the distinct exchange
-    * and the folded-set attach, then one row per distinct (id_a, id_b). */
-  private def bandCandidates(joined: DataFrame, a: String, b: String,
-      threshold: Double): DataFrame =
-    joined.filter(sizeRatioBound(col(s"sz_$a"), col(s"sz_$b")) >= threshold)
-      .select(s"id_$a", s"id_$b")
-      .distinct()
+  /** Candidate step: the bucket equi-join of two [[side]]s on (band, key)
+    * — hash-partitioned, so linear in bucket sizes — then the caller's
+    * `keep` filter on the joined rows, before the distinct exchange, and
+    * one row per distinct `out`. */
+  private def bucketPairs(a: DataFrame, b: DataFrame)(keep: Column, out: Column*): DataFrame =
+    a.join(b, Seq("__band__", "__key__")).filter(keep).select(out: _*).distinct()
 
-  /** Candidate step of a self-join: band-bucket equi-join (hash-partitioned
-    * on (band, key), so linear in bucket sizes), each unordered pair once
-    * as `id_a < id_b`. The order filter is the caller's difference from the
-    * two-table join (ids of two tables share no order), so it is applied
-    * here, on the joined rows, not inside [[bandCandidates]]. */
-  private def selfCandidates(banded: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    bandCandidates(bandSide(banded, idCol, "a")
-      .join(bandSide(banded, idCol, "b"), Seq("__band__", "__key__"))
-      .filter(col("id_a") < col("id_b")), "a", "b", threshold)
+  /** [[bucketPairs]] of one keyed table with itself: each unordered pair
+    * once, as `id_a < id_b`. */
+  private def selfPairs(keyed: DataFrame, idCol: String)(keep: Column, out: Column*): DataFrame =
+    bucketPairs(side(keyed, idCol, "a"), side(keyed, idCol, "b"))(
+      col("id_a") < col("id_b") && keep, out: _*)
 
   /** Index-candidate step: `docs` banded map-side ([[md5Bands]]) and
     * equi-joined to a persisted [[writeBandIndex]] output on (band, key);
@@ -340,33 +345,41 @@ object Dedup {
         Seq("__band__", "__key__"))
       .select("id_l", "id_r")
 
+  /** Verify step: re-attach each side's payload to the candidate pairs by
+    * two id equi-joins, then the exact `score` and its `keep` filter. `a`
+    * and `b` are (id, payload) frames whose id columns name the candidate
+    * columns they join on. Returns (idA, idB, score). */
+  private def verifyPairs(candidates: DataFrame, a: DataFrame, b: DataFrame)(
+      score: Column, keep: Column): DataFrame = {
+    val (idA, idB) = (a.columns.head, b.columns.head)
+    candidates.join(a, Seq(idA)).join(b, Seq(idB))
+      .select(col(idA), col(idB), score)
+      .filter(keep)
+  }
+
   /** Verify payload of one side: (`id_<s>`, `hs_<s>`) with the
     * [[foldedShingleSet]] of each document. */
   private[graft] def foldedSets(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, s: String): DataFrame =
     df.select(col(idCol).as(s"id_$s"), foldedShingleSet(col(textCol), shingleN).as(s"hs_$s"))
 
-  /** Verify step: re-attach each side's folded set to the candidate
-    * pairs by two id-equi-joins, then the exact Jaccard
-    * |A∩B| / |A∪B| and the `threshold` filter. `a` and `b` are two-column
-    * (id, folded set) frames ([[foldedSets]]); their id columns name the
-    * candidate columns they join on. Returns (idA, idB, jaccard). */
+  /** [[verifyPairs]] under the exact Jaccard |A∩B| / |A∪B| of two
+    * (id, folded set) frames ([[foldedSets]]) and the `threshold` filter.
+    * Returns (idA, idB, jaccard). */
   private[graft] def verifyJaccard(candidates: DataFrame, a: DataFrame, b: DataFrame,
       threshold: Double): DataFrame = {
-    val Array(idA, hsA) = a.columns
-    val Array(idB, hsB) = b.columns
-    candidates.join(a, Seq(idA)).join(b, Seq(idB))
-      .select(col(idA), col(idB),
-        (size(array_intersect(col(hsA), col(hsB))).cast("double") /
-          size(array_union(col(hsA), col(hsB))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val (hsA, hsB) = (col(a.columns(1)), col(b.columns(1)))
+    verifyPairs(candidates, a, b)(
+      (size(array_intersect(hsA, hsB)).cast("double") /
+        size(array_union(hsA, hsB)).cast("double")).as("jaccard"),
+      col("jaccard") >= threshold)
   }
 
   private def md5BandedPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double, nBands: Int, rowsPerBand: Int): DataFrame =
     verifyJaccard(
-      selfCandidates(md5Bands(df, textCol, shingleN, nBands, rowsPerBand, col(idCol)),
-        idCol, threshold),
+      selfPairs(md5Bands(df, textCol, shingleN, nBands, rowsPerBand, col(idCol)), idCol)(
+        sizeCull("a", "b", threshold), col("id_a"), col("id_b")),
       foldedSets(df, idCol, textCol, shingleN, "a"),
       foldedSets(df, idCol, textCol, shingleN, "b"), threshold)
 
@@ -391,12 +404,11 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     val r = rowsPerBand(numHashes, bands)
-    def side(df: DataFrame, id: String, text: String, s: String) =
-      bandSide(md5Bands(df, text, shingleN, bands, r, col(id)), id, s)
+    def banded(df: DataFrame, id: String, text: String, s: String) =
+      side(md5Bands(df, text, shingleN, bands, r, col(id)), id, s)
     verifyJaccard(
-      bandCandidates(side(left, leftId, leftText, "l")
-        .join(side(right, rightId, rightText, "r"), Seq("__band__", "__key__")),
-        "l", "r", threshold),
+      bucketPairs(banded(left, leftId, leftText, "l"), banded(right, rightId, rightText, "r"))(
+        sizeCull("l", "r", threshold), col("id_l"), col("id_r")),
       foldedSets(left, leftId, leftText, shingleN, "l"),
       foldedSets(right, rightId, rightText, shingleN, "r"), threshold)
   }
@@ -466,64 +478,50 @@ object Dedup {
   }
 
   /** Edit-distance-verified near-dup pairs: MinHash-banded candidate
-    * generation (engine-portable md5 path, NO jaccard cutoff — every
-    * banded collision survives to the verify) followed by an exact
-    * Levenshtein check on the raw text. The verify is the expensive step
-    * at scale — three guards bound it: candidate volume is band-governed
-    * (never all-pairs), a length prefilter skips pairs whose size gap
-    * already exceeds `maxDist` (|len(a)−len(b)| is a Levenshtein lower
-    * bound) without running the DP, and the DP itself is the banded
-    * O(n·maxDist) threshold variant (`levenshtein(l, r, threshold)`),
-    * not the full O(n·m) matrix. Returns (id_a, id_b, edit_dist ≤
-    * maxDist). */
+    * generation (engine-portable md5 band keys, NO jaccard cutoff — every
+    * banded collision is a candidate) followed by an exact Levenshtein
+    * check on the raw text. The verify is the expensive step at scale —
+    * three guards bound it: candidate volume is band-governed (never
+    * all-pairs), a length cull in the candidate step drops pairs whose
+    * length gap already exceeds `maxDist` (|len(a)−len(b)| is a
+    * Levenshtein lower bound) before the pair distinct and the text
+    * attach, and the DP itself is the banded O(n·maxDist) threshold
+    * variant (`levenshtein(l, r, threshold)`), not the full O(n·m)
+    * matrix. Returns (id_a, id_b, edit_dist ≤ maxDist). */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative: $maxDist")
-    val cand = minhashLshPairsMd5(df, idCol, textCol, shingleN, numHashes,
-      bands, threshold = 0.0).select("id_a", "id_b")
-    cand
-      .join(df.select(col(idCol).as("id_a"), col(textCol).as("__ta__")), Seq("id_a"))
-      .join(df.select(col(idCol).as("id_b"), col(textCol).as("__tb__")), Seq("id_b"))
-      .filter(abs(length(col("__ta__")) - length(col("__tb__"))) <= maxDist)
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("__ta__"), col("__tb__"), maxDist).cast("long").as("edit_dist"))
-      .filter(col("edit_dist") >= 0) // threshold variant returns -1 past maxDist
+    val banded = md5Bands(df, textCol, shingleN, bands, rowsPerBand(numHashes, bands),
+      col(idCol), length(col(textCol)).as("__len__"))
+    verifyPairs(
+      selfPairs(banded, idCol)(abs(col("len_a") - col("len_b")) <= maxDist, col("id_a"), col("id_b")),
+      df.select(col(idCol).as("id_a"), col(textCol).as("__ta__")),
+      df.select(col(idCol).as("id_b"), col(textCol).as("__tb__")))(
+      levenshtein(col("__ta__"), col("__tb__"), maxDist).cast("long").as("edit_dist"),
+      col("edit_dist") >= 0) // threshold variant returns -1 past maxDist
   }
 
   /** SimHash near-dup pairs under the ENGINE-PORTABLE md5 token hash —
     * the independently-checkable twin of [[simhashPairs]] (q105b). The
     * simhash is kept as a 64-element ±bit array ([[Text.simhashBitsMd5]]):
-    * chunk keys are bit-substrings (pigeonhole guarantee identical to the
-    * fast path), the candidate join carries only (id, chunk, key), and the
-    * bit arrays (64 ints ≈ 0.3 KB) re-attach by id for the exact Hamming
+    * chunk keys are bit-substrings of the same [[chunks]] as the fast
+    * path, the candidate join carries only (id, band, key), and the bit
+    * arrays (64 ints ≈ 0.3 KB) re-attach by id for the exact Hamming
     * verify. */
   def simhashPairsMd5(df: DataFrame, idCol: String, textCol: String,
       maxBits: Int = 3): DataFrame = {
-    require(maxBits >= 0 && maxBits < 64, s"maxBits must be in [0, 64): $maxBits")
-    val nChunks = maxBits + 1
-    val bounds = (0 to nChunks).map(i => i * 64 / nChunks)
+    val keys = array(chunks(maxBits).map { case (lo, width) =>
+      concat_ws("", slice(col("__bits__"), lo + 1, width).cast("array<string>"))
+    }: _*)
     val hashed = df.select(col(idCol),
       Text.simhashBitsMd5(Text.wordTokens(col(textCol))).as("__bits__"))
-    val chunked = hashed.select(col(idCol),
-      posexplode(array((0 until nChunks).map { i =>
-        concat_ws("", slice(col("__bits__"), bounds(i) + 1, bounds(i + 1) - bounds(i))
-          .cast("array<string>"))
-      }: _*)))
-      .withColumnRenamed("pos", "__chunk__").withColumnRenamed("col", "__key__")
-    val a = chunked.select(col(idCol).as("id_a"), col("__chunk__"), col("__key__"))
-    val b = chunked.select(col(idCol).as("id_b"), col("__chunk__"), col("__key__"))
-    val candidates = a.join(b, Seq("__chunk__", "__key__"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    candidates
-      .join(hashed.select(col(idCol).as("id_a"), col("__bits__").as("bits_a")), Seq("id_a"))
-      .join(hashed.select(col(idCol).as("id_b"), col("__bits__").as("bits_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        aggregate(zip_with(col("bits_a"), col("bits_b"), (x, y) => abs(x - y)),
-          lit(0), (acc, x) => acc + x).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxBits)
+    def bits(s: String) = hashed.select(col(idCol).as(s"id_$s"), col("__bits__").as(s"bits_$s"))
+    verifyPairs(selfPairs(keyRows(hashed, keys, col(idCol)), idCol)(lit(true), col("id_a"), col("id_b")),
+      bits("a"), bits("b"))(
+      aggregate(zip_with(col("bits_a"), col("bits_b"), (x, y) => abs(x - y)),
+        lit(0), (acc, x) => acc + x).cast("long").as("hamming"),
+      col("hamming") <= maxBits)
   }
 
   /** Embedding-cosine near-duplicate pairs — exact baseline: broadcast
@@ -560,29 +558,23 @@ object Dedup {
     * p = 1 - θ/π. Sized for true near-dups (cos ≥ 0.9 → ~98% recall at
     * 6 planes × 8 tables); raise nTables for lower thresholds.
     *
-    * Exchanges carry id/bucket columns only (table join + pair distinct);
-    * the embedding vectors re-attach by id just before the exact-cosine
-    * verify — the exchange discipline of the MinHash steps above. */
+    * Rows that can never verify are dropped before the key step: a null
+    * or empty vector, or one with a null element, has a null cosine with
+    * every vector (or NaN, empty with empty), and an all-zero vector or
+    * one with a NaN or infinite element a NaN one — pairs
+    * [[embeddingPairsBrute]] rejects too. Kept, they would all share one
+    * bucket per table (bucket 0, or all-ones for zero and NaN vectors)
+    * and add ~k²/2 doomed candidates per table for k such rows. */
   def embeddingPairsLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int = 6, nTables: Int = 8): DataFrame = {
     val vecs = df.select(col(idCol), col(vecCol))
-    val banded = vecs.select(col(idCol),
-      posexplode(array((0 until nTables).map(t =>
-        Similarity.lshBucket(col(vecCol), nPlanes, t)): _*)))
-      .withColumnRenamed("pos", "__table__")
-      .withColumnRenamed("col", "__bucket__")
-    val a = banded.select(col(idCol).as("id_a"), col("__table__"), col("__bucket__"))
-    val b = banded.select(col(idCol).as("id_b"), col("__table__"), col("__bucket__"))
-    val candidates = a.join(b, Seq("__table__", "__bucket__"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    candidates
-      .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va__")), Seq("id_a"))
-      .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb__")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Similarity.nativeCosine(df)(col("__va__"), col("__vb__")).as("cosine"))
-      .filter(!isnan(col("cosine")) && col("cosine") >= threshold) // see brute: NaN ≠ near-dup
+      .filter(forall(col(vecCol), x => abs(x) < Double.PositiveInfinity) && exists(col(vecCol), _ =!= 0))
+    val keys = array((0 until nTables).map(t => Similarity.lshBucket(col(vecCol), nPlanes, t)): _*)
+    def payload(s: String) = vecs.select(col(idCol).as(s"id_$s"), col(vecCol).as(s"vec_$s"))
+    verifyPairs(selfPairs(keyRows(vecs, keys, col(idCol)), idCol)(lit(true), col("id_a"), col("id_b")),
+      payload("a"), payload("b"))(
+      Similarity.nativeCosine(df)(col("vec_a"), col("vec_b")).as("cosine"),
+      !isnan(col("cosine")) && col("cosine") >= threshold) // see brute: NaN ≠ near-dup
   }
 
   /**

@@ -112,7 +112,7 @@ object Pq {
   /** (sub, cid, cvec) rows → ONE row holding `cbs[sub][cid] = cvec`
     * (both levels index-ordered) — the broadcast payload both encode and
     * search pin to the small side of a crossJoin. */
-  private def packed(codebooks: DataFrame): DataFrame =
+  private[graft] def packed(codebooks: DataFrame): DataFrame =
     codebooks
       .groupBy(col("sub"))
       .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cbj"))
@@ -127,8 +127,8 @@ object Pq {
     * Computed by the native [[graft.plans.PqEncodeKernel]] — one fused
     * loop instead of m×ksub interpreted `l2sq` folds per row (the 64×
     * code scan fell 51 s → see OPTIMIZATION_r16.md §3); bit-identical to
-    * [[encodeRef]], the Column formulation kept below as the executable
-    * spec (PqKernelParitySpec + the q231 oracle pin it). */
+    * the Column formulation it replaced, kept in PqKernelParitySpec as
+    * the executable spec (that spec and the q231 oracle pin it). */
   def encode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame): DataFrame = {
     graft.plans.GraftExtensions.register(corpus.sparkSession)
@@ -136,29 +136,6 @@ object Pq {
       .select(col(idCol),
         call_function("graft_pq_encode", col(vecCol), col("__cbs__")).as("codes"))
   }
-
-  /** The original Column formulation of [[encode]] — the executable spec
-    * the native kernel is differentially tested against. Not on any
-    * query path. */
-  private[graft] def encodeRef(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(packed(codebooks)))
-      .select(col(idCol),
-        transform(col("__cbs__"), (cbj, j) => {
-          val ds = size(element_at(cbj, 1))
-          val sub = slice(col(vecCol), j * ds + 1, ds)
-          array_min(transform(cbj, (cvec, c) =>
-            struct(l2sq(sub, cvec).as("d"), c.as("cid"))))
-            .getField("cid").cast("byte")
-        }).as("codes"))
-
-  /** The original Column ADC fold — the executable spec for
-    * [[graft.plans.PqAdcKernel]]. Not on any query path. */
-  private[graft] def adcDistRef(codes: Column, lut: Column): Column =
-    aggregate(
-      zip_with(codes, lut,
-        (c, lutj) => element_at(lutj, c.cast("int") + 1)),
-      lit(0.0), (acc, x) => acc + x)
 
   /** ADC top-k: smallest summed table-lookup distance per query, over the
     * codes alone. Same plan skeleton as `topKBruteForce` — broadcast the

@@ -14,9 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
  * hyperplanes packed into one long.
  *
  * Bit-identical to the Column formulations it replaces
- * ([[graft.functions.Similarity.lshBucketRef]] /
- * [[graft.functions.Similarity.lshBucketMd5Ref]], kept as the executable
- * spec and pinned by a differential test): per plane `q = planeOffset + p`,
+ * (LshBucketParitySpec's `lshBucketRef` / `lshBucketMd5Ref`, kept as the
+ * executable spec of that differential test): per plane `q = planeOffset + p`,
  * the projection is the LEFT FOLD in dimension order of
  * `x_d * component(q, d)` accumulated in double, and bit `p` is set iff
  * `proj >= 0` under Spark's total-order comparison (NaN counts as

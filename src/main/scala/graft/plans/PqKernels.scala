@@ -19,10 +19,10 @@ import org.apache.spark.sql.types._
  * point m=16, ksub=64 that is 1024 interpreted folds with two array
  * allocations each, measured 51 s for the 64× corpus where the whole
  * LSH-ANN path takes 0.75 s). These kernels run the same arithmetic as
- * fused loops; the Column originals are kept in [[graft.ops.Pq]] as
- * `encodeRef`/`adcDistRef`, the executable spec a differential test pins
- * against (PqKernelParitySpec), and the q231 DuckDB oracle re-verifies
- * the composed search bit-for-bit.
+ * fused loops; the Column originals are kept in PqKernelParitySpec as
+ * `encodeRef`/`adcDistRef`, the executable spec its differential tests
+ * pin against, and the q231 DuckDB oracle re-verifies the composed search
+ * bit-for-bit.
  *
  * Bit-exactness contract (replicated from the lambda semantics, ANSI on):
  *

@@ -26,7 +26,8 @@ object ExplainAudit {
     "RDD\\[\\d+\\]" -> "RDD[N]",                      // checkpointed RDDs
     "\\$Lambda(\\$\\d+)?/0x[0-9a-f]+" -> "\\$Lambda", // JVM lambda classes
     "(?<=[\\w$])@[0-9a-f]+\\b" -> "@H",              // identity hash codes
-    "(lambda \\w+)_\\d+" -> "$1_N")                  // fresh lambda variables
+    "(lambda \\w+)_\\d+" -> "$1_N",                  // fresh lambda variables
+    "\\.scala:\\d+" -> ".scala:N")                   // call-site line numbers
 
   def plan(df: DataFrame): String =
     RunIds.foldLeft(df.queryExecution.explainString(FormattedMode)) {
@@ -50,8 +51,9 @@ object ExplainAudit {
       sb.append("columns; aggregates are partial+final pairs around one exchange;\n")
       sb.append("dimension joins are `BroadcastHashJoin`; no exchange without a\n")
       sb.append("reason; WholeStageCodegen spans cover the hot path. Run-specific\n")
-      sb.append("IDs (expression ids, RDD ids, lambda names, hash codes) are\n")
-      sb.append("normalized, so a diff of this file is a real plan change.\n")
+      sb.append("IDs (expression ids, RDD ids, lambda names, hash codes, source\n")
+      sb.append("line numbers) are normalized, so a diff of this file is a real\n")
+      sb.append("plan change.\n")
       Registry.all.foreach { q =>
         sb.append(s"\n## ${q.name}\n\n```\n${plan(q.fn(spark, sfDir))}```\n")
       }

@@ -52,6 +52,8 @@ class BenchKitSpec extends SparkSuite {
       val second = tools.ExplainAudit.plan(q.fn(spark, sfDir))
       assert(first == second, s"$n plan text differs between two explains")
       assert(!"#\\d".r.findFirstIn(first).isDefined, s"$n kept an expression id")
+      // a source line number moves with any edit to the calling file
+      assert(!"\\.scala:\\d".r.findFirstIn(first).isDefined, s"$n kept a call-site line number")
     }
   }
 

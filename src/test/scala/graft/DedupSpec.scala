@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.functions.Text
@@ -418,12 +419,25 @@ class DedupSpec extends SparkSuite {
     assert(viaIndex == direct && viaIndex.nonEmpty, s"index=$viaIndex direct=$direct")
   }
 
-  test("every MinHash pair generator reports the exact Jaccard of a plain-Scala reference") {
-    // Independent reference: Text.shingles' semantics written out in plain
-    // Scala (lowercase, whitespace tokens, space-joined n-grams, a doc
-    // shorter than n is one shingle, distinct) and the exact set Jaccard.
+  test("every pair generator reports each pair once, with its plain-Scala reference score") {
+    // Independent references written out in plain Scala: Text.shingles'
+    // semantics (lowercase, whitespace tokens, space-joined n-grams, a doc
+    // shorter than n is one shingle, distinct) with the exact set Jaccard;
+    // the Hamming distance of the simhash signatures; Levenshtein; cosine.
     // The parity specs compare one generator with another; this one pins
-    // every generator to a value computed without Spark.
+    // every generator to a value computed without Spark, each pair once.
+    def check(name: String, df: DataFrame, ref: (Long, Long) => Double,
+        passes: Double => Boolean, certain: Seq[(Long, Long)]): Unit = {
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Number](2).doubleValue)
+      val got = rows.toMap
+      assert(got.size == rows.length, s"$name reports a pair more than once: ${rows.toSeq}")
+      got.foreach { case ((a, b), v) =>
+        assert(math.abs(v - ref(a, b)) <= 1e-12, s"$name ($a,$b): $v vs ${ref(a, b)}")
+        assert(passes(v), s"$name ($a,$b): $v fails its threshold")
+      }
+      assert(certain.nonEmpty, s"$name: fixture needs pairs it must report")
+      certain.foreach(p => assert(got.contains(p), s"$name missed pair $p"))
+    }
     val n = 2
     val t = 0.3
     def shingleSet(text: String): Set[String] = {
@@ -448,45 +462,125 @@ class DedupSpec extends SparkSuite {
     val sets = rows.map { case (id, text) => id -> shingleSet(text) }.toMap
     def ref(a: Long, b: Long): Double =
       (sets(a) intersect sets(b)).size.toDouble / (sets(a) union sets(b)).size
-    def check(name: String, df: org.apache.spark.sql.DataFrame,
-        candidates: Seq[(Long, Long)]): Unit = {
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      got.foreach { case ((a, b), j) =>
-        assert(math.abs(j - ref(a, b)) <= 1e-12, s"$name ($a,$b): $j vs ${ref(a, b)}")
-        assert(j >= t, s"$name ($a,$b): $j below threshold")
-      }
-      // identical sets collide in every band, so they are always reported
-      val identical = candidates.filter { case (a, b) => ref(a, b) == 1.0 }
-      assert(identical.nonEmpty, s"$name: fixture needs identical pairs")
-      identical.foreach(p => assert(got.contains(p), s"$name missed identical pair $p"))
-    }
+    // identical sets collide in every band, so they are always reported
+    def checkJaccard(name: String, df: DataFrame, candidates: Seq[(Long, Long)]): Unit =
+      check(name, df, ref, _ >= t, candidates.filter { case (a, b) => ref(a, b) == 1.0 })
     val d = docs(rows: _*)
     val ids = rows.map(_._1)
     val selfPairs = for (a <- ids; b <- ids if a < b) yield (a, b)
-    check("minhashLshPairs", Dedup.minhashLshPairs(d, "id", "text",
+    checkJaccard("minhashLshPairs", Dedup.minhashLshPairs(d, "id", "text",
       shingleN = n, numHashes = 16, bands = 4, threshold = t), selfPairs)
-    check("jaccardPairs", Dedup.jaccardPairs(d, "id", "text",
+    checkJaccard("jaccardPairs", Dedup.jaccardPairs(d, "id", "text",
       shingleN = n, threshold = t), selfPairs)
-    check("minhashLshPairsMd5", Dedup.minhashLshPairsMd5(d, "id", "text",
+    checkJaccard("minhashLshPairsMd5", Dedup.minhashLshPairsMd5(d, "id", "text",
       shingleN = n, numHashes = 16, bands = 4, threshold = t), selfPairs)
 
     val batch = d.filter(col("id") % 2 === 0)
     val corpus = d.filter(col("id") % 2 === 1)
     val crossPairs = for (l <- ids if l % 2 == 0; r <- ids if r % 2 == 1) yield (l, r)
-    check("crossCorpusPairsMd5", Dedup.crossCorpusPairsMd5(batch, "id", "text",
+    checkJaccard("crossCorpusPairsMd5", Dedup.crossCorpusPairsMd5(batch, "id", "text",
       corpus, "id", "text", shingleN = n, numHashes = 16, bands = 4, threshold = t),
       crossPairs)
     val path = java.nio.file.Files.createTempDirectory("graft_bandidx_ref")
       .resolve("idx").toString
     Dedup.writeBandIndex(corpus, "id", "text", path,
       shingleN = n, numHashes = 16, bands = 4)
-    check("linkAgainstIndex", Dedup.linkAgainstIndex(batch, "id", "text", path,
+    checkJaccard("linkAgainstIndex", Dedup.linkAgainstIndex(batch, "id", "text", path,
       corpus, "id", "text", shingleN = n, numHashes = 16, bands = 4, threshold = t),
       crossPairs)
     val claims = graft.streaming.EventStream.linkClaimsAgainstIndex(batch, "id", "text",
       spark.read.parquet(path), shingleN = n, numHashes = 16, bands = 4)
-    check("linksFromClaims", graft.streaming.EventStream.linksFromClaims(claims,
+    checkJaccard("linksFromClaims", graft.streaming.EventStream.linksFromClaims(claims,
       batch, "id", "text", corpus, "id", "text", shingleN = n, threshold = t),
       crossPairs)
+
+    // simhash: banding on the pigeonhole chunks is complete, so every
+    // pair within the bound is reported
+    val maxBits = 12
+    val sims = d.select(col("id"), Text.simhash(Text.wordTokens(col("text")))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def simRef(a: Long, b: Long) = java.lang.Long.bitCount(sims(a) ^ sims(b)).toDouble
+    check("simhashPairs", Dedup.simhashPairs(d, "id", "text", maxBits),
+      simRef, _ <= maxBits, selfPairs.filter { case (a, b) => simRef(a, b) <= maxBits })
+    val bits = d.select(col("id"), Text.simhashBitsMd5(Text.wordTokens(col("text")))).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    def bitsRef(a: Long, b: Long) = bits(a).zip(bits(b)).count { case (x, y) => x != y }.toDouble
+    check("simhashPairsMd5", Dedup.simhashPairsMd5(d, "id", "text", maxBits),
+      bitsRef, _ <= maxBits, selfPairs.filter { case (a, b) => bitsRef(a, b) <= maxBits })
+
+    // edit distance: identical texts share every band key
+    val text = rows.toMap
+    def levRef(a: Long, b: Long): Double = {
+      val (x, y) = (text(a), text(b))
+      var prev = Array.tabulate(y.length + 1)(identity)
+      for (i <- 1 to x.length) {
+        val cur = Array.fill(y.length + 1)(i)
+        for (j <- 1 to y.length)
+          cur(j) = math.min(math.min(prev(j) + 1, cur(j - 1) + 1),
+            prev(j - 1) + (if (x(i - 1) == y(j - 1)) 0 else 1))
+        prev = cur
+      }
+      prev(y.length).toDouble
+    }
+    check("editDistancePairs", Dedup.editDistancePairs(d, "id", "text", maxDist = 5),
+      levRef, _ <= 5, selfPairs.filter { case (a, b) => text(a) == text(b) })
+
+    // embedding LSH: identical vectors share every bucket
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val base = Array.fill(3)(Array.fill(16)(rnd.nextFloat() - 0.5f))
+    val vecs = Seq(1L -> base(0), 2L -> base(0), 3L -> base(1), 4L -> base(1), 5L -> base(2)) ++
+      (6L to 9L).map(i => i -> base(0).map(_ + 0.02f * (rnd.nextFloat() - 0.5f))) ++
+      (10L to 13L).map(i => i -> Array.fill(16)(rnd.nextFloat() - 0.5f))
+    val byId = vecs.toMap
+    def cosRef(a: Long, b: Long): Double = {
+      val (x, y) = (byId(a).map(_.toDouble), byId(b).map(_.toDouble))
+      val dot = x.zip(y).map { case (p, q) => p * q }.sum
+      dot / (math.sqrt(x.map(v => v * v).sum) * math.sqrt(y.map(v => v * v).sum))
+    }
+    check("embeddingPairsLsh",
+      Dedup.embeddingPairsLsh(vecs.toDF("id", "vec"), "id", "vec", threshold = 0.9),
+      cosRef, _ >= 0.9, Seq((1L, 2L), (3L, 4L)))
+  }
+
+  test("embeddingPairsLsh drops vectors that can never verify before the bucket join") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // Each kind the LSH drops: all-zero (+0 and -0), null, empty, a null,
+    // NaN or infinite element. Alone, 300 zero vectors would share the
+    // all-ones bucket of every table — ~45k doomed candidates per table.
+    val zeros = (0L until 300L).map(i => Row(i, Seq.fill(8)(if (i % 2 == 0) 0f else -0f)))
+    val dropped = zeros ++ Seq(Row(300L, null), Row(301L, Seq.empty[Float]),
+      Row(302L, Seq[Any](1f, null, 2f)), Row(303L, Seq(1f, Float.NaN, 2f)),
+      Row(304L, Seq(Float.PositiveInfinity, 1f)), Row(305L, Seq(1f, Float.NegativeInfinity)))
+    val rnd = new scala.util.Random(5)
+    val twin = Seq.fill(8)(rnd.nextFloat() - 0.5f)
+    val kept = Seq(Row(400L, twin), Row(401L, twin)) ++
+      (402L until 412L).map(i => Row(i, Seq.fill(8)(rnd.nextFloat() - 0.5f)))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("vec", ArrayType(FloatType, containsNull = true))))
+    def frame(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, schema)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // the brute baseline never reports a dropped kind, at any threshold
+    val all = frame(dropped ++ kept)
+    val brute = pairs(Dedup.embeddingPairsBrute(all, "id", "vec", threshold = -2.0))
+    assert(brute.size == 12 * 11 / 2 && brute.forall { case (a, b) => a >= 400L && b >= 400L })
+    assert(pairs(Dedup.embeddingPairsLsh(all, "id", "vec", threshold = 0.8)) ==
+      pairs(Dedup.embeddingPairsBrute(all, "id", "vec", threshold = 0.8)))
+
+    // and no dropped row reaches the bucket join: only the twins, once per table
+    val lsh = Dedup.embeddingPairsLsh(frame(dropped ++ kept.take(2)), "id", "vec", threshold = 0.8)
+    assert(pairs(lsh) == Set((400L, 401L)))
+    // the bucket join is the one on two keys (band, bucket); the verify
+    // joins are on one id each
+    val joins = new AdaptiveSparkPlanHelper {}.collect(lsh.queryExecution.executedPlan) {
+      case j: BaseJoinExec if j.leftKeys.size == 2 => j
+    }
+    assert(joins.size == 1, s"one bucket join expected: $joins")
+    assert(joins.head.metrics("numOutputRows").value == 8L)
   }
 }

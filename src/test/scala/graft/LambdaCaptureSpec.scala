@@ -66,9 +66,7 @@ class LambdaCaptureSpec extends SparkSuite {
     "cosine" -> Similarity.cosine(vec, vec),
     "nativeCosine" -> Similarity.nativeCosine(frame)(vec, vec),
     "lshBucket" -> Similarity.lshBucket(vec, 4),
-    "lshBucketRef" -> Similarity.lshBucketRef(vec, 4),
-    "lshBucketMd5" -> Similarity.lshBucketMd5(vec, 4),
-    "lshBucketMd5Ref" -> Similarity.lshBucketMd5Ref(vec, 4))
+    "lshBucketMd5" -> Similarity.lshBucketMd5(vec, 4))
 
   private def corpusBuilders: Map[String, Column] = Map(
     "wsTokens" -> Corpus.wsTokens(text),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import graft.functions.Similarity
 
 /** Differential test: the native LshBucketKernel (graft_lsh_xx /
@@ -14,6 +14,7 @@ import graft.functions.Similarity
   * the emb near-dup scale path), so any divergence changes query output.
   */
 class LshBucketParitySpec extends SparkSuite {
+  import LshBucketParitySpec._
 
   private val dims = Seq(1, 2, 3, 7, 12, 16)
 
@@ -43,9 +44,9 @@ class LshBucketParitySpec extends SparkSuite {
     for (nPlanes <- Seq(4, 8, 13); tbl <- Seq(0, 1, 3)) {
       val got = df.select(
         Similarity.lshBucket(col("v"), nPlanes, tbl).as("xx"),
-        Similarity.lshBucketRef(col("v"), nPlanes, tbl).as("xxRef"),
+        lshBucketRef(col("v"), nPlanes, tbl).as("xxRef"),
         Similarity.lshBucketMd5(col("v"), nPlanes, tbl).as("md5"),
-        Similarity.lshBucketMd5Ref(col("v"), nPlanes, tbl).as("md5Ref")).collect()
+        lshBucketMd5Ref(col("v"), nPlanes, tbl).as("md5Ref")).collect()
       got.zipWithIndex.foreach { case (r, i) =>
         assert(r.getLong(0) == r.getLong(1),
           s"xx row $i nPlanes=$nPlanes table=$tbl: native ${r.getLong(0)} ref ${r.getLong(1)}")
@@ -63,9 +64,9 @@ class LshBucketParitySpec extends SparkSuite {
     val check = () => {
       val got = df.select(
         Similarity.lshBucket(col("v"), 8, 2).as("xx"),
-        Similarity.lshBucketRef(col("v"), 8, 2).as("xxRef"),
+        lshBucketRef(col("v"), 8, 2).as("xxRef"),
         Similarity.lshBucketMd5(col("v"), 8, 2).as("md5"),
-        Similarity.lshBucketMd5Ref(col("v"), 8, 2).as("md5Ref")).collect()
+        lshBucketMd5Ref(col("v"), 8, 2).as("md5Ref")).collect()
       got.zipWithIndex.foreach { case (r, i) =>
         assert(r.getLong(0) == r.getLong(1), s"xx row $i (double)")
         assert(r.getLong(2) == r.getLong(3), s"md5 row $i (double)")
@@ -85,11 +86,48 @@ class LshBucketParitySpec extends SparkSuite {
     for (t <- 0 until 4) {
       val diff = emb.select(
         Similarity.lshBucket(col("embedding"), 8, t).as("a"),
-        Similarity.lshBucketRef(col("embedding"), 8, t).as("b"),
+        lshBucketRef(col("embedding"), 8, t).as("b"),
         Similarity.lshBucketMd5(col("embedding"), 8, t).as("c"),
-        Similarity.lshBucketMd5Ref(col("embedding"), 8, t).as("d"))
+        lshBucketMd5Ref(col("embedding"), 8, t).as("d"))
         .filter(col("a") =!= col("b") || col("c") =!= col("d")).count()
       assert(diff == 0L, s"table $t: $diff fixture rows diverge")
     }
+  }
+}
+
+/** The Column formulations the native kernel replaced, kept as its
+  * executable spec. */
+object LshBucketParitySpec {
+
+  /** Deterministic pseudo-random hyperplane component for plane `p`,
+    * dimension `d`: xxhash64 folded into [-1, 1]. */
+  private def planeComponent(p: Int, d: Column): Column =
+    (pmod(xxhash64(lit(p), d), lit(2000001L)).cast("double") - lit(1000000.0)) / lit(1000000.0)
+
+  /** The original formulation of [[Similarity.lshBucket]]. */
+  def lshBucketRef(vec: Column, nPlanes: Int, table: Int = 0): Column = {
+    val bits = (0 until nPlanes).map { p =>
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0L), size(vec).cast("long") - 1L),
+          (x, d) => x.cast("double") * planeComponent(table * nPlanes + p, d)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
+    }
+    bits.reduce((a, b) => a.bitwiseOR(b))
+  }
+
+  /** The original formulation of [[Similarity.lshBucketMd5]]. */
+  def lshBucketMd5Ref(vec: Column, nPlanes: Int, table: Int = 0): Column = {
+    def sign(p: Int, d: Column): Column =
+      when(conv(md5(concat(lit(s"$p:"), d.cast("string"))).substr(lit(1), lit(1)),
+        16, 10).cast("int") < 8, lit(1.0)).otherwise(lit(-1.0))
+    val bits = (0 until nPlanes).map { p =>
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0L), size(vec).cast("long") - 1L),
+          (x, d) => x.cast("double") * sign(table * nPlanes + p, d)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
+    }
+    bits.reduce((a, b) => a.bitwiseOR(b))
   }
 }

@@ -2,18 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import graft.ops.Pq
 
 /** Differential test: the native PQ kernels (graft_pq_encode /
   * graft_pq_adc) must be BIT-IDENTICAL to the Column lambda-tree
-  * formulations they replaced (Pq.encodeRef / Pq.adcDistRef) — including
+  * formulations they replaced (encodeRef / adcDistRef, below) — including
   * the degenerate inputs whose semantics fall out of the folds: null and
   * ragged vectors (null distances sort FIRST in the argmin), NaN elements
   * (NaN distances sort LAST), null array elements, and codes shorter or
   * longer than the LUT. The composed search (encode + ADC + rank) is
   * additionally pinned by the q231 DuckDB oracle. */
 class PqKernelParitySpec extends SparkSuite {
+  import PqKernelParitySpec._
 
   private def fixtureEmb = table("embeddings").select(col("vec_id"), col("embedding"))
 
@@ -23,7 +24,7 @@ class PqKernelParitySpec extends SparkSuite {
       val cb = Pq.codebooksFromRows(emb, "vec_id", "embedding", m, ksub)
       val a = Pq.encode(emb, "vec_id", "embedding", cb)
         .select(col("vec_id"), col("codes").cast("array<int>").as("codes"))
-      val b = Pq.encodeRef(emb, "vec_id", "embedding", cb)
+      val b = encodeRef(emb, "vec_id", "embedding", cb)
         .select(col("vec_id"), col("codes").cast("array<int>").as("codes"))
       val diff = a.join(b.withColumnRenamed("codes", "ref"), "vec_id")
         .filter(!(col("codes") <=> col("ref"))).count()
@@ -50,7 +51,7 @@ class PqKernelParitySpec extends SparkSuite {
     val df = spark.createDataFrame(degenerate.asJava, schema)
     val a = Pq.encode(df, "vec_id", "embedding", cb)
       .select(col("vec_id"), col("codes").cast("array<int>").as("codes"))
-    val b = Pq.encodeRef(df, "vec_id", "embedding", cb)
+    val b = encodeRef(df, "vec_id", "embedding", cb)
       .select(col("vec_id"), col("codes").cast("array<int>").as("ref"))
     val joined = a.join(b, "vec_id").collect()
     assert(joined.length == degenerate.length)
@@ -85,7 +86,7 @@ class PqKernelParitySpec extends SparkSuite {
     val df = spark.createDataFrame(rows.asJava, schema)
     val got = df.select(col("id"),
       call_function("graft_pq_adc", col("codes"), col("lut")).as("a"),
-      Pq.adcDistRef(col("codes"), col("lut")).as("b")).collect()
+      adcDistRef(col("codes"), col("lut")).as("b")).collect()
     got.foreach { r =>
       val a = if (r.isNullAt(1)) null else r.getDouble(1)
       val b = if (r.isNullAt(2)) null else r.getDouble(2)
@@ -103,12 +104,8 @@ class PqKernelParitySpec extends SparkSuite {
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val native = Pq.topK(emb, "vec_id", "embedding", queries, "query_id", "qvec", cb, k = 5)
     // ref composition: encodeRef + the ref ADC fold through the same ranking
-    val codesRef = Pq.encodeRef(emb, "vec_id", "embedding", cb)
-    val luts = queries.crossJoin(broadcast(
-      cb.groupBy(col("sub")).agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cbj"))
-        .agg(array_sort(collect_list(struct(col("sub"), col("cbj")))).as("pairs"))
-        .select(transform(col("pairs"),
-          p => transform(p.getField("cbj"), c => c.getField("cvec"))).as("__cbs__"))))
+    val codesRef = encodeRef(emb, "vec_id", "embedding", cb)
+    val luts = queries.crossJoin(broadcast(Pq.packed(cb)))
       .select(col("query_id"),
         transform(col("__cbs__"), (cbj, j) => {
           val ds = size(element_at(cbj, 1))
@@ -116,7 +113,7 @@ class PqKernelParitySpec extends SparkSuite {
           transform(cbj, cvec => Pq.l2sq(sub, cvec))
         }).as("__lut__"))
     val scoredRef = codesRef.crossJoin(broadcast(luts))
-      .withColumn("dist", Pq.adcDistRef(col("codes"), col("__lut__")))
+      .withColumn("dist", adcDistRef(col("codes"), col("__lut__")))
       .filter(col("dist").isNotNull && !isnan(col("dist")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("dist").asc, col("vec_id").asc)
@@ -125,4 +122,29 @@ class PqKernelParitySpec extends SparkSuite {
       .select(col("query_id"), col("vec_id"), col("dist"), col("__rk__").cast("long").as("rank"))
     assertParity(native, refTop, tol = 0.0)
   }
+}
+
+/** The Column formulations the native PQ kernels replaced, kept as their
+  * executable spec. */
+object PqKernelParitySpec {
+
+  /** The original formulation of [[Pq.encode]]. */
+  def encodeRef(corpus: DataFrame, idCol: String, vecCol: String,
+      codebooks: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(Pq.packed(codebooks)))
+      .select(col(idCol),
+        transform(col("__cbs__"), (cbj, j) => {
+          val ds = size(element_at(cbj, 1))
+          val sub = slice(col(vecCol), j * ds + 1, ds)
+          array_min(transform(cbj, (cvec, c) =>
+            struct(Pq.l2sq(sub, cvec).as("d"), c.as("cid"))))
+            .getField("cid").cast("byte")
+        }).as("codes"))
+
+  /** The original ADC fold of [[graft.plans.PqAdcKernel]]. */
+  def adcDistRef(codes: Column, lut: Column): Column =
+    aggregate(
+      zip_with(codes, lut,
+        (c, lutj) => element_at(lutj, c.cast("int") + 1)),
+      lit(0.0), (acc, x) => acc + x)
 }
