@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
  *   - merge: a codegen'd `aggregate` left fold over each word's symbol
  *     array — left-to-right non-overlapping replacement, exactly the
  *     reference algorithm's scan order;
- *   - `localCheckpoint` truncates the growing lineage each round (the
- *     same discipline as the connected-components loop in [[Dedup]]) —
+ *   - the merged table is materialized each round ([[iterate]]) —
  *     without it the plan nests one `aggregate` per merge and codegen
  *     collapses around round ~40.
  *
@@ -137,25 +136,20 @@ object Bpe {
   /** Train `numMerges` BPE merges over a corpus. Stops early when no
     * pair reaches `minCount`. Returns the ordered merge table.
     *
-    * Driver-action batching (r16): the greedy loop previously ran ONE
-    * argmax job + ONE checkpointed merge pass PER MERGE. Each round now
-    * collects the top `batchTopK` candidate pairs in one TakeOrdered job
-    * and applies the longest prefix that is provably the exact greedy
-    * sequence ([[greedyPrefix]] — symbol-disjoint + strict count
-    * dominance, so recounting between them is a no-op). The accepted
-    * merges fuse into one projection and ONE localCheckpoint per round —
-    * on independent top pairs (the common case for natural text early
-    * rounds) this cuts jobs and checkpoint copies up to batchTopK×, and
-    * it can never accept a pair greedy would not have picked next. */
+    * Each round collects the top `batchTopK` candidate pairs in one
+    * TakeOrdered job and applies the longest prefix that is provably the
+    * exact greedy sequence ([[greedyPrefix]] — symbol-disjoint + strict
+    * count dominance, so recounting between them is a no-op). The accepted
+    * merges fuse into one projection and one materialized copy per round,
+    * and it can never accept a pair greedy would not have picked next. */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
       minCount: Long = 2L, batchTopK: Int = 8): Seq[Merge] = {
     require(numMerges >= 0, s"numMerges must be >= 0: $numMerges")
     require(batchTopK >= 1, s"batchTopK must be >= 1: $batchTopK")
-    var words = wordFreqTable(docs, textCol).localCheckpoint()
     val merges = Seq.newBuilder[Merge]
     var rank = 0
-    var done = false
-    while (rank < numMerges && !done) {
+    val table = materialize(wordFreqTable(docs, textCol), "bpe")
+    release(iterate(table, "bpe", numMerges) { (words, _) =>
       val limit = math.min(batchTopK, numMerges - rank) + 1
       val top = pairCounts(words)
         .orderBy(col("pair_count").desc, col("left").asc, col("right").asc)
@@ -163,21 +157,13 @@ object Bpe {
         .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
       val batch = greedyPrefix(top, exhausted = top.length < limit, minCount)
         .take(numMerges - rank)
-      if (batch.isEmpty) done = true
-      else {
-        val merged = batch.foldLeft(col("syms")) { case (acc, (l, r, _)) =>
-          mergeAdjacent(acc, l, r)
-        }
-        val next = words.withColumn("syms", merged).localCheckpoint()
-        words.unpersist(blocking = false)
-        words = next
-        batch.foreach { case (l, r, c) =>
-          merges += Merge(rank, l, r, c)
-          rank += 1
-        }
+      batch.foreach { case (l, r, c) =>
+        merges += Merge(rank, l, r, c)
+        rank += 1
       }
-    }
-    words.unpersist(blocking = false)
+      Option.when(batch.nonEmpty && rank < numMerges)(words.withColumn("syms",
+        batch.foldLeft(col("syms")) { case (acc, (l, r, _)) => mergeAdjacent(acc, l, r) }))
+    })
     merges.result()
   }
 

@@ -281,10 +281,10 @@ object Corpus {
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 5, fpp: Double = 0.01): DataFrame = {
     val spark = corpus.sparkSession
-    val benchGrams = benchmark
+    // materialized: read twice, by the bloom build and the verify join
+    val benchGrams = materialize(benchmark
       .select(explode(array_distinct(wordNgrams(col(textCol), n))).as("__g__"))
-      .distinct()
-      .cache() // read twice: bloom build + verify join
+      .distinct(), "decontaminate", eager = false)
     val nGrams = math.max(benchGrams.count(), 1L)
     val bloom = benchGrams.stat.bloomFilter("__g__", nGrams, fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)

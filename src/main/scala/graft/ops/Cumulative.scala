@@ -21,8 +21,8 @@ import graft.api.SortKey
  * as the classic two-phase parallel prefix:
  *
  *   1. range-repartition + sort within partitions on the order keys and
- *      stamp `spark_partition_id()`; eagerly localCheckpoint so the
- *      sampled range bounds are frozen for both consumers;
+ *      stamp `spark_partition_id()`; materialize it so the sampled
+ *      range bounds are frozen for both consumers;
  *   2. per-partition running aggregate via a window PARTITIONED by the
  *      partition id (parallel across partitions);
  *   3. per-partition totals (one row per partition — thousands of rows at
@@ -51,11 +51,10 @@ object Cumulative {
     val n = numPartitions.getOrElse(
       shufflePartitions(df.sparkSession))
     val sortCols = order.map(_.toColumn)
-    val sorted = df
+    val sorted = materialize(df
       .repartitionByRange(n, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-      .withColumn(Pid, spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn(Pid, spark_partition_id()), "cumulative")
 
     def agg(c: Column): Column = fn match {
       case "sum" => sum(c)
@@ -140,11 +139,10 @@ object Cumulative {
       shufflePartitions(df.sparkSession))
     val keyCols = keys.map(col)
     val sortCols = keyCols ++ order.map(_.toColumn)
-    val sorted = df
+    val sorted = materialize(df
       .repartitionByRange(n, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-      .withColumn(Pid, spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn(Pid, spark_partition_id()), "cumulative")
 
     def agg(c: Column): Column = fn match {
       case "sum" => sum(c)

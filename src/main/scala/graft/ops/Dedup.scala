@@ -452,13 +452,10 @@ object Dedup {
       indexPath: String, corpus: DataFrame, corpusId: String,
       corpusText: String, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    // localCheckpoint: candidates feed TWO branches (the id semi-join
-    // below and the final verify join) — without it the narrow index
-    // scan + band join would re-run per branch
-    val candidates = indexCandidates(batch, batchId, batchText,
+    // materialized: candidates feed the id semi-join and the verify join
+    val candidates = materialize(indexCandidates(batch, batchId, batchText,
       batch.sparkSession.read.parquet(indexPath), shingleN, numHashes, bands)
-      .distinct()
-      .localCheckpoint()
+      .distinct(), "link")
     // Verify is candidate-driven: semi-join the corpus on the matched ids
     // FIRST (an O(matched)-row side AQE broadcasts), THEN shingle — the
     // per-row tokenize/shingle CPU, which dominates the text stage, runs
@@ -596,12 +593,11 @@ object Dedup {
    *
    * One round = one job set: pointer jump (labels ⋈ labels on comp = id,
    * i.e. comp := min(comp, comp[comp])), neighbour propagation (edges ⋈
-   * labels) and one groupBy-min, forced by one eager `localCheckpoint`
-   * that also truncates the lineage (same discipline as
-   * [[Kmeans.train]]). All linear in |E|+|V|. The jump doubles the label
-   * pointer's reach every round, so rounds needed = O(log diameter), not
-   * O(diameter) — a 10k-node adversarial PATH graph converges inside the
-   * default cap (pinned by a DedupSpec case).
+   * labels) and one groupBy-min, materialized by [[iterate]]. All linear
+   * in |E|+|V|. The jump doubles the label pointer's reach every round,
+   * so rounds needed = O(log diameter), not O(diameter) — a 10k-node
+   * adversarial PATH graph converges inside the default cap (pinned by a
+   * DedupSpec case).
    *
    * Convergence: the round's groupBy also carries each id's previous
    * label as `max(__old__)`, and an [[Observation]] on the aggregate
@@ -613,8 +609,7 @@ object Dedup {
    *
    * `maxRounds` counts rounds after the seed; at the cap the call raises
    * rather than return partial labels. Spark jobs carry the description
-   * `graft:cc:edges` / `graft:cc:round <n>`; the caller's description is
-   * restored afterwards (the job group is left alone).
+   * `graft:cc:edges` / `graft:cc:round <n>`.
    *
    * Returns (id, component): one row per node that appears in an edge,
    * component = min node id in its cluster. Singletons (docs in no pair)
@@ -623,37 +618,22 @@ object Dedup {
    */
   def connectedComponents(edges: DataFrame, idACol: String, idBCol: String,
       maxRounds: Int = 20): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    val callerDesc = sc.getLocalProperty("spark.job.description")
-    try {
-      sc.setJobDescription("graft:cc:edges")
-      // MATERIALIZE the undirected edge list before the loop. `und` is
-      // read by every round, and each round is a separate action: without
-      // the checkpoint every round re-executes the caller's whole
-      // pair-generation plan (banding, shuffles, exact verify), because
-      // Spark does not reuse shuffle output across query executions.
-      //
-      // SCALE TRADE (deliberate): localCheckpoint blocks are executor-local
-      // and NOT replayable — lose an executor mid-loop and the job fails
-      // instead of recomputing, and the whole CC pass retries from the
-      // pair generator. If executor churn is real in a deployment, swap in
-      // reliable `checkpoint()` against a checkpoint dir — same plan
-      // shape, replayable blocks.
-      val und = edges.select(col(idACol).as("__src__"), col(idBCol).as("__dst__"))
-        .union(edges.select(col(idBCol).as("__src__"), col(idACol).as("__dst__")))
-        .distinct()
-        .localCheckpoint()
-      // Left uncheckpointed: round 1 plans the seed aggregate once and
-      // reuses its exchange for all three of its reads.
-      var labels = und.groupBy(col("__src__").as("__id__"))
-        .agg(min(col("__dst__")).as("__m__"))
-        .select(col("__id__"), least(col("__id__"), col("__m__")).as("__comp__"))
-      val noOld = lit(null).cast(und.schema("__src__").dataType)
-      var round = 0
-      var converged = false
-      while (round < maxRounds && !converged) {
-        round += 1
-        sc.setJobDescription(s"graft:cc:round $round")
+    // materialized: every round reads `und`, and without the copy each
+    // round would re-run the caller's whole pair-generation plan
+    val und = materialize(edges.select(col(idACol).as("__src__"), col(idBCol).as("__dst__"))
+      .union(edges.select(col(idBCol).as("__src__"), col(idACol).as("__dst__")))
+      .distinct(), "cc:edges")
+    // Left unmaterialized: round 1 plans the seed aggregate once and
+    // reuses its exchange for all three of its reads.
+    val seed = und.groupBy(col("__src__").as("__id__"))
+      .agg(min(col("__dst__")).as("__m__"))
+      .select(col("__id__"), least(col("__id__"), col("__m__")).as("__comp__"))
+    val noOld = lit(null).cast(und.schema("__src__").dataType)
+    var drops: Option[Observation] = None
+    def converged = drops.exists(_.get("dropped") == 0L)
+    val labels = iterate(seed, "cc", maxRounds) { (labels, _) =>
+      if (converged) None
+      else {
         // pointer jump FIRST, so the round ENDS in the groupBy(__id__)
         // aggregate: one row per id, the previous label at hand for the
         // drop count, and the table the caller's anti join reads (q168's
@@ -669,28 +649,19 @@ object Dedup {
         val incoming = und
           .join(jumped.withColumnRenamed("__id__", "__src__"), Seq("__src__"))
           .select(col("__dst__").as("__id__"), col("__comp__"), noOld.as("__old__"))
-        val drops = new Observation()
-        val next = jumped.union(incoming)
+        val obs = new Observation()
+        drops = Some(obs)
+        Some(jumped.union(incoming)
           .groupBy(col("__id__"))
           .agg(min(col("__comp__")).as("__comp__"), max(col("__old__")).as("__old__"))
-          .observe(drops, count_if(col("__comp__") < col("__old__")).as("dropped"))
-          .select(col("__id__"), col("__comp__"))
-          .localCheckpoint()
-        // Release the SUPERSEDED round's checkpoint blocks eagerly: each
-        // localCheckpoint holds a full label-table copy in the block
-        // manager, and only the async ContextCleaner (driver-GC-triggered)
-        // would reclaim older copies — a race it loses under heap pressure
-        // at large scale. `next` is already materialized, so memory per
-        // round stays bounded by TWO label tables regardless of rounds.
-        val superseded = labels
-        labels = next
-        superseded.unpersist(blocking = false)
-        converged = drops.get("dropped") == 0L
+          .observe(obs, count_if(col("__comp__") < col("__old__")).as("dropped"))
+          .select(col("__id__"), col("__comp__")))
       }
-      require(converged, s"connectedComponents did not converge in $maxRounds rounds " +
-        "(pathological chain graph — use a larger cap or a star-contraction scheme)")
-      labels.select(col("__id__").as("id"), col("__comp__").as("component"))
-    } finally sc.setJobDescription(callerDesc)
+    }
+    release(und)
+    require(converged, s"connectedComponents did not converge in $maxRounds rounds " +
+      "(pathological chain graph — use a larger cap or a star-contraction scheme)")
+    labels.select(col("__id__").as("id"), col("__comp__").as("component"))
   }
 
   /**

@@ -88,16 +88,12 @@ object Dsir {
     * a single time). */
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, buckets: Int): DataFrame = {
-    // lazy localCheckpoint: the (id, bucket, n) table feeds BOTH the raw
-    // bucket distribution and the weight join; without the valve each
-    // consumer re-plans the tokenize+md5 explode (ReuseExchange does not
-    // fire across the differing parent shapes). The table is the reduced
-    // form — orders of magnitude under the text it came from — which is
-    // exactly what a 100 TB run would persist.
-    val perDocN = hashedFeatures(raw, idCol, textCol, buckets)
+    // materialized (lazily): the (id, bucket, n) table feeds both the raw
+    // bucket distribution and the weight join, which would otherwise each
+    // re-run the tokenize+md5 explode
+    val perDocN = materialize(hashedFeatures(raw, idCol, textCol, buckets)
       .groupBy(col(idCol), col("bucket"))
-      .agg(count(lit(1)).as("__n__"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("__n__")), "dsir", eager = false)
     val rawCounts = perDocN.groupBy(col("bucket")).agg(sum(col("__n__")).as("__c__"))
     val targetCounts = hashedFeatures(target, idCol, textCol, buckets)
       .groupBy(col("bucket")).agg(count(lit(1)).as("__c__"))

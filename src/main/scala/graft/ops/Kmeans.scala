@@ -34,9 +34,7 @@ object Kmeans {
    */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
-    var centroids = initCentroids(corpus, idCol, vecCol, k)
-    var it = 0
-    while (it < iters) {
+    iterate(initCentroids(corpus, idCol, vecCol, k), "kmeans", iters) { (centroids, _) =>
       val assigned = assign(corpus, vecCol, centroids)
       // element-wise mean via posexplode + regroup: (centroid, dim) keys —
       // one shuffle keyed by centroid×dimension, never driver-side
@@ -59,12 +57,9 @@ object Kmeans {
       val updated = means.select(col("centroid_id"),
         when(norm > 0.0, transform(col("mvec"),
           x => (x.cast("double") / norm).cast("float"))).as("__new__"))
-      centroids = centroids.join(updated, Seq("centroid_id"), "left")
-        .select(col("centroid_id"), coalesce(col("__new__"), col("cvec")).as("cvec"))
-        .localCheckpoint(true) // truncate the per-iteration lineage
-      it += 1
+      Some(centroids.join(updated, Seq("centroid_id"), "left")
+        .select(col("centroid_id"), coalesce(col("__new__"), col("cvec")).as("cvec")))
     }
-    centroids
   }
 
   /** Nearest-centroid assignment — delegates to

@@ -77,16 +77,13 @@ object Pq {
     * the standard Lloyd fix, as in [[Kmeans.train]]. */
   def trainCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, iters: Int): DataFrame = {
-    var cb = codebooksFromRows(corpus, idCol, vecCol, m, ksub)
-    if (iters <= 0) return cb
     val subs = corpus.select(col(idCol).as("__id__"),
       explode(transform(sequence(lit(0), lit(m - 1)),
         j => struct(j.as("sub"),
           slice(col(vecCol), j * (size(col(vecCol)) / m) + 1,
             size(col(vecCol)) / m).as("svec")))).as("__e__"))
       .select(col("__id__"), col("__e__.sub").as("sub"), col("__e__.svec").as("svec"))
-    var it = 0
-    while (it < iters) {
+    iterate(codebooksFromRows(corpus, idCol, vecCol, m, ksub), "pq", iters) { (cb, _) =>
       val cands = cb.groupBy(col("sub"))
         .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cands"))
       val assigned = subs.join(broadcast(cands), "sub")
@@ -101,12 +98,9 @@ object Pq {
         .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pairs"))
         .select(col("sub"), col("cid"),
           transform(col("pairs"), p => p.getField("mv").cast("float")).as("__new__"))
-      cb = cb.join(means, Seq("sub", "cid"), "left")
-        .select(col("sub"), col("cid"), coalesce(col("__new__"), col("cvec")).as("cvec"))
-        .localCheckpoint(true) // truncate the per-iteration lineage
-      it += 1
+      Some(cb.join(means, Seq("sub", "cid"), "left")
+        .select(col("sub"), col("cid"), coalesce(col("__new__"), col("cvec")).as("cvec")))
     }
-    cb
   }
 
   /** (sub, cid, cvec) rows → ONE row holding `cbs[sub][cid] = cvec`

@@ -87,29 +87,27 @@ object QualityModel {
     val spark = feats.sparkSession
     import spark.implicits._
     // features + bias pseudo-feature, labels attached once up front;
-    // the bias spine comes from feats so zero-token docs stay excluded
-    val fx = feats.select(col(idCol), col("bucket"), col("x"))
+    // the bias spine comes from feats so zero-token docs stay excluded;
+    // materialized: the count and every iteration read it
+    val fx = materialize(feats.select(col(idCol), col("bucket"), col("x"))
       .unionByName(feats.select(col(idCol)).distinct()
         .select(col(idCol), lit(BiasBucket).as("bucket"), lit(1.0).as("x")))
-      .join(labels.select(col(idCol), col("y").cast("double").as("__y__")), Seq(idCol))
-      .localCheckpoint(true)
+      .join(labels.select(col(idCol), col("y").cast("double").as("__y__")), Seq(idCol)),
+      "quality")
     val n = fx.select(col(idCol)).distinct().count().toDouble // scalar anchor
-    var weights = spark.range(-1, dim)
-      .select(col("id").as("bucket"), lit(0.0).as("w"))
-    var it = 0
-    while (it < iters) {
+    val init = spark.range(-1, dim).select(col("id").as("bucket"), lit(0.0).as("w"))
+    val weights = iterate(init, "quality", iters) { (weights, _) =>
       val grad = scoreMargin(fx, weights, idCol)
         .withColumn("__err__", sigmoid(col("__margin__")) - col("__y__"))
         .select(col(idCol), col("__err__"))
         .join(fx.select(col(idCol), col("bucket"), col("x")), Seq(idCol))
         .groupBy(col("bucket"))
         .agg((sum(col("__err__") * col("x")) / n).as("__g__"))
-      weights = weights.join(grad, Seq("bucket"), "left")
+      Some(weights.join(grad, Seq("bucket"), "left")
         .select(col("bucket"),
-          round(col("w") - lit(lr) * coalesce(col("__g__"), lit(0.0)), 8).as("w"))
-        .localCheckpoint(true) // truncate the per-iteration lineage
-      it += 1
+          round(col("w") - lit(lr) * coalesce(col("__g__"), lit(0.0)), 8).as("w")))
     }
+    release(fx)
     weights
   }
 

@@ -88,13 +88,11 @@ object Rank {
     * n1/n2 = tied-pair counts per column. Null rows drop (pandas). */
   def kendall(df: DataFrame, xCol: String, yCol: String,
       maxCells: Long = 100000L): DataFrame = {
-    // localCheckpoint: the guard count, both self-join sides, and the
-    // three marginal aggregates all reuse the materialized contingency —
-    // without it the base-data scan re-executes ~6 times
-    val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+    // materialized: the guard count, both self-join sides and the three
+    // marginal aggregates all read the contingency table
+    val cells = materialize(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("x"), col(yCol).as("y"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n")), "kendall")
     val nCells = cells.count()
     require(nCells <= maxCells,
       s"kendall contingency has $nCells cells > maxCells=$maxCells — " +

@@ -34,13 +34,8 @@ object RowOrder {
     // The cache freezes the sampled range partitioning so job 1's offsets
     // line up with job 2's partitions (re-executing repartitionByRange can
     // resample different bounds). It is released before returning: the
-    // result is eagerly localCheckpoint-ed (lineage truncated), so the
-    // cached parent is no longer referenced and no per-call cache leaks
-    // accumulate over a session. (localCheckpoint trades fault-tolerance
-    // for speed — on executor loss the op re-runs — the standard Spark
-    // trade for ephemeral positional ids.)
-    val rdd = sorted.rdd
-    rdd.cache()
+    // result is materialized, so the cached parent is no longer read.
+    val rdd = sorted.rdd.cache()
     try {
       // Job 1: per-partition row counts (a Long per partition).
       val counts = rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
@@ -53,7 +48,7 @@ object RowOrder {
         it.map { r => val out = Row.fromSeq(r.toSeq :+ k); k += 1; out }
       }
       val schema = StructType(sorted.schema.fields :+ StructField(Frame.RowOrder, LongType, nullable = false))
-      sorted.sparkSession.createDataFrame(withId, schema).localCheckpoint(eager = true)
+      materialize(sorted.sparkSession.createDataFrame(withId, schema), "row-order")
     } finally rdd.unpersist(blocking = false)
   }
 

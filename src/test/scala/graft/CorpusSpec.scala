@@ -94,11 +94,15 @@ class CorpusSpec extends SparkSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("id").collect().map(_.toSeq).toSeq
     val exact = canon(Corpus.decontaminate(corpus, bench, "id", "text", n = 3))
+    // cleared first, so an entry left by another suite cannot hide one
+    // added here: graft must not cache into a session it does not own
+    spark.catalog.clearCache()
     // a high fpp stresses the verify join with false positives; a low one
     // stresses the prune — the answer must be the exact path's either way
     for (fpp <- Seq(0.5, 0.01, 1e-6)) {
       val bloom = canon(Corpus.decontaminateBloom(corpus, bench, "id", "text", n = 3, fpp = fpp))
       assert(bloom == exact, s"fpp=$fpp")
+      assert(spark.sharedState.cacheManager.isEmpty, s"fpp=$fpp: decontaminateBloom cached a table")
     }
   }
 

@@ -147,13 +147,9 @@ class DedupSpec extends SparkSuite {
     assert(Dedup.connectedComponents(none, "a", "b").collect().isEmpty)
   }
 
-  test("connectedComponents finishes near-dup shapes in one round and names its jobs") {
-    import spark.implicits._
-    // disjoint pairs, a triangle and a star centred on its minimum id: the
-    // seed least(id, min(neighbour)) is already the fixpoint, so round 1
-    // drops no label and the loop stops there
-    val edges = Seq((1L, 2L), (4L, 3L), (10L, 11L), (11L, 12L), (12L, 10L),
-      (20L, 21L), (22L, 20L), (20L, 23L), (24L, 20L)).toDF("a", "b")
+  /** Runs `body` in job group "cc-caller" with description "caller"; returns
+    * its result and the (group, description) of every job it launched. */
+  private def jobsOf[T](body: => T): (T, List[(String, String)]) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -162,9 +158,9 @@ class DedupSpec extends SparkSuite {
           e.properties.getProperty("spark.job.description")))
     }
     sc.addSparkListener(listener)
-    val got = try {
+    try {
       sc.setJobGroup("cc-caller", "caller", interruptOnCancel = false)
-      val labels = Dedup.connectedComponents(edges, "a", "b", maxRounds = 1)
+      val out = body
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       // listener events arrive asynchronously and in order: once this
       // marker job is seen, every job before it has been
@@ -173,17 +169,37 @@ class DedupSpec extends SparkSuite {
       val deadline = System.nanoTime() + 20000000000L
       while (!jobs.asScala.exists(_._2 == "marker") && System.nanoTime() < deadline)
         Thread.sleep(20)
-      labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val seen = jobs.asScala.toList.takeWhile(_._2 != "marker")
+      assert(seen.forall(_._1 == "cc-caller"), seen) // the job group is the caller's
+      (out, seen)
     } finally {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()
     }
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
-    val seen = jobs.asScala.toList.takeWhile(_._2 != "marker")
-    assert(seen.forall(_._1 == "cc-caller"), seen) // the job group is the caller's
+  }
+
+  test("connectedComponents finishes near-dup shapes in one round and names its jobs") {
+    import spark.implicits._
+    // disjoint pairs, a triangle and a star centred on its minimum id: the
+    // seed least(id, min(neighbour)) is already the fixpoint, so round 1
+    // drops no label and the loop stops there
+    val edges = Seq((1L, 2L), (4L, 3L), (10L, 11L), (11L, 12L), (12L, 10L),
+      (20L, 21L), (22L, 20L), (20L, 23L), (24L, 20L)).toDF("a", "b")
+    val (labels, seen) = jobsOf(Dedup.connectedComponents(edges, "a", "b", maxRounds = 1))
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L,
+        20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
     assert(seen.map(_._2).toSet == Set("graft:cc:edges", "graft:cc:round 1"), seen)
+    // the other ops on the same loop name their rounds the same way; the
+    // unnamed jobs are the ones they run before their loop starts
+    val named = Map(
+      "bpe" -> (Set("graft:bpe") ++ (1 to 6).map(n => s"graft:bpe:round $n")),
+      "kmeans" -> (1 to 3).map(n => s"graft:kmeans:round $n").toSet,
+      "pq" -> (Set("caller") ++ (1 to 3).map(n => s"graft:pq:round $n")),
+      "quality" -> (Set("graft:quality", "caller") ++ (1 to 3).map(n => s"graft:quality:round $n")))
+    for ((name, run) <- MaterializeSpec.iterativeOps(this) if name != "cc")
+      assert(jobsOf(run())._2.map(_._2).toSet == named(name), name)
   }
 
   test("connectedComponents raises rather than return partial labels at the round cap") {
