@@ -87,8 +87,8 @@ object Dedup {
     // xxhash64 fold: the same 8 B/shingle and exactness argument as
     // [[foldedShingleSet]], in this path's hash family
     def sets(s: String) = df.select(col(idCol).as(s"id_$s"),
-      transform(array_distinct(Text.shingles(col(textCol), shingleN)),
-        x => xxhash64(x)).as(s"hs_$s"))
+      sort_array(transform(array_distinct(Text.shingles(col(textCol), shingleN)),
+        x => xxhash64(x))).as(s"hs_$s"))
     verifyJaccard(selfPairs(banded, idCol)(sizeCull("a", "b", threshold), col("id_a"), col("id_b")),
       sets("a"), sets("b"), threshold)
   }
@@ -132,10 +132,7 @@ object Dedup {
     * share band b's key) = their Jaccard, so candidate recall after
     * `nBands` bands is 1-(1-J)^nBands (≈0.94 at J=0.5 with 4 bands) and
     * keys are high-cardinality — bucket sizes track true near-dup cluster
-    * sizes. This replaces the earlier word-count÷10 band, whose
-    * low-cardinality length-clustered key degraded the self-join toward
-    * quadratic on real corpora and silently missed near-dups straddling a
-    * length-band edge. Pairs found by several bands dedupe before the
+    * sizes. Pairs found by several bands dedupe before the
     * threshold filter; the reported jaccard is always the exact shingle-set
     * value. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
@@ -150,11 +147,9 @@ object Dedup {
     * P(key collision) = J^rowsPerBand per band and the S-curve matches the
     * classic (bands, rows) trade-off. Same steps as the xxhash64 path; it
     * anchors the family to a DuckDB oracle (q104b) and a parity spec.
-    * It is not the slower path: one ScaleDedupBench run over sf0.01 on 4
-    * cores (16 hashes, 4 bands, t = 0.2) timed it at 0.70 s (1×) and
-    * 0.79 s (2×) against 0.98 s and 1.03 s for [[minhashLshPairs]] — one
-    * md5 per shingle in the native band kernel costs less than the
-    * signature's numHashes × (array_distinct + xxhash64) per document. */
+    * It is not the slower path: one md5 per shingle in the native band
+    * kernel costs less than the signature's numHashes × (array_distinct +
+    * xxhash64) per document (ScaleDedupBench, sf0.01: 0.70 s vs 0.98 s). */
   def minhashLshPairsMd5(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5): DataFrame =
@@ -164,8 +159,7 @@ object Dedup {
   /** One md5 digest (32 hex chars) per shingle — the ONLY md5 work that
     * scales with shingle volume. Every MinHash order derives from this
     * digest via [[md5BandKeysFromDigests]] rotation lanes, so the
-    * per-shingle hash cost is constant in numHashes (it used to be one
-    * md5 per shingle PER HASH — numHashes× the work). Project this into a
+    * per-shingle hash cost is constant in numHashes. Project this into a
     * column BEFORE banding so the digest array is provably computed once
     * (CollapseProject keeps a multi-referenced non-cheap alias
     * materialized). DuckDB twin: `md5(s)`. */
@@ -186,12 +180,10 @@ object Dedup {
     * any exchange — see [[md5Bands]] for the collision-safety argument.
     * The whole computation is ONE native kernel
     * ([[graft.plans.LaneMinBandKeys]]): a single pass over the digest
-    * array holding lane minima as views — the `transform`/`array_min`
-    * tree walked the array once per hash with two allocations per
-    * element, and THAT (not the md5 count) measured as the banding
-    * floor. DuckDB reproduces every step (`substr(md5(s), b*rpb+r+1, 16)`
-    * lanes, `md5`-fold, 8-byte `unhex(substr(…))`), so batch, stream,
-    * index, and oracle all band identically. */
+    * array holding lane minima as views. DuckDB reproduces every step
+    * (`substr(md5(s), b*rpb+r+1, 16)` lanes, `md5`-fold, 8-byte
+    * `unhex(substr(…))`), so batch, stream, index, and oracle all band
+    * identically. */
   def md5BandKeysFromDigests(digArr: Column, nBands: Int, rowsPerBand: Int): Column =
     call_function("graft_band_keys", digArr, lit(nBands), lit(rowsPerBand))
 
@@ -211,10 +203,11 @@ object Dedup {
     * is exchange/spill bytes: the verify join attaches 8 bytes/shingle
     * instead of the raw n-gram string (~20–40 B + offsets), which is the
     * stage that hit the single-node disk-spill wall at the 64× probe
-    * (130M candidate pairs × ~4 KB attached arrays per side). */
+    * (130M candidate pairs × ~4 KB attached arrays per side). Sorted once
+    * per document, so [[verifyJaccard]] scores a pair in one merge. */
   private[graft] def foldedShingleSet(text: Column, shingleN: Int): Column =
-    transform(array_distinct(Text.shingles(text, shingleN)),
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))
+    sort_array(transform(array_distinct(Text.shingles(text, shingleN)),
+      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")))
 
   /** EXACT candidate prefilter from distinct-shingle counts alone:
     * J = |A∩B|/|A∪B| ≤ min(|A|,|B|)/max(|A|,|B|) (the intersection can't
@@ -364,14 +357,14 @@ object Dedup {
     df.select(col(idCol).as(s"id_$s"), foldedShingleSet(col(textCol), shingleN).as(s"hs_$s"))
 
   /** [[verifyPairs]] under the exact Jaccard |A∩B| / |A∪B| of two
-    * (id, folded set) frames ([[foldedSets]]) and the `threshold` filter.
+    * (id, ascending folded set) frames ([[foldedSets]]) and the `threshold`
+    * filter, scored by one merge of the two sets ([[graft.plans.JaccardSim]]).
     * Returns (idA, idB, jaccard). */
   private[graft] def verifyJaccard(candidates: DataFrame, a: DataFrame, b: DataFrame,
       threshold: Double): DataFrame = {
-    val (hsA, hsB) = (col(a.columns(1)), col(b.columns(1)))
+    graft.plans.GraftExtensions.register(a.sparkSession)
     verifyPairs(candidates, a, b)(
-      (size(array_intersect(hsA, hsB)).cast("double") /
-        size(array_union(hsA, hsB)).cast("double")).as("jaccard"),
+      call_function("graft_jaccard", col(a.columns(1)), col(b.columns(1))).as("jaccard"),
       col("jaccard") >= threshold)
   }
 
@@ -612,17 +605,22 @@ object Dedup {
    * `graft:cc:edges` / `graft:cc:round <n>`.
    *
    * Returns (id, component): one row per node that appears in an edge,
-   * component = min node id in its cluster. Singletons (docs in no pair)
-   * are their own trivial cluster — union them in from the corpus if the
-   * caller needs total coverage.
+   * component = min node id in its cluster; an edge with a null end names
+   * no node and is dropped. Singletons (docs in no pair) are their own
+   * trivial cluster — union them in from the corpus if the caller needs
+   * total coverage.
    */
   def connectedComponents(edges: DataFrame, idACol: String, idBCol: String,
       maxRounds: Int = 20): DataFrame = {
     // materialized: every round reads `und`, and without the copy each
-    // round would re-run the caller's whole pair-generation plan
-    val und = materialize(edges.select(col(idACol).as("__src__"), col(idBCol).as("__dst__"))
-      .union(edges.select(col(idBCol).as("__src__"), col(idACol).as("__dst__")))
-      .distinct(), "cc:edges")
+    // round would re-run the caller's pair plan. One generator emits both
+    // directions, so that plan runs once. The not-null filter's constraint
+    // rides the copy: without it the rounds' joins add null checks of their
+    // own and stop sharing the seed's exchange.
+    val und = materialize(edges.select(inline(array(
+        struct(col(idACol).as("__src__"), col(idBCol).as("__dst__")),
+        struct(col(idBCol).as("__src__"), col(idACol).as("__dst__")))))
+      .filter(col("__src__").isNotNull && col("__dst__").isNotNull).distinct(), "cc:edges")
     // Left unmaterialized: round 1 plans the seed aggregate once and
     // reuses its exchange for all three of its reads.
     val seed = und.groupBy(col("__src__").as("__id__"))
@@ -669,9 +667,11 @@ object Dedup {
    * edge list from any generator above, drop every clustered document
    * except its cluster's minimum-id representative. Singletons (no pair)
    * pass through untouched. One left-anti join of the corpus against the
-   * non-representative id set — the components labels are tiny relative
-   * to the corpus (only docs that appear in a pair), so the anti join
-   * broadcasts in practice and the corpus never shuffles.
+   * non-representative id set. The labels are a checkpoint with no size
+   * estimate, so the join is planned as a sort-merge join and the whole
+   * corpus, every column, is hash-shuffled on the id; only then does AQE
+   * see the small loser set and turn the join into a broadcast over a
+   * local read of that shuffle.
    */
   def dropNearDuplicates(corpus: DataFrame, idCol: String,
       pairs: DataFrame, idACol: String, idBCol: String,

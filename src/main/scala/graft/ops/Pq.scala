@@ -56,8 +56,8 @@ object Pq {
   def codebooksFromRows(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int): DataFrame = {
     require(m >= 1 && ksub >= 1 && ksub <= 256, s"need 1<=ksub<=256, m>=1: m=$m ksub=$ksub")
-    val dim = corpus.select(size(col(vecCol)).as("__sz__")).filter(col("__sz__") > 0)
-      .head(1).headOption.map(_.getInt(0)).getOrElse(0)
+    val dim = described(corpus, "graft:pq")(corpus.select(size(col(vecCol)).as("__sz__"))
+      .filter(col("__sz__") > 0).head(1).headOption.map(_.getInt(0)).getOrElse(0))
     require(dim > 0 && dim % m == 0, s"vector dim $dim not divisible by m=$m")
     val ds = dim / m
     corpus.orderBy(col(idCol)).limit(ksub)

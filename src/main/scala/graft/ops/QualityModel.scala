@@ -94,7 +94,8 @@ object QualityModel {
         .select(col(idCol), lit(BiasBucket).as("bucket"), lit(1.0).as("x")))
       .join(labels.select(col(idCol), col("y").cast("double").as("__y__")), Seq(idCol)),
       "quality")
-    val n = fx.select(col(idCol)).distinct().count().toDouble // scalar anchor
+    // scalar anchor
+    val n = described(fx, "graft:quality")(fx.select(col(idCol)).distinct().count().toDouble)
     val init = spark.range(-1, dim).select(col("id").as("bucket"), lit(0.0).as("w"))
     val weights = iterate(init, "quality", iters) { (weights, _) =>
       val grad = scoreMargin(fx, weights, idCol)

@@ -62,7 +62,9 @@ package object ops {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)
 
-  private def described[T](df: DataFrame, desc: String)(body: => T): T = {
+  /** Runs `body` under the job description `desc`, then restores the
+    * caller's. */
+  private[graft] def described[T](df: DataFrame, desc: String)(body: => T): T = {
     val sc = df.sparkSession.sparkContext
     val caller = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)

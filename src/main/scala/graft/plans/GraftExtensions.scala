@@ -55,6 +55,7 @@ object GraftExtensions {
   private[plans] val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     fn("graft_simhash(tokens)", classOf[SimHash64])(c => SimHash64(c(0))),
     fn("graft_cosine(a, b)", classOf[CosineSim])(c => CosineSim(c(0), c(1))),
+    fn("graft_jaccard(a, b)", classOf[JaccardSim])(c => JaccardSim(c(0), c(1))),
     fn("graft_band_keys(digests, nBands, rowsPerBand)", classOf[LaneMinBandKeys])(c =>
       LaneMinBandKeys(c(0), litInt("graft_band_keys", c(1), "nBands"),
         litInt("graft_band_keys", c(2), "rowsPerBand"))),

@@ -191,15 +191,29 @@ class DedupSpec extends SparkSuite {
         10L -> 10L, 11L -> 10L, 12L -> 10L,
         20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
     assert(seen.map(_._2).toSet == Set("graft:cc:edges", "graft:cc:round 1"), seen)
-    // the other ops on the same loop name their rounds the same way; the
-    // unnamed jobs are the ones they run before their loop starts
+    // the other ops on the same loop name their rounds the same way, and
+    // the jobs they run before their loop as `graft:<op>`: none runs under
+    // the caller's description
     val named = Map(
       "bpe" -> (Set("graft:bpe") ++ (1 to 6).map(n => s"graft:bpe:round $n")),
       "kmeans" -> (1 to 3).map(n => s"graft:kmeans:round $n").toSet,
-      "pq" -> (Set("caller") ++ (1 to 3).map(n => s"graft:pq:round $n")),
-      "quality" -> (Set("graft:quality", "caller") ++ (1 to 3).map(n => s"graft:quality:round $n")))
+      "pq" -> (Set("graft:pq") ++ (1 to 3).map(n => s"graft:pq:round $n")),
+      "quality" -> (Set("graft:quality") ++ (1 to 3).map(n => s"graft:quality:round $n")))
     for ((name, run) <- MaterializeSpec.iterativeOps(this) if name != "cc")
       assert(jobsOf(run())._2.map(_._2).toSet == named(name), name)
+  }
+
+  test("connectedComponents evaluates its edge input once") {
+    // a counting identity on one id column: each evaluation of the caller's
+    // edge plan adds one per edge row (nondeterministic, so the optimizer
+    // can neither fold it at plan time nor duplicate it)
+    val reads = spark.sparkContext.longAccumulator("cc edge reads")
+    val tap = udf { (id: Long) => reads.add(1); id }.asNondeterministic()
+    val edges = spark.range(0, 50).select(tap(col("id") * 2).as("a"), (col("id") * 2 + 1).as("b"))
+    val (labels, seen) = jobsOf(Dedup.connectedComponents(edges, "a", "b", maxRounds = 1))
+    assert(labels.collect().forall(r => r.getLong(1) == r.getLong(0) - r.getLong(0) % 2))
+    assert(reads.value == 50L, s"the edge plan ran ${reads.value / 50.0} times")
+    assert(seen.map(_._2).toSet == Set("graft:cc:edges", "graft:cc:round 1"), seen)
   }
 
   test("connectedComponents raises rather than return partial labels at the round cap") {

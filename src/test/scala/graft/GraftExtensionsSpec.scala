@@ -108,6 +108,7 @@ class GraftExtensionsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
     Seq(
       "graft_simhash(array('a'), array('b'))",
       "graft_cosine(array(1.0F))",
+      "graft_jaccard(array(1L))",
       "graft_band_keys(array('a'), 4)",
       "graft_lsh_xx(array(1.0F), 4)",
       "graft_lsh_md5(array(1.0F), 4, 0, 1)",
