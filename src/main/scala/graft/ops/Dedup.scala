@@ -137,7 +137,7 @@ object Dedup {
     * value. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double, nBands: Int = 4): DataFrame =
-    md5BandedPairs(df, idCol, textCol, shingleN, threshold, nBands, rowsPerBand = 1)
+    minhashLshPairsMd5(df, idCol, textCol, shingleN, numHashes = nBands, bands = nBands, threshold)
 
   /** MinHash-LSH near-dup pairs under the ENGINE-PORTABLE md5 hash order —
     * the independently-checkable twin of [[minhashLshPairs]] (whose
@@ -152,17 +152,18 @@ object Dedup {
     * xxhash64) per document (ScaleDedupBench, sf0.01: 0.70 s vs 0.98 s). */
   def minhashLshPairsMd5(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5): DataFrame =
-    md5BandedPairs(df, idCol, textCol, shingleN, threshold, bands,
-      rowsPerBand(numHashes, bands))
+      threshold: Double = 0.5): DataFrame = {
+    val sig = signatures(df, idCol, textCol, shingleN, numHashes, bands)
+    signaturePairs(sig, sig, "a", "b", col("id_a") < col("id_b"), threshold)
+  }
 
   /** One md5 digest (32 hex chars) per shingle — the ONLY md5 work that
     * scales with shingle volume. Every MinHash order derives from this
-    * digest via [[md5BandKeysFromDigests]] rotation lanes, so the
-    * per-shingle hash cost is constant in numHashes. Project this into a
-    * column BEFORE banding so the digest array is provably computed once
-    * (CollapseProject keeps a multi-referenced non-cheap alias
-    * materialized). DuckDB twin: `md5(s)`. */
+    * digest via [[md5BandKeysFromDigests]] rotation lanes, and the
+    * verify fold ([[foldedShingleSet]]) is its 15-char prefix, so the
+    * per-shingle hash cost is constant in numHashes. [[signatures]]
+    * projects it once per document and derives both from it. DuckDB
+    * twin: `md5(s)`. */
   def shingleDigests(shingleArr: Column): Column =
     transform(shingleArr, x => md5(x))
 
@@ -193,9 +194,10 @@ object Dedup {
   def md5BandKeys(shingleArr: Column, nBands: Int, rowsPerBand: Int): Column =
     md5BandKeysFromDigests(shingleDigests(shingleArr), nBands, rowsPerBand)
 
-  /** The exact-verify payload: each shingle folded to its 60-bit md5
-    * prefix (`conv(substr(md5(s),1,15),16,10)` — DuckDB mirrors it as
-    * `CAST(('0x' || substr(md5(s),1,15)) AS UBIGINT)`). Jaccard over the
+  /** The exact-verify payload over a [[shingleDigests]] array of distinct
+    * shingles: each shingle folded to its 60-bit md5 prefix
+    * (`conv(substr(md5(s),1,15),16,10)`, read off its digest — DuckDB
+    * mirrors it as `CAST(('0x' || substr(md5(s),1,15)) AS UBIGINT)`). Jaccard over the
     * folded sets equals the raw shingle-set Jaccard unless two DISTINCT
     * shingles of the same PAIR collide at 60 bits — P ≈ m²/2^61 per pair
     * (m = shingles/doc), < 10⁻¹² even at m = 10³ — and both engines fold
@@ -205,9 +207,29 @@ object Dedup {
     * stage that hit the single-node disk-spill wall at the 64× probe
     * (130M candidate pairs × ~4 KB attached arrays per side). Sorted once
     * per document, so [[verifyJaccard]] scores a pair in one merge. */
-  private[graft] def foldedShingleSet(text: Column, shingleN: Int): Column =
-    sort_array(transform(array_distinct(Text.shingles(text, shingleN)),
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")))
+  private[graft] def foldedShingleSet(digests: Column): Column =
+    sort_array(transform(digests, d => conv(substring(d, 1, 15), 16, 10).cast("long")))
+
+  /** One signature per document for the md5 family, [[materialize]]d
+    * once (`graft:signatures`): `idCol`, the distinct-shingle count
+    * `__sz__`, the band keys `__keys__` ([[md5BandKeysFromDigests]]) and
+    * the folded verify set `__hs__` ([[foldedShingleSet]]), all from one
+    * [[shingleDigests]] pass over the distinct shingles. The band join
+    * and both verify sides of a batch generator read this one copy
+    * ([[signaturePairs]]). The lazy [[md5Bands]] and
+    * [[foldedSets]] compute the same values from the same digest step
+    * and explode the keys expression, not a `__keys__` column: exploding
+    * a column of an unmaterialized projection makes Catalyst infer
+    * `size(__keys__) > 0` and push it below the projection, which
+    * evaluates the whole signature twice. */
+  private[graft] def signatures(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
+    graft.plans.GraftExtensions.register(df.sparkSession)
+    val dg = shingleDigests(array_distinct(Text.shingles(col(textCol), shingleN)))
+    materialize(df.select(col(idCol), dg.as("__dg__")).select(col(idCol), size(col("__dg__")).as("__sz__"),
+      md5BandKeysFromDigests(col("__dg__"), bands, rowsPerBand(numHashes, bands)).as("__keys__"),
+      foldedShingleSet(col("__dg__")).as("__hs__")), "signatures")
+  }
 
   /** EXACT candidate prefilter from distinct-shingle counts alone:
     * J = |A∩B|/|A∪B| ≤ min(|A|,|B|)/max(|A|,|B|) (the intersection can't
@@ -238,7 +260,8 @@ object Dedup {
   // ---- The steps every pair generator is built from -------------------
   //
   // key:         [[keyRows]], one row per (doc, band) with its bucket key;
-  //              [[bandRows]] / [[md5Bands]] are its MinHash form
+  //              [[bandRows]] / [[md5Bands]] are its MinHash form, and
+  //              [[signaturePairs]] keys a [[signatures]] copy
   // candidates:  [[bucketPairs]] (two keyed sides), [[selfPairs]] (one
   //              table), [[indexCandidates]] (a persisted index)
   // verify:      [[verifyPairs]]; [[foldedSets]] + [[verifyJaccard]] for
@@ -259,17 +282,21 @@ object Dedup {
   // 2×bands× plus once per matched pair). The payloads re-attach by id
   // just before the exact verify, so each doc's payload crosses an
   // exchange at most twice regardless of band count or bucket skew.
-  // Payloads are recomputed on the re-attach branch (a codegen'd map over
-  // the scan) on purpose: CPU is cheap next to exchange bytes at corpus
-  // scale, and each pair is verified once, not once per band.
+  // The md5 batch generators compute keys and payload once per document
+  // into one [[signatures]] copy that both the band join and the verify
+  // read: shingling and the md5 `transform` are interpreted lambdas, not
+  // a codegen'd map, and recomputing them per branch cost more than the
+  // copy. The others recompute their cheaper payloads on the re-attach
+  // branch. The candidates are hash-repartitioned to the session's
+  // shuffle width before the `distinct`, which AQE leaves un-coalesced:
+  // the verify is CPU-bound per pair, so it runs on every core even when
+  // the (id, id) rows are few bytes.
 
   /** Key step: one row per (document, band) with the `keep` columns, the
     * band `__band__` and its bucket key `__key__`, from `keys`, an array
     * with one key per band. */
   private def keyRows(df: DataFrame, keys: Column, keep: Column*): DataFrame =
-    df.select(keep :+ posexplode(keys): _*)
-      .withColumnRenamed("pos", "__band__")
-      .withColumnRenamed("col", "__key__")
+    df.select(keep :+ posexplode(keys).as(Seq("__band__", "__key__")): _*)
 
   /** [[keyRows]] over a document's distinct shingles: the `keep` columns,
     * the distinct-shingle count `__sz__` (for [[sizeCull]]), `__band__`
@@ -284,8 +311,9 @@ object Dedup {
       keys(col("__dg__")), col("*"), size(col("__sh__")).as("__sz__"))
       .drop("__sh__", "__dg__")
 
-  /** [[bandRows]] under the engine-portable md5 band keys — the one band
-    * step of the batch pairs, the persisted index and the stream. The raw
+  /** [[bandRows]] under the engine-portable md5 band keys — the band step
+    * of the persisted index, the stream and edit distance; the batch
+    * Jaccard pairs band a [[signatures]] copy with the same keys. The raw
     * key is `rowsPerBand` md5 hex strings joined with '|' (up to 131
     * chars, shuffled twice in a band join); it is folded to 8 bytes
     * (unhex of the first 16 md5 hex chars — DuckDB reproduces the fold)
@@ -296,8 +324,7 @@ object Dedup {
   private[graft] def md5Bands(df: DataFrame, textCol: String, shingleN: Int,
       nBands: Int, rowsPerBand: Int, keep: Column*): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
-    bandRows(df, textCol, shingleN, keep: _*)(
-      shingleDigests, md5BandKeysFromDigests(_, nBands, rowsPerBand))
+    bandRows(df, textCol, shingleN, keep: _*)(shingleDigests, md5BandKeysFromDigests(_, nBands, rowsPerBand))
   }
 
   /** One side of a bucket join: keyed rows with `idCol` renamed to
@@ -312,9 +339,11 @@ object Dedup {
   /** Candidate step: the bucket equi-join of two [[side]]s on (band, key)
     * — hash-partitioned, so linear in bucket sizes — then the caller's
     * `keep` filter on the joined rows, before the distinct exchange, and
-    * one row per distinct `out`. */
+    * one row per distinct `out`. That exchange hashes the pair's two ids,
+    * the first two `out` columns, into the session's shuffle width. */
   private def bucketPairs(a: DataFrame, b: DataFrame)(keep: Column, out: Column*): DataFrame =
-    a.join(b, Seq("__band__", "__key__")).filter(keep).select(out: _*).distinct()
+    a.join(b, Seq("__band__", "__key__")).filter(keep).select(out: _*)
+      .repartition(shufflePartitions(a.sparkSession), out.take(2): _*).distinct()
 
   /** [[bucketPairs]] of one keyed table with itself: each unordered pair
     * once, as `id_a < id_b`. */
@@ -354,7 +383,8 @@ object Dedup {
     * [[foldedShingleSet]] of each document. */
   private[graft] def foldedSets(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, s: String): DataFrame =
-    df.select(col(idCol).as(s"id_$s"), foldedShingleSet(col(textCol), shingleN).as(s"hs_$s"))
+    df.select(col(idCol).as(s"id_$s"),
+      foldedShingleSet(shingleDigests(array_distinct(Text.shingles(col(textCol), shingleN)))).as(s"hs_$s"))
 
   /** [[verifyPairs]] under the exact Jaccard |A∩B| / |A∪B| of two
     * (id, ascending folded set) frames ([[foldedSets]]) and the `threshold`
@@ -368,13 +398,18 @@ object Dedup {
       col("jaccard") >= threshold)
   }
 
-  private def md5BandedPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, threshold: Double, nBands: Int, rowsPerBand: Int): DataFrame =
-    verifyJaccard(
-      selfPairs(md5Bands(df, textCol, shingleN, nBands, rowsPerBand, col(idCol)), idCol)(
-        sizeCull("a", "b", threshold), col("id_a"), col("id_b")),
-      foldedSets(df, idCol, textCol, shingleN, "a"),
-      foldedSets(df, idCol, textCol, shingleN, "b"), threshold)
+  /** The Jaccard pairs of two [[signatures]] copies, as (`id_<sl>`,
+    * `id_<sr>`, jaccard): the bucket join of their band keys with the
+    * caller's `keep` filter and the [[sizeCull]], then the verify of their
+    * folded sets. A self-join passes one copy twice. */
+  private def signaturePairs(l: DataFrame, r: DataFrame, sl: String, sr: String,
+      keep: Column, threshold: Double): DataFrame = {
+    def keyed(sig: DataFrame, s: String) = side(keyRows(sig, col("__keys__"),
+      col(sig.columns.head), col("__sz__")), sig.columns.head, s)
+    def sets(sig: DataFrame, s: String) = sig.select(col(sig.columns.head).as(s"id_$s"), col("__hs__").as(s"hs_$s"))
+    verifyJaccard(bucketPairs(keyed(l, sl), keyed(r, sr))(keep && sizeCull(sl, sr, threshold),
+      col(s"id_$sl"), col(s"id_$sr")), sets(l, sl), sets(r, sr), threshold)
+  }
 
   /**
    * Cross-corpus fuzzy join (record linkage / entity resolution): MinHash-
@@ -395,16 +430,9 @@ object Dedup {
       left: DataFrame, leftId: String, leftText: String,
       right: DataFrame, rightId: String, rightText: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    val r = rowsPerBand(numHashes, bands)
-    def banded(df: DataFrame, id: String, text: String, s: String) =
-      side(md5Bands(df, text, shingleN, bands, r, col(id)), id, s)
-    verifyJaccard(
-      bucketPairs(banded(left, leftId, leftText, "l"), banded(right, rightId, rightText, "r"))(
-        sizeCull("l", "r", threshold), col("id_l"), col("id_r")),
-      foldedSets(left, leftId, leftText, shingleN, "l"),
-      foldedSets(right, rightId, rightText, shingleN, "r"), threshold)
-  }
+      threshold: Double = 0.5): DataFrame =
+    signaturePairs(signatures(left, leftId, leftText, shingleN, numHashes, bands),
+      signatures(right, rightId, rightText, shingleN, numHashes, bands), "l", "r", lit(true), threshold)
 
   /**
    * Persisted LSH band index — the incremental-ingestion half of
@@ -484,11 +512,10 @@ object Dedup {
     require(maxDist >= 0, s"maxDist must be non-negative: $maxDist")
     val banded = md5Bands(df, textCol, shingleN, bands, rowsPerBand(numHashes, bands),
       col(idCol), length(col(textCol)).as("__len__"))
-    verifyPairs(
-      selfPairs(banded, idCol)(abs(col("len_a") - col("len_b")) <= maxDist, col("id_a"), col("id_b")),
-      df.select(col(idCol).as("id_a"), col(textCol).as("__ta__")),
-      df.select(col(idCol).as("id_b"), col(textCol).as("__tb__")))(
-      levenshtein(col("__ta__"), col("__tb__"), maxDist).cast("long").as("edit_dist"),
+    def text(s: String) = df.select(col(idCol).as(s"id_$s"), col(textCol).as(s"text_$s"))
+    verifyPairs(selfPairs(banded, idCol)(abs(col("len_a") - col("len_b")) <= maxDist, col("id_a"), col("id_b")),
+      text("a"), text("b"))(
+      levenshtein(col("text_a"), col("text_b"), maxDist).cast("long").as("edit_dist"),
       col("edit_dist") >= 0) // threshold variant returns -1 past maxDist
   }
 
@@ -667,11 +694,11 @@ object Dedup {
    * edge list from any generator above, drop every clustered document
    * except its cluster's minimum-id representative. Singletons (no pair)
    * pass through untouched. One left-anti join of the corpus against the
-   * non-representative id set. The labels are a checkpoint with no size
-   * estimate, so the join is planned as a sort-merge join and the whole
-   * corpus, every column, is hash-shuffled on the id; only then does AQE
-   * see the small loser set and turn the join into a broadcast over a
-   * local read of that shuffle.
+   * non-representative id set. The labels are CC's last checkpoint,
+   * which [[materialize]] measures: when they fit the session's
+   * broadcast threshold they carry a broadcast hint, the join is planned
+   * as a broadcast from the start and the corpus is read once, never
+   * shuffled. Larger label sets are joined by a sort-merge join.
    */
   def dropNearDuplicates(corpus: DataFrame, idCol: String,
       pairs: DataFrame, idACol: String, idBCol: String,

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 package object ops {
 
@@ -24,7 +27,16 @@ package object ops {
     *
     * An eager checkpoint's job runs under the description `graft:<op>`; the
     * caller's description is restored afterwards. The job group is never
-    * set: it is the caller's (benchmarks attribute jobs by group). */
+    * set: it is the caller's (benchmarks attribute jobs by group).
+    *
+    * A checkpoint has no usable size for the planner, so a join against
+    * it would shuffle both sides before AQE sees that one is small. An
+    * eager copy whose columns are all fixed-width is therefore measured:
+    * its rows are counted inside its own job, and a copy of at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes (rows × row width; -1
+    * disables this) is returned with a broadcast hint. The hint rides the
+    * returned frame into the caller's plan, through its filters,
+    * projections and aggregates, up to the first join that reads it. */
   private[graft] def materialize(df: DataFrame, op: String, eager: Boolean = true): DataFrame =
     described(df, s"graft:$op")(checkpoint(df, eager))
 
@@ -55,12 +67,25 @@ package object ops {
     * nothing will. A frame that is not a checkpoint is left alone. */
   private[graft] def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case ResolvedHint(r: LogicalRDD, _) => r.rdd.unpersist(blocking = false)
     case _ =>
   }
 
-  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
+  /** The checkpoint step [[materialize]] and [[iterate]] share, with the
+    * size step described at [[materialize]]. */
+  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+    def copy(d: DataFrame) =
+      if (d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint(eager)
+      else d.localCheckpoint(eager)
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (!eager || limit < 0 || !df.schema.forall(f => UnsafeRow.isFixedLength(f.dataType))) copy(df)
+    else {
+      val rows = Observation()
+      val out = copy(df.observe(rows, count(lit(1)).as("rows")))
+      val width = UnsafeRow.calculateBitSetWidthInBytes(df.schema.size) + 8L * df.schema.size
+      if (rows.get("rows").asInstanceOf[Long] * width <= limit) broadcast(out) else out
+    }
+  }
 
   /** Runs `body` under the job description `desc`, then restores the
     * caller's. */

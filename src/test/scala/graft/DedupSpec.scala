@@ -1,7 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.functions.Text
@@ -14,6 +14,11 @@ class DedupSpec extends SparkSuite {
     import spark.implicits._
     rows.toDF("id", "text")
   }
+
+  /** The sf0.01 documents fixture, beside the suite's own scale factor:
+    * 500 parquet rows (doc_id, text, ...). */
+  private def fixtureDocs =
+    spark.read.parquet(s"${new java.io.File(sfDir).getParent}/sf0.01/documents.parquet")
 
   test("exact dedup keeps the smallest id per fingerprint, formatting-insensitive") {
     val d = docs(
@@ -201,6 +206,10 @@ class DedupSpec extends SparkSuite {
       "quality" -> (Set("graft:quality") ++ (1 to 3).map(n => s"graft:quality:round $n")))
     for ((name, run) <- MaterializeSpec.iterativeOps(this) if name != "cc")
       assert(jobsOf(run())._2.map(_._2).toSet == named(name), name)
+    // the md5 pair generators' one signature copy
+    val d = fixtureDocs
+    val (_, sig) = jobsOf(Dedup.jaccardPairs(d, "doc_id", "text", shingleN = 2, threshold = 0.5))
+    assert(sig.map(_._2) == List("graft:signatures"), sig)
   }
 
   test("connectedComponents evaluates its edge input once") {
@@ -214,6 +223,80 @@ class DedupSpec extends SparkSuite {
     assert(labels.collect().forall(r => r.getLong(1) == r.getLong(0) - r.getLong(0) % 2))
     assert(reads.value == 50L, s"the edge plan ran ${reads.value / 50.0} times")
     assert(seen.map(_._2).toSet == Set("graft:cc:edges", "graft:cc:round 1"), seen)
+  }
+
+  test("the md5 pair generators evaluate each document once per call") {
+    // the counting identity of the edge case above, on the text: each
+    // evaluation of the caller's document plan adds one per document
+    val reads = spark.sparkContext.longAccumulator("document reads")
+    val tap = udf { (t: String) => reads.add(1); t }.asNondeterministic()
+    // tapped after the filter, so each side counts only its own rows
+    def tapped(keep: Column) = fixtureDocs.filter(keep).select(col("doc_id"), tap(col("text")).as("text"))
+    val n = fixtureDocs.count()
+    val even = col("doc_id") % 2 === 0
+    val calls = Seq[(String, () => DataFrame)](
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(tapped(lit(true)), "doc_id", "text", 2, 0.5)),
+      "minhashLshPairsMd5" -> (() => Dedup.minhashLshPairsMd5(tapped(lit(true)), "doc_id", "text",
+        shingleN = 2, numHashes = 8, bands = 4, threshold = 0.5)),
+      "crossCorpusPairsMd5" -> (() => Dedup.crossCorpusPairsMd5(tapped(even), "doc_id", "text",
+        tapped(!even), "doc_id", "text", shingleN = 2, numHashes = 4, bands = 4, threshold = 0.5)))
+    for ((name, call) <- calls) {
+      reads.reset()
+      val pairs = call().collect()
+      assert(pairs.nonEmpty, s"$name: a vacuous check")
+      assert(reads.value == n, s"$name evaluated each document ${reads.value.toDouble / n} times")
+    }
+  }
+
+  test("the signature's band keys and folded set are md5Bands' and the shingle-set fold, bit for bit") {
+    val d = fixtureDocs
+    for ((n, numHashes, bands) <- Seq((2, 4, 4), (3, 16, 4))) {
+      val sig = Dedup.signatures(d, "doc_id", "text", n, numHashes, bands)
+      // the per-shingle forms the signature replaced: band keys over the
+      // md5 of each distinct shingle, and the fold of a second md5 of it
+      val sh = array_distinct(Text.shingles(col("text"), n))
+      val ref = d.select(col("doc_id"), size(sh).as("sz"),
+        Dedup.md5BandKeysFromDigests(transform(sh, x => md5(x)), bands, numHashes / bands).as("keys"),
+        sort_array(transform(sh, s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("hs"))
+      val both = sig.join(ref, "doc_id")
+      assert(both.count() == d.count())
+      val same = col("__sz__") === col("sz") && col("__keys__") === col("keys") && col("__hs__") === col("hs")
+      assert(both.filter(!same).count() == 0L, s"n=$n")
+      // md5Bands' keyed rows are the signature's keys, exploded
+      val keyed = Dedup.md5Bands(d, "text", n, bands, numHashes / bands, col("doc_id"))
+      val exploded = sig.select(col("doc_id"), col("__sz__"), posexplode(col("__keys__")))
+      assert(keyed.count() == d.count() * bands)
+      assert(keyed.exceptAll(exploded).isEmpty && exploded.exceptAll(keyed).isEmpty, s"n=$n")
+    }
+  }
+
+  test("dropNearDuplicates joins a small loser set without shuffling the corpus") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val d = fixtureDocs
+    // the exchanges with the corpus scan below them, and CC's round-1 jobs
+    def run(): (Int, Int) = {
+      val pairs = Dedup.jaccardPairs(d, "doc_id", "text", shingleN = 2, threshold = 0.5)
+      val (out, seen) = jobsOf(Dedup.dropNearDuplicates(d, "doc_id", pairs, "id_a", "id_b"))
+      assert(out.count() < d.count())
+      val shuffles = helper.collect(out.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if helper.find(e.child)(_.isInstanceOf[FileSourceScanExec]).isDefined => e
+      }
+      (shuffles.size, seen.count(_._2 == "graft:cc:round 1"))
+    }
+    // the loser set and CC's edge copy fit the broadcast threshold: no
+    // shuffle of the corpus, and round 1 reads the edge copy through a
+    // broadcast instead of shuffling it first
+    assert(run() == ((0, 5)))
+    // the decision follows the session's threshold: disabled, the anti
+    // join stays a sort-merge join over a shuffled corpus
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try assert(run()._1 == 1)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("connectedComponents raises rather than return partial labels at the round cap") {

@@ -182,7 +182,7 @@ class PlanAuditSpec extends SparkSuite {
       "q50_window_cumsum" -> 2,      // group exchange reused by window + sort
       "q57_global_cumsum" -> 4,      // range-part + block prefix + sort
       "q106_jaccard_pairs" -> 2,     // band self-join + pair distinct (verify attaches ride AQE-broadcast)
-      "q168_neardup_dedup" -> 2,     // pairs + components/anti share partitioning
+      "q168_neardup_dedup" -> 1,     // output sort; the anti join broadcasts CC's measured labels
       "q175_range_join" -> 1,        // one bucket equi-join exchange, residual filter map-side
       "q206_matmul" -> 4,            // contraction exchange + (i,j) agg pair + sort
       "q248_embedding_covariance" -> 4, // d² partial/final moments + output sort
