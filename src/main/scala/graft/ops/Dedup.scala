@@ -167,6 +167,12 @@ object Dedup {
   def shingleDigests(shingleArr: Column): Column =
     transform(shingleArr, x => md5(x))
 
+  /** [[shingleDigests]] of a document's distinct `shingleN`-grams: the
+    * one per-document digest step of the md5 family, which its band keys,
+    * its verify fold and its distinct-shingle count all read. */
+  private[graft] def distinctDigests(text: Column, shingleN: Int): Column =
+    shingleDigests(array_distinct(Text.shingles(text, shingleN)))
+
   /** The engine-portable md5 LSH band keys as one expression: an array of
     * `nBands` 8-byte binary keys over a [[shingleDigests]] column. Hash
     * h's random order over shingles is LEXICOGRAPHIC ON THE LANE
@@ -194,11 +200,11 @@ object Dedup {
   def md5BandKeys(shingleArr: Column, nBands: Int, rowsPerBand: Int): Column =
     md5BandKeysFromDigests(shingleDigests(shingleArr), nBands, rowsPerBand)
 
-  /** The exact-verify payload over a [[shingleDigests]] array of distinct
-    * shingles: each shingle folded to its 60-bit md5 prefix
+  /** The exact-verify payload over a [[distinctDigests]] array: each
+    * shingle folded to its 60-bit md5 prefix
     * (`conv(substr(md5(s),1,15),16,10)`, read off its digest — DuckDB
-    * mirrors it as `CAST(('0x' || substr(md5(s),1,15)) AS UBIGINT)`). Jaccard over the
-    * folded sets equals the raw shingle-set Jaccard unless two DISTINCT
+    * mirrors it as `CAST(('0x' || substr(md5(s),1,15)) AS UBIGINT)`).
+    * Jaccard over the folded sets equals the raw shingle-set Jaccard unless two DISTINCT
     * shingles of the same PAIR collide at 60 bits — P ≈ m²/2^61 per pair
     * (m = shingles/doc), < 10⁻¹² even at m = 10³ — and both engines fold
     * identically, so the oracle gate is exact by construction. The point
@@ -214,7 +220,7 @@ object Dedup {
     * once (`graft:signatures`): `idCol`, the distinct-shingle count
     * `__sz__`, the band keys `__keys__` ([[md5BandKeysFromDigests]]) and
     * the folded verify set `__hs__` ([[foldedShingleSet]]), all from one
-    * [[shingleDigests]] pass over the distinct shingles. The band join
+    * [[distinctDigests]] pass. The band join
     * and both verify sides of a batch generator read this one copy
     * ([[signaturePairs]]). The lazy [[md5Bands]] and
     * [[foldedSets]] compute the same values from the same digest step
@@ -225,10 +231,11 @@ object Dedup {
   private[graft] def signatures(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
-    val dg = shingleDigests(array_distinct(Text.shingles(col(textCol), shingleN)))
-    materialize(df.select(col(idCol), dg.as("__dg__")).select(col(idCol), size(col("__dg__")).as("__sz__"),
-      md5BandKeysFromDigests(col("__dg__"), bands, rowsPerBand(numHashes, bands)).as("__keys__"),
-      foldedShingleSet(col("__dg__")).as("__hs__")), "signatures")
+    val dg = col("__dg__")
+    materialize(df.select(col(idCol), distinctDigests(col(textCol), shingleN).as("__dg__"))
+      .select(col(idCol), size(dg).as("__sz__"),
+        md5BandKeysFromDigests(dg, bands, rowsPerBand(numHashes, bands)).as("__keys__"),
+        foldedShingleSet(dg).as("__hs__")), "signatures")
   }
 
   /** EXACT candidate prefilter from distinct-shingle counts alone:
@@ -296,7 +303,9 @@ object Dedup {
     * band `__band__` and its bucket key `__key__`, from `keys`, an array
     * with one key per band. */
   private def keyRows(df: DataFrame, keys: Column, keep: Column*): DataFrame =
-    df.select(keep :+ posexplode(keys).as(Seq("__band__", "__key__")): _*)
+    df.select(keep :+ posexplode(keys): _*)
+      .withColumnRenamed("pos", "__band__")
+      .withColumnRenamed("col", "__key__")
 
   /** [[keyRows]] over a document's distinct shingles: the `keep` columns,
     * the distinct-shingle count `__sz__` (for [[sizeCull]]), `__band__`
@@ -324,7 +333,8 @@ object Dedup {
   private[graft] def md5Bands(df: DataFrame, textCol: String, shingleN: Int,
       nBands: Int, rowsPerBand: Int, keep: Column*): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
-    bandRows(df, textCol, shingleN, keep: _*)(shingleDigests, md5BandKeysFromDigests(_, nBands, rowsPerBand))
+    bandRows(df, textCol, shingleN, keep: _*)(
+      shingleDigests, md5BandKeysFromDigests(_, nBands, rowsPerBand))
   }
 
   /** One side of a bucket join: keyed rows with `idCol` renamed to
@@ -384,7 +394,7 @@ object Dedup {
   private[graft] def foldedSets(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, s: String): DataFrame =
     df.select(col(idCol).as(s"id_$s"),
-      foldedShingleSet(shingleDigests(array_distinct(Text.shingles(col(textCol), shingleN)))).as(s"hs_$s"))
+      foldedShingleSet(distinctDigests(col(textCol), shingleN)).as(s"hs_$s"))
 
   /** [[verifyPairs]] under the exact Jaccard |A∩B| / |A∪B| of two
     * (id, ascending folded set) frames ([[foldedSets]]) and the `threshold`
@@ -406,7 +416,8 @@ object Dedup {
       keep: Column, threshold: Double): DataFrame = {
     def keyed(sig: DataFrame, s: String) = side(keyRows(sig, col("__keys__"),
       col(sig.columns.head), col("__sz__")), sig.columns.head, s)
-    def sets(sig: DataFrame, s: String) = sig.select(col(sig.columns.head).as(s"id_$s"), col("__hs__").as(s"hs_$s"))
+    def sets(sig: DataFrame, s: String) =
+      sig.select(col(sig.columns.head).as(s"id_$s"), col("__hs__").as(s"hs_$s"))
     verifyJaccard(bucketPairs(keyed(l, sl), keyed(r, sr))(keep && sizeCull(sl, sr, threshold),
       col(s"id_$sl"), col(s"id_$sr")), sets(l, sl), sets(r, sr), threshold)
   }
@@ -432,7 +443,8 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5): DataFrame =
     signaturePairs(signatures(left, leftId, leftText, shingleN, numHashes, bands),
-      signatures(right, rightId, rightText, shingleN, numHashes, bands), "l", "r", lit(true), threshold)
+      signatures(right, rightId, rightText, shingleN, numHashes, bands),
+      "l", "r", lit(true), threshold)
 
   /**
    * Persisted LSH band index — the incremental-ingestion half of
@@ -512,10 +524,11 @@ object Dedup {
     require(maxDist >= 0, s"maxDist must be non-negative: $maxDist")
     val banded = md5Bands(df, textCol, shingleN, bands, rowsPerBand(numHashes, bands),
       col(idCol), length(col(textCol)).as("__len__"))
-    def text(s: String) = df.select(col(idCol).as(s"id_$s"), col(textCol).as(s"text_$s"))
-    verifyPairs(selfPairs(banded, idCol)(abs(col("len_a") - col("len_b")) <= maxDist, col("id_a"), col("id_b")),
-      text("a"), text("b"))(
-      levenshtein(col("text_a"), col("text_b"), maxDist).cast("long").as("edit_dist"),
+    verifyPairs(
+      selfPairs(banded, idCol)(abs(col("len_a") - col("len_b")) <= maxDist, col("id_a"), col("id_b")),
+      df.select(col(idCol).as("id_a"), col(textCol).as("__ta__")),
+      df.select(col(idCol).as("id_b"), col(textCol).as("__tb__")))(
+      levenshtein(col("__ta__"), col("__tb__"), maxDist).cast("long").as("edit_dist"),
       col("edit_dist") >= 0) // threshold variant returns -1 past maxDist
   }
 
@@ -695,10 +708,10 @@ object Dedup {
    * except its cluster's minimum-id representative. Singletons (no pair)
    * pass through untouched. One left-anti join of the corpus against the
    * non-representative id set. The labels are CC's last checkpoint,
-   * which [[materialize]] measures: when they fit the session's
-   * broadcast threshold they carry a broadcast hint, the join is planned
-   * as a broadcast from the start and the corpus is read once, never
-   * shuffled. Larger label sets are joined by a sort-merge join.
+   * whose size [[materialize]] measures: when the loser set fits the
+   * session's broadcast threshold, the planner broadcasts it from the
+   * start and the corpus is read once, never shuffled. Larger loser sets
+   * are joined by a sort-merge join.
    */
   def dropNearDuplicates(corpus: DataFrame, idCol: String,
       pairs: DataFrame, idACol: String, idBCol: String,

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{broadcast, count, lit}
+import org.apache.spark.sql.functions.{count, lit}
 
 package object ops {
 
@@ -32,11 +32,10 @@ package object ops {
     * A checkpoint has no usable size for the planner, so a join against
     * it would shuffle both sides before AQE sees that one is small. An
     * eager copy whose columns are all fixed-width is therefore measured:
-    * its rows are counted inside its own job, and a copy of at most
-    * `spark.sql.autoBroadcastJoinThreshold` bytes (rows × row width; -1
-    * disables this) is returned with a broadcast hint. The hint rides the
-    * returned frame into the caller's plan, through its filters,
-    * projections and aggregates, up to the first join that reads it. */
+    * its rows are counted inside its own job, and rows × row width is
+    * returned as the copy's planner statistics. Each join that reads the
+    * copy then makes the planner's own broadcast decision on that size,
+    * under the session's `spark.sql.autoBroadcastJoinThreshold`. */
   private[graft] def materialize(df: DataFrame, op: String, eager: Boolean = true): DataFrame =
     described(df, s"graft:$op")(checkpoint(df, eager))
 
@@ -67,7 +66,6 @@ package object ops {
     * nothing will. A frame that is not a checkpoint is left alone. */
   private[graft] def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case ResolvedHint(r: LogicalRDD, _) => r.rdd.unpersist(blocking = false)
     case _ =>
   }
 
@@ -77,13 +75,19 @@ package object ops {
     def copy(d: DataFrame) =
       if (d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint(eager)
       else d.localCheckpoint(eager)
-    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (!eager || limit < 0 || !df.schema.forall(f => UnsafeRow.isFixedLength(f.dataType))) copy(df)
+    if (!eager || !df.schema.forall(f => UnsafeRow.isFixedLength(f.dataType))) copy(df)
     else {
       val rows = Observation()
       val out = copy(df.observe(rows, count(lit(1)).as("rows")))
+      val n = BigInt(rows.get("rows").asInstanceOf[Long])
       val width = UnsafeRow.calculateBitSetWidthInBytes(df.schema.size) + 8L * df.schema.size
-      if (rows.get("rows").asInstanceOf[Long] * width <= limit) broadcast(out) else out
+      val session = out.sparkSession.asInstanceOf[classic.SparkSession]
+      out.queryExecution.analyzed match {
+        case r: LogicalRDD => new classic.Dataset[Row](session,
+          r.copy()(session, Some(Statistics(n * width, Some(n))), Some(r.constraints)),
+          Encoders.row(df.schema))
+        case _ => out
+      }
     }
   }
 

@@ -67,8 +67,7 @@ class JaccardSimSpec extends SparkSuite {
 
   test("kernel == size(array_intersect)/size(array_union) on every pair of the documents fixture") {
     val sets = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .select(col("doc_id"), Dedup.foldedShingleSet(
-        Dedup.shingleDigests(array_distinct(graft.functions.Text.shingles(col("text"), 3)))).as("hs"))
+      .select(col("doc_id"), Dedup.foldedShingleSet(Dedup.distinctDigests(col("text"), 3)).as("hs"))
     val a = sets.select(col("doc_id").as("ia"), col("hs").as("a"))
     val b = sets.select(col("doc_id").as("ib"), col("hs").as("b"))
     // two empty sets are the one pair the reference cannot score (0/0

@@ -79,8 +79,7 @@ class LambdaCaptureSpec extends SparkSuite {
       Array(2.0, 1.0), 1L)
     Map(
       "Pca.projectExpr" -> Pca.projectExpr(vec, model, whiten = true),
-      "Dedup.foldedShingleSet" -> Dedup.foldedShingleSet(
-        Dedup.shingleDigests(array_distinct(Text.shingles(text, 2)))))
+      "Dedup.foldedShingleSet" -> Dedup.foldedShingleSet(Dedup.distinctDigests(text, 2)))
   }
 
   private def isHeavy(e: Expression): Boolean = e match {

@@ -7,22 +7,23 @@
 # prints one JSON line per run tagged with the side.
 #
 # perfbench mode: two graft checkouts (A = parent, B = change)
-#   tools/ab_bench.sh perfbench <dirA> <dirB> <workload> <pairs> [first_seed] [seconds] [metric]
-# runs `python3 perfbench/run.py --workload W --seed S --seconds T` in each
-# checkout for pairs i = 0..pairs-1 with seed first_seed+i (default 1),
-# T default 12; even pairs run A first, odd pairs B first. Prints one JSON
-# line per run, then per end-to-end metric each side's median and
-# quartiles, the pairs B won (ties count for neither), and for `metric`
-# (default pass_s) whether the median gap exceeds A's quartile spread.
+#   tools/ab_bench.sh perfbench <dirA> <dirB> <workload> <pairs> [first_seed]
+# runs `python3 perfbench/run.py --workload W --seed S --seconds 12` (the
+# benchmark's fixed run length) in each checkout for pairs i = 0..pairs-1
+# with seed first_seed+i (default 1); even pairs run A first, odd pairs B
+# first. Prints one JSON line per run, then per
+# end-to-end metric each side's median and quartiles, the pairs B won
+# (ties count for neither), and whether the median gap exceeds A's
+# quartile spread.
 set -euo pipefail
 
 if [ "${1:-}" = "perfbench" ]; then
-  A="$2"; B="$3"; W="$4"; N="$5"; SEED0="${6:-1}"; SECS="${7:-12}"; METRIC="${8:-pass_s}"
+  A="$2"; B="$3"; W="$4"; N="$5"; SEED0="${6:-1}"
   LOG=$(mktemp)
   run() {
     local side="$1" dir="$2" seed="$3" line
     line=$(cd "$dir" && python3 perfbench/run.py --workload "$W" --seed "$seed" \
-      --seconds "$SECS" --trace 0 2>/dev/null | tail -n 1)
+      --seconds 12 --trace 0 2>/dev/null | tail -n 1)
     echo "{\"side\":\"$side\",\"seed\":$seed,$(echo "$line" | cut -c2-)" | tee -a "$LOG"
   }
   for i in $(seq 0 $((N - 1))); do
@@ -30,10 +31,9 @@ if [ "${1:-}" = "perfbench" ]; then
     if [ $((i % 2)) -eq 0 ]; then run A "$A" "$s"; run B "$B" "$s"
     else run B "$B" "$s"; run A "$A" "$s"; fi
   done
-  python3 - "$LOG" "$METRIC" <<'EOF'
+  python3 - "$LOG" <<'EOF'
 import json, statistics, sys
 rows = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
-claim = sys.argv[2]
 higher = {"ok_frac", "answer_recall"}
 def q(xs):
     a, m, b = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else (xs[0],) * 3
@@ -50,10 +50,8 @@ for name in rows[0]["metrics"]:
     (a1, am, a3), (b1, bm, b3) = q(a), q(b)
     delta = (bm - am) / am * 100 if am else float("nan")
     line = (f"{name:14s} A {am:.4g} [{a1:.4g}-{a3:.4g}]  B {bm:.4g} [{b1:.4g}-{b3:.4g}]  "
-            f"B better {wins}/{len(seeds)}  delta {delta:+.1f}%")
-    if name == claim:
-        line += (f"  |gap| {abs(bm - am):.4g} {'>' if abs(bm - am) > a3 - a1 else '<='} "
-                 f"A's quartile spread {a3 - a1:.4g}")
+            f"B better {wins}/{len(seeds)}  delta {delta:+.1f}%  |gap| {abs(bm - am):.4g} "
+            f"{'>' if abs(bm - am) > a3 - a1 else '<='} A's quartile spread {a3 - a1:.4g}")
     print(line)
 EOF
   rm -f "$LOG"
